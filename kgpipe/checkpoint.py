@@ -201,8 +201,9 @@ def run_incremental(
         rows_in = c_slice.count()
         nodes_n = g.nodes.count()
         edges_n = g.edges.count()
-        processed = g.family_counts["idiom_seeds"] + g.family_counts["word_seeds"]
-        missing = g.family_counts["idiom_missing"] + g.family_counts["word_missing"]
+        counts = g.family_counts
+        processed = counts["idiom_seeds"]() + counts["word_seeds"]()
+        missing = counts["idiom_missing"]() + counts["word_missing"]()
         fail = g.errors.count()
         success = processed - missing
 

@@ -4,7 +4,7 @@ whole-stage-codegen'd) except TWO deliberate Arrow-vectorized passes
 (guide §4.2): the MinHash signature computation and the content
 fingerprint both run in ``mapInArrow`` handing whole batches to
 hashlib/numpy/re — each measured ≥2x the JVM formulation it replaced,
-and each keeps that expression form in-repo as its equality oracle.
+which tests/test_ops.py keeps as its equality oracle.
 No row-at-a-time Python anywhere (plan-asserted).
 
 Determinism: every operator is a pure function of its input — hashes are
@@ -146,25 +146,13 @@ MINHASH_B = (
     84_029_117,
 )
 
-#: SQL for base(s) over a shingle expression — Spark dialect
+#: SQL for base(s) over a shingle expression — Spark dialect (with
+#: ``_minhash_mix``, the SQL form of the family the test oracle builds on)
 _MINHASH_BASE = "CAST(conv(substring(md5({s}), 1, 8), 16, 10) AS BIGINT) % {p}"
 
 
 def _minhash_mix(j: int, base_sql: str) -> str:
     return f"(({base_sql}) * {MINHASH_A[j]}L + {MINHASH_B[j]}L) % {MINHASH_P}L"
-
-
-def minhash_signatures(sh: DataFrame, num_hashes: int = 8) -> DataFrame:
-    """MinHash signatures from an exploded (doc_id, shingle) table:
-    signature_j = min over shingles of h_j(shingle) (bigint family
-    above). One aggregation, num_hashes columns; codegen's common-
-    subexpression elimination computes the md5 base once per row."""
-    base = _MINHASH_BASE.format(s="shingle", p=MINHASH_P)
-    aggs = [
-        F.min(F.expr(_minhash_mix(j, base))).alias(f"mh{j}")
-        for j in range(num_hashes)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
 
 
 def _banded_wide(
@@ -181,12 +169,12 @@ def _banded_wide(
     batches to native code): md5 via hashlib (C), the per-seed
     multiply-add-mod mixing and the running minima via one numpy
     broadcast per document. The JVM expression formulation
-    (``_banded_wide_expr``) computes the identical family but pays
-    interpreted higher-order-lambda evaluation with boxed arithmetic per
-    shingle — A/B at sf1.0 (50k docs, ~15M shingles, local[32]): 3.4s
-    expr vs 1.7s arrow under load, 1.9s vs ~1.0s quiet. The expr path is
-    kept as the in-repo equality oracle (pytest asserts byte-identical
-    output) and documents the hash family in SQL form.
+    (``_banded_wide_expr`` in tests/test_ops.py) computes the identical
+    family but pays interpreted higher-order-lambda evaluation with boxed
+    arithmetic per shingle — A/B at sf1.0 (50k docs, ~15M shingles,
+    local[32]): 3.4s expr vs 1.7s arrow under load, 1.9s vs ~1.0s quiet.
+    The test keeps it as the equality oracle (byte-identical output) and
+    it documents the hash family in SQL form.
 
     Hash identity (both paths, mirrored by the DuckDB oracle):
     base(s) = int64 of the first 4 md5 bytes of the UTF-8 shingle
@@ -250,69 +238,6 @@ def _banded_wide(
     return docs.select("doc_id", text_col).mapInArrow(compute, schema)
 
 
-def _banded_wide_expr(
-    docs: DataFrame,
-    k: int = 5,
-    num_hashes: int = 8,
-    bands: int = 4,
-    text_col: str = "text",
-) -> DataFrame:
-    """JVM-expression formulation of ``_banded_wide`` — same family,
-    same output, kept as the in-repo equality oracle for the arrow path.
-
-    The signature is a pure per-row function, so it is computed in a
-    single ``aggregate`` expression — one pass over the document's
-    shingles maintaining the running per-seed minimum, with the banding
-    done in the ``finish`` lambda of the same expression (nothing is
-    evaluated twice, nothing leaves the row).
-
-    Hash identity with the aggregation path: the bigint family above
-    (one md5 base per shingle, arithmetic per seed), band hash =
-    md5(concat_ws('|', decimal renderings of the band's signature
-    members)) — candidate output is byte-identical to
-    minhash_signatures → lsh_candidate_pairs and the DuckDB oracle
-    computes the same family with its own hex-literal cast.
-
-    The wide layout (all band hashes on one row) is what lets the pair
-    stage emit each candidate pair exactly once (see
-    ``band_pairs_exactly_once``): a pair's membership in EVERY band is
-    decidable from the two joined rows alone.
-    """
-    docs = ensure_parallelism(docs)
-    rows_per_band = num_hashes // bands
-    shingle_expr = (
-        f"transform(sequence(1, greatest(char_length({text_col}) - {k - 1}, 1)),"
-        f" i -> substring({text_col}, i, {k}))"
-    )
-    # one md5 base per shingle, computed BEFORE the aggregate so the
-    # merge lambda is pure 64-bit multiply-add-mod (unrolled per seed:
-    # no sequence/element_at churn); least() skips NULLs, so the
-    # NULL-seeded accumulator adopts the first hash and min() thereafter
-    base_expr = (
-        f"transform({shingle_expr}, "
-        f"s -> {_MINHASH_BASE.format(s='s', p=MINHASH_P)})"
-    )
-    mixes = ", ".join(_minhash_mix(j, "h") for j in range(num_hashes))
-    merge = f"(acc, h) -> zip_with(acc, array({mixes}), (a, x) -> least(a, x))"
-    band_fields = ", ".join(
-        "'bh{b}', md5(concat_ws('|', {members}))".format(
-            b=b,
-            members=", ".join(
-                f"CAST(sig[{b * rows_per_band + r}] AS STRING)"
-                for r in range(rows_per_band)
-            ),
-        )
-        for b in range(bands)
-    )
-    wide = F.expr(
-        f"aggregate({base_expr}, "
-        f"array_repeat(CAST(NULL AS BIGINT), {num_hashes}), "
-        f"{merge}, "
-        f"sig -> named_struct({band_fields}))"
-    )
-    return docs.select("doc_id", wide.alias("_w")).select("doc_id", "_w.*")
-
-
 def minhash_banded(
     docs: DataFrame,
     k: int = 5,
@@ -324,13 +249,19 @@ def minhash_banded(
     the long-layout view of ``_banded_wide`` (one explode, still
     row-local)."""
     wide = _banded_wide(docs, k=k, num_hashes=num_hashes, bands=bands, text_col=text_col)
+    return _band_rows(wide, bands).select("doc_id", "band", "bh")
+
+
+def _band_rows(wide: DataFrame, bands: int) -> DataFrame:
+    """One row per (document, band) of a wide banded table: its columns
+    plus (band, bh) — one explode, still row-local."""
     bb = F.explode(
         F.array(*[
             F.struct(F.lit(b).alias("band"), F.col(f"bh{b}").alias("bh"))
             for b in range(bands)
         ])
     ).alias("bb")
-    return wide.select("doc_id", bb).select("doc_id", "bb.band", "bb.bh")
+    return wide.select(*wide.columns, bb).select(*wide.columns, "bb.band", "bb.bh")
 
 
 def band_pairs_exactly_once(wide: DataFrame, bands: int = 4) -> DataFrame:
@@ -354,15 +285,7 @@ def band_pairs_exactly_once(wide: DataFrame, bands: int = 4) -> DataFrame:
     masked duplicate doc_id input rows; this path, like the oracle,
     treats duplicate ids as distinct documents that happen to collide.
     """
-    bb = F.explode(
-        F.array(*[
-            F.struct(F.lit(b).alias("band"), F.col(f"bh{b}").alias("bh"))
-            for b in range(bands)
-        ])
-    ).alias("bb")
-    banded = wide.select(
-        "doc_id", *[f"bh{b}" for b in range(bands)], bb
-    ).select("doc_id", *[f"bh{b}" for b in range(bands)], "bb.band", "bb.bh")
+    banded = _band_rows(wide, bands)
     a, b = banded.alias("a"), banded.alias("b")
     cond = (
         (F.col("a.band") == F.col("b.band"))
@@ -378,45 +301,6 @@ def band_pairs_exactly_once(wide: DataFrame, bands: int = 4) -> DataFrame:
         minband = c if minband is None else (minband | c)
     return a.join(b, cond & minband).select(
         F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-    )
-
-
-def lsh_candidate_pairs(signatures: DataFrame, bands: int = 4, rows_per_band: int = 2) -> DataFrame:
-    """Band the signature (bands × rows_per_band = num_hashes), bucket-join
-    within bands: candidate pairs share ≥1 full band.
-
-    The self-join is per (band, band_hash) bucket — tiny groups, so the
-    quadratic blowup is bounded; the shuffle key (band_hash) is uniform.
-    Returns distinct (doc_a, doc_b) with doc_a < doc_b.
-    """
-    band_cols = []
-    for b in range(bands):
-        members = [
-            F.col(f"mh{b * rows_per_band + r}").cast("string")
-            for r in range(rows_per_band)
-        ]
-        band_cols.append(
-            F.struct(F.lit(b).alias("band"), F.md5(F.concat_ws("|", *members)).alias("bh"))
-        )
-    banded = signatures.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("bb")
-    ).select("doc_id", "bb.band", "bb.bh")
-    return band_bucket_pairs(banded)
-
-
-def band_bucket_pairs(banded: DataFrame) -> DataFrame:
-    """(doc_id, band, bh) → distinct candidate pairs sharing ≥1 full band.
-
-    The self-join is per (band, band_hash) bucket — tiny groups, so the
-    quadratic blowup is bounded; the shuffle key (band_hash) is uniform.
-    """
-    left = banded.select(F.col("band"), F.col("bh"), F.col("doc_id").alias("doc_a"))
-    right = banded.select(F.col("band"), F.col("bh"), F.col("doc_id").alias("doc_b"))
-    return (
-        left.join(right, ["band", "bh"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
     )
 
 
@@ -1355,11 +1239,12 @@ def fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
     Arrow-vectorized (guide §4.2): Python ``str.lower`` + a compiled
     ``re`` strip + hashlib md5 per batch. The JVM expression
-    (``_fingerprint_expr``) ANTI-SCALES with task parallelism on this
-    workload — measured at 500k docs, local[32]: 15.0s single-task,
-    23.8s across 32 tasks, 1.6s via this path — and it serializes on a
-    single task for single-row-group inputs. Equivalence is pinned by
-    ``test_fingerprint_arrow_equals_expr``: Python lower/re agree with
+    (``_fingerprint_expr`` in tests/test_ops.py) ANTI-SCALES with task
+    parallelism on this workload — measured at 500k docs, local[32]:
+    15.0s single-task, 23.8s across 32 tasks, 1.6s via this path — and
+    it serializes on a single task for single-row-group inputs.
+    Equivalence is pinned by ``test_fingerprint_arrow_equals_expr``:
+    Python lower/re agree with
     JVM lower/Java-regex on the explicit `[^a-z0-9\\u4e00-\\u9fff]`
     class (verified over a 65k-code-point sweep including İ/ı/K/ß and
     supplementary-plane chars; both engines apply full Unicode case
@@ -1392,10 +1277,3 @@ def fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return docs.select("doc_id", text_col).mapInArrow(
         compute, f"doc_id {id_type}, fingerprint string"
     )
-
-
-def _fingerprint_expr(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """JVM expression formulation of ``fingerprint`` — kept as the
-    in-repo equality oracle for the arrow path (see test)."""
-    norm = F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9\\u4e00-\\u9fff]", "")
-    return docs.select("doc_id", F.md5(norm).alias("fingerprint"))

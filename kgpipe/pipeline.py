@@ -25,6 +25,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import threading
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -69,24 +70,39 @@ parse_hanzi_full_udf = make_parse_hanzi_udf(ALL_HANZI_SECTIONS)
 UNDIRECTED = ("synonym", "antonym", "variant-of")
 
 
-class GraphResult:
-    """Graph-construction result. Members other than ``triples`` may be
-    passed as zero-arg thunks and are then constructed LAZILY on first
-    attribute access (round 8, guide §1.2 "don't compute things you
-    throw away" applied to the DRIVER: plan construction is serial py4j
-    round-trips — ~2.5k per build_graph, ~1.7s measured — and the
-    flagship triples path never reads nodes/edges/edges_canonical/
-    missing/errors, so their plans are now never built there). Attribute
-    writes (e.g. re-pointing ``nodes`` at a checkpointed frame) behave
-    like the old dataclass."""
+class _Memo:
+    """Zero-argument callable that runs ``fn`` at most once successfully.
 
-    _LAZY_FIELDS = ("nodes", "edges", "edges_canonical", "missing", "errors")
+    Concurrent first calls serialize on the lock and all get the one
+    result. A raising ``fn`` caches nothing, so the next call retries it
+    (a transient Spark error must not poison the member for good)."""
+
+    def __init__(self, fn):
+        self._fn = fn
+        self._lock = threading.Lock()
+
+    def __call__(self):
+        with self._lock:
+            if self._fn is not None:
+                self._value = self._fn()
+                self._fn = None
+        return self._value
+
+
+class GraphResult:
+    """Graph-construction result. ``triples`` is a frame and
+    ``family_counts`` maps each name to a count memo; the other members
+    are memos built on first read (round 8: plan construction is serial
+    py4j driver work — ~2.5k round-trips per build_graph, ~1.7s measured
+    — and the flagship triples path never reads nodes/edges/
+    edges_canonical/missing/errors). Assigning a member (e.g. re-pointing
+    ``nodes`` at a checkpointed frame) replaces its memo."""
 
     def __init__(self, *, nodes, edges, edges_canonical, triples, missing,
                  errors, family_counts):
         self.triples = triples
         self.family_counts = family_counts
-        self._thunks = {
+        self._members = {
             "nodes": nodes,
             "edges": edges,
             "edges_canonical": edges_canonical,
@@ -95,48 +111,33 @@ class GraphResult:
         }
 
     def __getattr__(self, name):
-        thunks = self.__dict__.get("_thunks") or {}
-        if name in thunks:
-            val = thunks[name]
-            if callable(val):
-                # invoke BEFORE removing the thunk: a failing build (e.g.
-                # a transient Spark error) stays retryable instead of
-                # turning every later access into a bare AttributeError
-                val = val()
-            del thunks[name]
-            setattr(self, name, val)
-            return val
-        raise AttributeError(name)
-
-
-def _rewrite_canonical(edges: DataFrame, nodes: DataFrame = None) -> DataFrame | None:
-    """Endpoint rewrite through the alias mapping (CC over variant-of
-    edges) WITHOUT the re-dedup pass — may carry duplicate (src, dst,
-    rel_type) rows where aliases collapsed. None when no alias graph
-    exists (canonicalization is the identity).
-
-    ``nodes`` is the optional (node_id, name) lookup for winner election
-    — None (the flagship path) derives it from the variant edges
-    themselves: computing the node table (endpoint-stub distinct +
-    upsert window over every edge mention) just to name ~|alias graph|
-    members would put the whole node pipeline on the triples path. The
-    runner passes its already-materialized warehouse nodes instead."""
-    mapping = canonical_mapping(edges.where(F.col("rel_type") == "variant-of"), nodes)
-    if mapping is None:
-        return None
-    return apply_canonicalization(edges, mapping)
+        # reached only for names the instance does not hold itself
+        member = self.__dict__.get("_members", {}).get(name)
+        if member is None:
+            raise AttributeError(name)
+        return member()
 
 
 def canonicalize_edges(edges: DataFrame, nodes: DataFrame = None) -> DataFrame:
     """Global alias canonicalization: CC over variant-of edges, endpoint
     rewrite, re-dedup. Must run over the *complete* edge set (variant
     clusters can span work-unit boundaries), which is why the runner
-    calls this after all buckets merge, not per bucket."""
-    rewritten = _rewrite_canonical(edges, nodes)
-    if rewritten is None:  # no alias graph
+    calls this after all buckets merge, not per bucket.
+
+    ``nodes`` is the optional (node_id, name) lookup for the winner
+    election; None derives it from the variant edges themselves. The
+    runner passes its already-materialized warehouse nodes."""
+    mapping = canonical_mapping(edges.where(F.col("rel_type") == "variant-of"), nodes)
+    if mapping is None:  # no alias graph
         return edges
+    return _rewrite_dedup(edges, mapping)
+
+
+def _rewrite_dedup(edges: DataFrame, mapping: DataFrame) -> DataFrame:
+    """Endpoint rewrite through the alias mapping, then the re-dedup of
+    the (src, dst, rel_type) rows that aliases collapsed."""
     return T.dedup_edges(
-        rewritten.withColumn("lineage", F.col("src_name"))
+        apply_canonicalization(edges, mapping).withColumn("lineage", F.col("src_name"))
     ).drop("lineage")
 
 
@@ -153,25 +154,6 @@ def triples_view(edges_canonical: DataFrame) -> DataFrame:
         .otherwise(F.col("dst_name"))
         .alias("obj"),
     ).distinct()
-
-
-def _variant_edges_of(hz_valid: DataFrame) -> DataFrame:
-    """Variant-of alias edges from a (checkpointed) hz_valid frame — the
-    only input the canonicalization mapping needs. Factored out so the
-    mapping job can launch CONCURRENTLY with the terms parse barrier
-    (both derive from independent checkpoints; the mapping's collect is
-    a small job that hides entirely under the terms barrier's wall)."""
-    variants = hz_valid.select(
-        F.col("basic_info.data.character").alias("src_name"),
-        F.explode(F.col("basic_info.data.variant_characters")).alias("v"),
-        F.col("path").alias("lineage"),
-    ).select(
-        "src_name",
-        F.col("v.character").alias("mention"),
-        F.lit("variant-of").alias("rel_type"),
-        "lineage",
-    )
-    return T.undirected_by_name(variants, "Hanzi")
 
 
 def _family(corpus: DataFrame, prefix: str) -> DataFrame:
@@ -296,17 +278,6 @@ def build_graph(
         # in full-fidelity mode, basic+fanyi on the hot path)
         "path", "unicode_decimal", *hanzi_sections
     )
-    _barrier_pool = None  # list of daemon threads; results in _barrier_results
-
-    def _barrier_join(name):
-        for t in _barrier_pool:
-            if t.name == f"kg-barrier-{name}":
-                t.join()
-        status, value = _barrier_results[name]
-        if status == "err":
-            raise value
-        return value
-
     if cache:
         # localCheckpoint barriers: seven edge families fan out from
         # `terms` and `hz_valid`; a cold cache would let concurrent
@@ -315,44 +286,186 @@ def build_graph(
         # downstream plan compilation pay the full analysis cost on the
         # driver. The checkpoint call itself truncates the plan to a
         # LogicalRDD immediately (eager=False defers only the DATA
-        # materialization), so — round 8 — the barriers materialize in
-        # background threads while the MAIN thread constructs every
-        # downstream plan (mentions, 7 edge families, rewrite, triples:
-        # ~0.7s of serial py4j round-trips that previously ran after the
-        # barrier wall). Concurrent jobs over a not-yet-materialized
-        # localCheckpoint RDD are safe: block-level locks make one task
-        # compute a partition and the others wait. The mapping job
-        # (collect + driver election) launches alongside; it reads the
-        # same checkpointed hz_valid the sequential order would, so the
-        # mapping is identical by construction (its derivation equality
-        # is pinned by test_mapping_from_variant_family_equals_from_dedup
-        # and the golden gate). Daemon threads + an explicit result
-        # holder instead of a ThreadPoolExecutor: if plan construction
-        # below raises, nothing blocks interpreter shutdown and no pool
-        # is leaked — the stray count jobs just finish (or fail) in the
-        # background.
-        import threading
-
+        # materialization, which the barrier jobs below perform).
         terms = terms.localCheckpoint(eager=False)
         hz_valid = hz_valid.localCheckpoint(eager=False)
-        _barrier_results: dict = {}
 
-        def _spawn(name, fn):
-            def _go():
-                try:
-                    _barrier_results[name] = ("ok", fn())
-                except BaseException as exc:  # re-raised at the join point
-                    _barrier_results[name] = ("err", exc)
+    # variant-of alias edges: one definition feeds the edge family, the
+    # Hanzi stubs of its endpoints and the canonicalization mapping
+    variants = hz_valid.select(
+        F.col("basic_info.data.character").alias("src_name"),
+        F.explode(F.col("basic_info.data.variant_characters")).alias("v"),
+        F.col("path").alias("lineage"),
+    ).select(
+        "src_name", F.col("v.character").alias("mention"), F.lit("variant-of").alias("rel_type"), "lineage"
+    )
+    variant_edges = T.undirected_by_name(variants, "Hanzi")
 
-            t = threading.Thread(target=_go, name=f"kg-barrier-{name}", daemon=True)
-            t.start()
-            return t
+    # ---- canonicalization (variant-of alias graph → CC) --------------------
+    # The mapping derives from the VARIANT FAMILY alone, before the union
+    # and the id-level dedup: union-find is duplicate-insensitive (A~B
+    # twice is still one merge) and the election's name lookup distincts,
+    # so the result is identical to mapping over the deduped edge table
+    # (asserted by test_mapping_from_variant_family_equals_from_dedup) —
+    # but the collect job runs only the tiny variants lineage off the
+    # hz_valid barrier, never the 7-family union. nodes NOT passed: the
+    # election's name lookup derives from the variant edges themselves,
+    # keeping the node pipeline off the flagship path.
+    mapping = _Memo(lambda: canonical_mapping(variant_edges))
+    hz_count = _Memo(hz_valid.count)
 
-        _barrier_pool = [
-            _spawn("terms", terms.count),
-            _spawn("hz", hz_valid.count),
-            _spawn("mapping", lambda: canonical_mapping(_variant_edges_of(hz_valid))),
-        ]
+    # Round 8: with caching on, both barriers and the mapping job run on
+    # background threads while this thread constructs every downstream
+    # plan (mentions, 7 edge families, rewrite, triples: ~0.7s of serial
+    # py4j round-trips that previously ran after the barrier wall).
+    # Concurrent jobs over a not-yet-materialized localCheckpoint RDD are
+    # safe: block-level locks make one task compute a partition and the
+    # others wait. The mapping job depends only on the hz checkpoint and
+    # hides under the terms barrier. Each join point is a plain memo
+    # call; if plan construction raises, the threads are still joined
+    # before the error leaves, so no barrier job outlives build_graph.
+    barriers = [_Memo(terms.count), hz_count, mapping] if cache else []
+    threads = [threading.Thread(target=m, name="kg-barrier", daemon=True) for m in barriers]
+    for t in threads:
+        t.start()
+
+    try:
+        mentions = L.extract_mentions(
+            terms, "name", "synonyms", "antonyms", carry_cols=("entity_type",)
+        )
+
+        # ---- edges -----------------------------------------------------------
+        # single narrow pass per family — entity_type rides as a column, so no
+        # filter-per-type double evaluation and no join-back (SURVEY.md §4)
+        syn_ant = T.undirected_by_name(mentions, F.col("entity_type"))
+
+        if hanzi_dim is None:
+            hanzi_dim = hz_valid.select(F.col("basic_info.data.character").alias("name"))
+        composed = T.composed_of(terms, hanzi_dim, mode=composed_mode)
+
+        radicals = hz_valid.select(
+            F.regexp_replace(F.col("basic_info.data.bushou_detail.text"), "部$", "").alias(
+                "radical"
+            ),
+            F.col("basic_info.data.character").alias("hanzi"),
+            F.col("path").alias("lineage"),
+        ).where(F.col("radical").isNotNull() & (F.length("radical") > 0))
+        radical_edges = T.directed(radicals, "Radical", "radical", "Hanzi", "hanzi", "radical-of")
+
+        hz_pinyin = hz_valid.select(
+            F.col("basic_info.data.character").alias("src_name"),
+            F.explode(F.col("basic_info.data.pinyin_info")).alias("p"),
+            F.col("path").alias("lineage"),
+        ).select("src_name", F.col("p.pinyin").alias("py"), "lineage").where(
+            F.length("py") > 0
+        )
+        if full_hanzi_properties:
+            # the unpruned sections carry per-reading pinyin (reference
+            # extract_guoyu.py:25-220, extract_yisi.py, extract_liangan.py) —
+            # SURVEY §2.11 maps them to has-pinyin evidence, so full-fidelity
+            # mode widens the evidence base to every section reading; readings
+            # already covered by basic_info dedup away in dedup_edges
+            empty = F.array().cast("array<string>")
+            yisi_py = F.coalesce(
+                F.flatten(
+                    F.transform(
+                        F.col("yisi_info.data.explanations"),
+                        lambda e: F.coalesce(
+                            F.transform(e["pinyin_info"], lambda p: p["pinyin"]), empty
+                        ),
+                    )
+                ),
+                empty,
+            )
+            guoyu_py = F.coalesce(
+                F.transform(
+                    F.col("guoyu_info.data.main_content"),
+                    lambda c: c["pinyin_info"]["pinyin"],
+                ),
+                empty,
+            )
+            liangan_py = F.coalesce(
+                F.transform(
+                    F.col("liangan_info.data.main_content"),
+                    lambda c: c["pinyin_info"]["pinyin"],
+                ),
+                empty,
+            )
+            section_pinyin = hz_valid.select(
+                F.col("basic_info.data.character").alias("src_name"),
+                F.explode(F.concat(yisi_py, guoyu_py, liangan_py)).alias("py"),
+                F.col("path").alias("lineage"),
+            ).where(F.col("py").isNotNull() & (F.length("py") > 0))
+            hz_pinyin = hz_pinyin.unionByName(section_pinyin)
+        hz_pinyin_edges = T.directed(hz_pinyin, "Hanzi", "src_name", "Pinyin", "py", "has-pinyin")
+        term_pinyin = terms.select(
+            "entity_type", F.col("name").alias("src_name"), F.col("pinyin").alias("py"),
+            F.col("path").alias("lineage"),
+        ).where(F.col("py").isNotNull() & (F.length("py") > 0))
+        term_pinyin_edges = T.directed(
+            term_pinyin, F.col("entity_type"), "src_name", "Pinyin", "py", "has-pinyin"
+        )
+
+        hz_trans = hz_valid.select(
+            F.col("basic_info.data.character").alias("src_name"),
+            F.explode(F.col("fanyi_info.data.translations")).alias("t"),
+            F.col("path").alias("lineage"),
+        ).select(
+            "src_name",
+            F.concat_ws(": ", F.col("t.language"), F.col("t.translation")).alias("trans"),
+            "lineage",
+        )
+        # idiom translation string is "lang: text; lang: text" (extract_chengyu.py:168)
+        idiom_trans = terms.where(
+            (F.col("entity_type") == "Idiom") & F.col("translation").isNotNull()
+        ).select(
+            F.col("name").alias("src_name"),
+            F.explode(F.split(F.col("translation"), "; ")).alias("trans"),
+            F.col("path").alias("lineage"),
+        ).where(F.length("trans") > 0)
+        trans_edges = T.directed(
+            hz_trans, "Hanzi", "src_name", "Translation", "trans", "translation-of"
+        ).unionByName(
+            T.directed(idiom_trans, "Idiom", "src_name", "Translation", "trans", "translation-of")
+        )
+
+        raw_edges = (
+            syn_ant.unionByName(composed)
+            .unionByName(radical_edges)
+            .unionByName(variant_edges)
+            .unionByName(hz_pinyin_edges)
+            .unionByName(term_pinyin_edges)
+            .unionByName(trans_edges)
+        )
+
+        if mapping() is None:  # no alias graph: canonicalization is the identity
+            # name-level distinct subsumes the id-level dedup → one fused
+            # job: family projections → union → distinct, no edge barrier
+            triples = triples_view(raw_edges)
+        else:
+            # the name-level distinct in triples_view subsumes BOTH id-level
+            # dedups (they only remove duplicate (src, dst, rel) rows), so
+            # the flagship triples path rewrites the RAW family union through
+            # the broadcast mapping and goes straight to the distinct — one
+            # wide shuffle total, no materialization barrier between the
+            # parse checkpoints and the final aggregate. Identical triple
+            # set, asserted by test_triples_from_rewrite_equals_from_canonical
+            # (new path vs triples_view over the doubly-deduped edges_canonical)
+            # and the golden P/R gate.
+            triples = triples_view(
+                apply_canonicalization(
+                    raw_edges.withColumn("run_id", F.lit(run_id)), mapping()
+                )
+            )
+    finally:
+        for t in threads:
+            t.join()
+    # build_graph returns with both checkpoints materialized; a barrier
+    # that failed on its thread (traceback printed there) is retried here
+    # and raises
+    for m in barriers:
+        m()
+
     def _make_errors() -> DataFrame:
         return hz.where(
             F.col("error").isNotNull() | F.col("basic_info.data.character").isNull()
@@ -363,113 +476,10 @@ def build_graph(
             F.coalesce(F.col("error"), F.col("basic_info.error")).alias("error"),
         )
 
-    mentions = L.extract_mentions(
-        terms, "name", "synonyms", "antonyms", carry_cols=("entity_type",)
-    )
-
-    # ---- edges ---------------------------------------------------------------
-    # single narrow pass per family — entity_type rides as a column, so no
-    # filter-per-type double evaluation and no join-back (SURVEY.md §4)
-    syn_ant = T.undirected_by_name(mentions, F.col("entity_type"))
-
-    if hanzi_dim is None:
-        hanzi_dim = hz_valid.select(F.col("basic_info.data.character").alias("name"))
-    composed = T.composed_of(terms, hanzi_dim, mode=composed_mode)
-
-    radicals = hz_valid.select(
-        F.regexp_replace(F.col("basic_info.data.bushou_detail.text"), "部$", "").alias(
-            "radical"
-        ),
-        F.col("basic_info.data.character").alias("hanzi"),
-        F.col("path").alias("lineage"),
-    ).where(F.col("radical").isNotNull() & (F.length("radical") > 0))
-    radical_edges = T.directed(radicals, "Radical", "radical", "Hanzi", "hanzi", "radical-of")
-
-    variants = hz_valid.select(
-        F.col("basic_info.data.character").alias("src_name"),
-        F.explode(F.col("basic_info.data.variant_characters")).alias("v"),
-        F.col("path").alias("lineage"),
-    ).select(
-        "src_name", F.col("v.character").alias("mention"), F.lit("variant-of").alias("rel_type"), "lineage"
-    )
-    variant_edges = T.undirected_by_name(variants, "Hanzi")
-
-    hz_pinyin = hz_valid.select(
-        F.col("basic_info.data.character").alias("src_name"),
-        F.explode(F.col("basic_info.data.pinyin_info")).alias("p"),
-        F.col("path").alias("lineage"),
-    ).select("src_name", F.col("p.pinyin").alias("py"), "lineage").where(
-        F.length("py") > 0
-    )
-    if full_hanzi_properties:
-        # the unpruned sections carry per-reading pinyin (reference
-        # extract_guoyu.py:25-220, extract_yisi.py, extract_liangan.py) —
-        # SURVEY §2.11 maps them to has-pinyin evidence, so full-fidelity
-        # mode widens the evidence base to every section reading; readings
-        # already covered by basic_info dedup away in dedup_edges
-        empty = F.array().cast("array<string>")
-        yisi_py = F.coalesce(
-            F.flatten(
-                F.transform(
-                    F.col("yisi_info.data.explanations"),
-                    lambda e: F.coalesce(
-                        F.transform(e["pinyin_info"], lambda p: p["pinyin"]), empty
-                    ),
-                )
-            ),
-            empty,
+    def _make_missing() -> DataFrame:
+        return idiom_missing.withColumn("entity_type", F.lit("Idiom")).unionByName(
+            word_missing.withColumn("entity_type", F.lit("Word"))
         )
-        guoyu_py = F.coalesce(
-            F.transform(
-                F.col("guoyu_info.data.main_content"),
-                lambda c: c["pinyin_info"]["pinyin"],
-            ),
-            empty,
-        )
-        liangan_py = F.coalesce(
-            F.transform(
-                F.col("liangan_info.data.main_content"),
-                lambda c: c["pinyin_info"]["pinyin"],
-            ),
-            empty,
-        )
-        section_pinyin = hz_valid.select(
-            F.col("basic_info.data.character").alias("src_name"),
-            F.explode(F.concat(yisi_py, guoyu_py, liangan_py)).alias("py"),
-            F.col("path").alias("lineage"),
-        ).where(F.col("py").isNotNull() & (F.length("py") > 0))
-        hz_pinyin = hz_pinyin.unionByName(section_pinyin)
-    hz_pinyin_edges = T.directed(hz_pinyin, "Hanzi", "src_name", "Pinyin", "py", "has-pinyin")
-    term_pinyin = terms.select(
-        "entity_type", F.col("name").alias("src_name"), F.col("pinyin").alias("py"),
-        F.col("path").alias("lineage"),
-    ).where(F.col("py").isNotNull() & (F.length("py") > 0))
-    term_pinyin_edges = T.directed(
-        term_pinyin, F.col("entity_type"), "src_name", "Pinyin", "py", "has-pinyin"
-    )
-
-    hz_trans = hz_valid.select(
-        F.col("basic_info.data.character").alias("src_name"),
-        F.explode(F.col("fanyi_info.data.translations")).alias("t"),
-        F.col("path").alias("lineage"),
-    ).select(
-        "src_name",
-        F.concat_ws(": ", F.col("t.language"), F.col("t.translation")).alias("trans"),
-        "lineage",
-    )
-    # idiom translation string is "lang: text; lang: text" (extract_chengyu.py:168)
-    idiom_trans = terms.where(
-        (F.col("entity_type") == "Idiom") & F.col("translation").isNotNull()
-    ).select(
-        F.col("name").alias("src_name"),
-        F.explode(F.split(F.col("translation"), "; ")).alias("trans"),
-        F.col("path").alias("lineage"),
-    ).where(F.length("trans") > 0)
-    trans_edges = T.directed(
-        hz_trans, "Hanzi", "src_name", "Translation", "trans", "translation-of"
-    ).unionByName(
-        T.directed(idiom_trans, "Idiom", "src_name", "Translation", "trans", "translation-of")
-    )
 
     # ---- nodes (LAZY plan construction, round 8) ---------------------------
     # Every edge endpoint gets a node row: crawled pages as full records,
@@ -479,7 +489,7 @@ def build_graph(
     # Pinyin | Translation). The whole node-plan construction (~10 selects
     # + 9 unions + a window) is serial py4j driver work the flagship
     # triples path never reads, so it is deferred into a GraphResult
-    # thunk and only built when a caller touches g.nodes.
+    # memo and only built when a caller touches g.nodes.
     def _make_nodes() -> DataFrame:
         term_nodes = terms.select(
             node_id("entity_type", "name").alias("node_id"),
@@ -548,16 +558,6 @@ def build_graph(
             nodes = nodes.persist()
         return nodes
 
-    raw_edges = (
-        syn_ant.unionByName(composed)
-        .unionByName(radical_edges)
-        .unionByName(variant_edges)
-        .unionByName(hz_pinyin_edges)
-        .unionByName(term_pinyin_edges)
-        .unionByName(trans_edges)
-    )
-    _edges_memo: list = []
-
     def _make_edges() -> DataFrame:
         # LAZY (round 6 made the persist lazy; round 8 defers the PLAN
         # construction too): the deduped edge table materializes only
@@ -565,98 +565,36 @@ def build_graph(
         # longer touches it. The former eager barrier shuffled and wrote
         # the full deduped payload (~10M rows with properties+lineage at
         # bench scale 9600) before triples could start: 51s of the 133s
-        # local[16] profile (tools/profile_kg.py).
-        if not _edges_memo:
-            edges = (
-                T.dedup_edges(raw_edges)
-                .withColumn("run_id", F.lit(run_id))
-                .drop("lineage")
-            )
-            if cache:
-                edges = edges.persist()
-            _edges_memo.append(edges)
-        return _edges_memo[0]
+        # local[16] profile.
+        edges = (
+            T.dedup_edges(raw_edges)
+            .withColumn("run_id", F.lit(run_id))
+            .drop("lineage")
+        )
+        if cache:
+            edges = edges.persist()
+        return edges
 
-    # ---- canonicalization (variant-of alias graph → CC) --------------------
-    # The mapping derives from the VARIANT FAMILY alone, before the union
-    # and the id-level dedup: union-find is duplicate-insensitive (A~B
-    # twice is still one merge) and the election's name lookup distincts,
-    # so the result is identical to mapping over the deduped edge table
-    # (asserted by test_mapping_from_variant_family_equals_from_dedup) —
-    # but the collect job runs only the tiny variants lineage off the
-    # hz_valid barrier, never the 7-family union. nodes NOT passed: the
-    # election's name lookup derives from the variant edges themselves,
-    # keeping the node pipeline off the flagship path. On the cached
-    # path the mapping job was launched inside the barrier pool (it
-    # depends only on the hz checkpoint) and has been running under the
-    # terms barrier — collect its result here.
-    mapping = (
-        _barrier_join("mapping") if _barrier_pool is not None else canonical_mapping(variant_edges)
+    edges = _Memo(_make_edges)
+    edges_canonical = (
+        edges if mapping() is None else _Memo(lambda: _rewrite_dedup(edges(), mapping()))
     )
-    if mapping is None:  # no alias graph: canonicalization is the identity
-        _make_edges_canonical = _make_edges
-        # name-level distinct subsumes the id-level dedup → one fused
-        # job: family projections → union → distinct, no edge barrier
-        triples = triples_view(raw_edges)
-    else:
-        def _make_edges_canonical() -> DataFrame:
-            return T.dedup_edges(
-                apply_canonicalization(_make_edges(), mapping).withColumn(
-                    "lineage", F.col("src_name")
-                )
-            ).drop("lineage")
-
-        # the name-level distinct in triples_view subsumes BOTH id-level
-        # dedups (they only remove duplicate (src, dst, rel) rows), so
-        # the flagship triples path rewrites the RAW family union through
-        # the broadcast mapping and goes straight to the distinct — one
-        # wide shuffle total, no materialization barrier between the
-        # parse checkpoints and the final aggregate. Identical triple
-        # set, asserted by test_triples_from_rewrite_equals_from_canonical
-        # (new path vs triples_view over the doubly-deduped edges_canonical)
-        # and the golden P/R gate.
-        triples = triples_view(
-            apply_canonicalization(
-                raw_edges.withColumn("run_id", F.lit(run_id)), mapping
-            )
-        )
-
-    def _make_missing() -> DataFrame:
-        return idiom_missing.withColumn("entity_type", F.lit("Idiom")).unionByName(
-            word_missing.withColumn("entity_type", F.lit("Word"))
-        )
 
     # lazy: each count is a job; callers that don't need metrics pay nothing
-    class _LazyCounts(dict):
-        _frames = {
-            "idiom_seeds": idiom_seeds,
-            "word_seeds": word_seeds,
-            "idiom_missing": idiom_missing,
-            "word_missing": word_missing,
-            "hanzi_pages": hz,
-            "hanzi_valid": hz_valid,
-        }
-
-        def __getitem__(self, key):
-            if key not in self:
-                self[key] = self._frames[key].count()
-            return super().__getitem__(key)
-
-    family_counts = _LazyCounts()
-
-    if _barrier_pool is not None:
-        # barrier materialization ran under the plan construction above;
-        # build_graph still returns with both checkpoints materialized
-        # (same contract as the former eager barriers)
-        _barrier_join("terms")
-        _barrier_join("hz")
-
+    family_counts = {
+        "idiom_seeds": _Memo(idiom_seeds.count),
+        "word_seeds": _Memo(word_seeds.count),
+        "idiom_missing": _Memo(idiom_missing.count),
+        "word_missing": _Memo(word_missing.count),
+        "hanzi_pages": _Memo(hz.count),
+        "hanzi_valid": hz_count,
+    }
     return GraphResult(
-        nodes=_make_nodes,
-        edges=_make_edges,
-        edges_canonical=_make_edges_canonical,
+        nodes=_Memo(_make_nodes),
+        edges=edges,
+        edges_canonical=edges_canonical,
         triples=triples,
-        missing=_make_missing,
-        errors=_make_errors,
+        missing=_Memo(_make_missing),
+        errors=_Memo(_make_errors),
         family_counts=family_counts,
     )

@@ -442,11 +442,13 @@ def tpch_q1_pricing(spark, sf):
     # exact decimal aggregation carried as SCALED LONGS (guide §2.3,
     # narrower types): sum(decimal(18,2)) keeps a non-compact decimal
     # buffer per group; sum over the exactly-scaled integers is the same
-    # rational value (qty < 10^16/10^2, price < 10^14/10^4 per row — far
-    # beyond TPC-H ranges — keeps every sum inside int64), and the final
-    # decimal division + double cast reproduces the oracle's value
-    # bit-for-bit. 1.24s → 0.94s at sf1.0; rows+schema verified equal at
-    # sf0.01 and sf1.0.
+    # rational value, and the final decimal division + double cast
+    # reproduces the oracle's value bit-for-bit. The per-row bound (qty <
+    # 10^16/10^2, price < 10^14/10^4) keeps each scaled ROW inside int64,
+    # not each group SUM: a group past ~9.2e18 scaled units raises
+    # ARITHMETIC_OVERFLOW under the ANSI mode session.get_spark pins
+    # (test_q1_scaled_sum_overflow_raises) instead of wrapping. 1.24s →
+    # 0.94s at sf1.0; rows+schema verified equal at sf0.01 and sf1.0.
     li = _t(spark, sf, "lineitem").where(F.col("l_shipdate") <= "1998-09-02")
     qty = (F.col("l_quantity").cast("decimal(18,2)") * F.lit(100).cast("decimal(3,0)")).cast("long")
     price = (F.col("l_extendedprice").cast("decimal(18,4)") * F.lit(10000).cast("decimal(5,0)")).cast("long")

@@ -96,6 +96,10 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("KGPIPE_DRIVER_MEM", "24g"))
         .config("spark.sql.session.timeZone", "UTC")
+        # integer overflow raises ARITHMETIC_OVERFLOW instead of wrapping
+        # (the scaled-long sums in queries.tpch_q1_pricing rely on it);
+        # pinned rather than left to the version default
+        .config("spark.sql.ansi.enabled", "true")
         .config("spark.ui.enabled", "false")
         # call-site capture for enriched JVM errors costs ~3 driver
         # round-trips PER DataFrame API call (getActiveSession +

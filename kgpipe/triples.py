@@ -141,6 +141,8 @@ def composed_of(
         each hot character fans across ``n_salt`` reducers keyed by
         xxhash64(char, src_name).
     """
+    if mode not in ("broadcast", "salted"):
+        raise ValueError(f"composed_of: unknown mode {mode!r}")
     et = _type_col(entity_type if entity_type is not None else F.col("entity_type"))
     chars = terms.select(
         F.col("name").alias("src_name"),

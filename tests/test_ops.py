@@ -41,6 +41,56 @@ def test_minhash_lsh_finds_near_dups(docs):
     assert (1, 4) not in pairs and (1, 5) not in pairs
 
 
+def _banded_wide_expr(docs, k=5, num_hashes=8, bands=4, text_col="text"):
+    """JVM-expression formulation of ``textops._banded_wide`` — same
+    family, same output: the equality oracle for the arrow path.
+
+    The signature is a pure per-row function, so it is computed in a
+    single ``aggregate`` expression — one pass over the document's
+    shingles maintaining the running per-seed minimum, with the banding
+    done in the ``finish`` lambda of the same expression (nothing is
+    evaluated twice, nothing leaves the row).
+
+    Hash identity: the bigint family of ``textops.MINHASH_*`` (one md5
+    base per shingle, arithmetic per seed), band hash =
+    md5(concat_ws('|', decimal renderings of the band's signature
+    members)); the DuckDB oracle computes the same family with its own
+    hex-literal cast.
+    """
+    rows_per_band = num_hashes // bands
+    shingle_expr = (
+        f"transform(sequence(1, greatest(char_length({text_col}) - {k - 1}, 1)),"
+        f" i -> substring({text_col}, i, {k}))"
+    )
+    # one md5 base per shingle, computed BEFORE the aggregate so the
+    # merge lambda is pure 64-bit multiply-add-mod; least() skips NULLs,
+    # so the NULL-seeded accumulator adopts the first hash and min()
+    # thereafter
+    base_expr = (
+        f"transform({shingle_expr}, "
+        f"s -> {textops._MINHASH_BASE.format(s='s', p=textops.MINHASH_P)})"
+    )
+    mixes = ", ".join(textops._minhash_mix(j, "h") for j in range(num_hashes))
+    merge = f"(acc, h) -> zip_with(acc, array({mixes}), (a, x) -> least(a, x))"
+    band_fields = ", ".join(
+        "'bh{b}', md5(concat_ws('|', {members}))".format(
+            b=b,
+            members=", ".join(
+                f"CAST(sig[{b * rows_per_band + r}] AS STRING)"
+                for r in range(rows_per_band)
+            ),
+        )
+        for b in range(bands)
+    )
+    wide = F.expr(
+        f"aggregate({base_expr}, "
+        f"array_repeat(CAST(NULL AS BIGINT), {num_hashes}), "
+        f"{merge}, "
+        f"sig -> named_struct({band_fields}))"
+    )
+    return docs.select("doc_id", wide.alias("_w")).select("doc_id", "_w.*")
+
+
 def test_minhash_arrow_signatures_equal_expr(spark):
     """The mapInArrow signature path (hashlib/numpy) must be
     byte-identical to the JVM expression formulation — the in-repo
@@ -60,7 +110,7 @@ def test_minhash_arrow_signatures_equal_expr(spark):
     ]
     d = spark.createDataFrame(rows, "doc_id long, text string")
     arrow = sorted(map(tuple, textops._banded_wide(d).collect()))
-    expr = sorted(map(tuple, textops._banded_wide_expr(d).collect()))
+    expr = sorted(map(tuple, _banded_wide_expr(d).collect()))
     assert arrow == expr
 
 
@@ -300,6 +350,13 @@ def test_fingerprint_ignores_formatting(spark):
     assert fps[1] == fps[2] == fps[3]
 
 
+def _fingerprint_expr(docs, text_col="text"):
+    """JVM expression formulation of ``textops.fingerprint`` — the
+    equality oracle for the arrow path."""
+    norm = F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9\\u4e00-\\u9fff]", "")
+    return docs.select("doc_id", F.md5(norm).alias("fingerprint"))
+
+
 def test_fingerprint_arrow_equals_expr(spark):
     """The arrow fingerprint path must be byte-identical to the JVM
     expression it replaced — swept over every BMP code point (in 64-char
@@ -313,7 +370,7 @@ def test_fingerprint_arrow_equals_expr(spark):
     rows += [(900001, None), (900002, ""), (900003, "   ")]
     d = spark.createDataFrame(rows, "doc_id long, text string")
     arrow = sorted(map(tuple, textops.fingerprint(d).collect()))
-    expr = sorted(map(tuple, textops._fingerprint_expr(d).collect()))
+    expr = sorted(map(tuple, _fingerprint_expr(d).collect()))
     assert arrow == expr
 
 

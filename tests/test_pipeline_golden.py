@@ -237,6 +237,74 @@ def test_salted_composed_of_matches_broadcast(spark, small_corpus, graph):
     assert rows == {("AB", "A"), ("AB", "B"), ("BC", "B"), ("BC", "C")}
 
 
+def test_composed_of_rejects_unknown_mode(spark):
+    from kgpipe import triples as T
+
+    terms = spark.createDataFrame(
+        [("AB", "Word", "p1")], "name string, entity_type string, path string"
+    )
+    dim = spark.createDataFrame([("A",)], "name string")
+    with pytest.raises(ValueError, match="'salty'"):
+        T.composed_of(terms, dim, mode="salty")
+
+
+def test_concurrent_first_access_builds_members_once(spark, small_corpus):
+    """Threads racing on the first read of g.nodes and of a family count
+    all succeed and share the one built frame and count."""
+    import sys
+    import threading
+
+    cdf, sdf = corpus_to_dataframes(spark, small_corpus)
+    g = build_graph(spark, cdf, sdf, cache=False)
+    n = 8  # more threads than cores
+    start = threading.Barrier(n)
+    results, errors = [], []
+
+    def read():
+        start.wait(timeout=60)
+        try:
+            results.append((g.nodes, g.family_counts["hanzi_pages"]()))
+        except Exception as exc:  # surfaced by the assert below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=read) for _ in range(n)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(results) == n
+    nodes, count = results[0]
+    assert count > 0
+    assert all(r[0] is nodes and r[1] == count for r in results)
+
+
+def test_failed_plan_construction_leaves_no_barrier_jobs(spark, small_corpus, monkeypatch):
+    """If plan construction raises after the barrier jobs started,
+    build_graph waits for them before the error leaves: no Spark job
+    outlives the call."""
+    from kgpipe import triples as T
+
+    def broken(*args, **kwargs):
+        raise RuntimeError("plan construction failed")
+
+    monkeypatch.setattr(T, "composed_of", broken)
+    cdf, sdf = corpus_to_dataframes(spark, small_corpus)
+    with pytest.raises(RuntimeError, match="plan construction failed"):
+        build_graph(spark, cdf, sdf)
+    sc = spark.sparkContext
+    # deliver already-posted job-end events to the status store (this
+    # does not wait for running jobs)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getActiveJobsIds()) == []
+
+
 @pytest.mark.slow
 def test_full_section_properties_roundtrip(spark, small_corpus, tmp_path):
     """S11 full fidelity: through the incremental runner + warehouse

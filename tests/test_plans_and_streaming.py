@@ -240,6 +240,24 @@ def test_codegen_covers_native_ops(spark):
     assert plans.count_codegen_stages(df) >= 1
 
 
+def test_q1_scaled_sum_overflow_raises(spark, tmp_path):
+    """tpch_q1_pricing sums ×10⁴-scaled longs: eleven rows priced 9e13
+    (9e17 scaled each) in one group overflow int64. The sum must raise,
+    never wrap to a wrong total."""
+    import datetime as dt
+
+    from pyspark.errors import ArithmeticException
+
+    row = (1.0, 9e13, "A", "F", dt.datetime(1998, 1, 1))
+    spark.createDataFrame(
+        [row] * 11,
+        "l_quantity double, l_extendedprice double, l_returnflag string, "
+        "l_linestatus string, l_shipdate timestamp",
+    ).coalesce(1).write.parquet(str(tmp_path / "lineitem.parquet"))
+    with pytest.raises(ArithmeticException, match="ARITHMETIC_OVERFLOW"):
+        QUERIES["tpch_q1_pricing"](spark, str(tmp_path)).collect()
+
+
 def test_streaming_windowed_metrics_match_batch(spark, tmp_path):
     """Event-time windowed counters with a watermark (availableNow drain)
     must equal the batch windowed aggregation over the same input —
