@@ -5,10 +5,11 @@ The reference's incremental-batch machinery — 1000-item chunks
 (:85-102), the pending.json two-phase intent log (:117-216), per-batch
 metrics rows (:342-366) — maps onto:
 
-  * partition unit   = (family, bucket) where bucket = pmod(xxhash64(
-    normalized key), n_buckets); seeds and pages are co-bucketed on the
-    same normalized-title key, so each unit is an independent
-    self-contained linkage problem (the Spark analogue of a seed chunk);
+  * partition unit   = bucket = pmod(xxhash64(normalized key),
+    n_buckets) of seeds and pages (the Spark analogue of a seed chunk);
+    each unit builds its graph from its slice of the run's one staging
+    (pipeline.stage_pages), where a seed links to its page even when
+    the two hash to different buckets;
   * resume           = anti-join of pending units against the
     checkpoints table (status='done') — replaces the CSV watermark;
   * pending.json     = unnecessary: each unit commits nodes/edges/
@@ -31,7 +32,14 @@ from pyspark.sql import functions as F
 
 from kgpipe.link import normalize_title
 from kgpipe.materialize import Warehouse
-from kgpipe.pipeline import build_graph, canonicalize_edges, triples_view
+from kgpipe.pipeline import (
+    Staged,
+    canonicalize_edges,
+    graph_from_staged,
+    stage_pages,
+    triples_view,
+)
+from kgpipe.session import free_cached_since, persistent_rdd_ids
 
 
 def bucket_of(col, n_buckets: int):
@@ -142,156 +150,143 @@ def run_incremental(
     hanyuguoxue.py:1146-1242).
     """
     wh = Warehouse(warehouse_root)
-
-    # co-bucket pages and seeds on the normalized linkage key; zidian
-    # pages (no seeds) bucket on path
+    sc = spark.sparkContext
+    # pages bucket on the normalized title key of their slug (zidian
+    # pages, which no seed names, on the path), seeds on that of their name
     is_term_page = F.col("path").startswith("chengyu/") | F.col("path").startswith("cidian/")
     page_key = F.when(
         is_term_page, normalize_title(F.element_at(F.split(F.col("path"), "/"), 2))
     ).otherwise(F.col("path"))
-    corpus_b = corpus.withColumn("_bucket", bucket_of(page_key, n_buckets))
-    seeds_b = seeds.withColumn("_bucket", bucket_of(normalize_title(F.col("name")), n_buckets))
-
-    # GLOBAL composed-of dimension: a word in one bucket must still link
-    # characters whose zidian page lives in another bucket. Derived from
-    # the PARSED pages after the same validity gate build_graph applies
-    # (error IS NULL and basic_info character present) — a path-codepoint
-    # decode would admit characters the per-bucket pipeline rejects and
-    # silently diverge from the single-shot result on malformed pages.
-    # One global parse pass over the zidian family, pinned once and
-    # reused by every bucket.
-    from kgpipe.parse.udfs import make_parse_hanzi_udf
-
-    parse_basic_udf = make_parse_hanzi_udf(("basic_info",))
-    hanzi_dim = (
-        corpus.where(F.col("path").startswith("zidian/"))
-        .select(parse_basic_udf("content", "path").alias("parsed"))
-        .where(
-            F.col("parsed.error").isNull()
-            & F.col("parsed.basic_info.data.character").isNotNull()
-        )
-        .select(F.col("parsed.basic_info.data.character").alias("name"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    composed_mode = (
-        "salted" if hanzi_dim.count() > SALTED_DIM_THRESHOLD else "broadcast"
-    )
-
-    from kgpipe.session import free_cached_since, persistent_rdd_ids
-
-    # per-bucket cache hygiene: each build_graph pins checkpoints +
-    # persisted frames; release them after the unit commits, keeping the
-    # shared hanzi dimension (and anything the caller pinned) alive
-    keep_rdds = persistent_rdd_ids(spark.sparkContext)
+    page_bucket = bucket_of(page_key, n_buckets)
+    seed_bucket = bucket_of(normalize_title(F.col("name")), n_buckets)
 
     pending = pending_units(wh, spark, n_buckets, run_id=run_id)
-    for bucket in pending:
-        t0 = time.time()
-        part_key = f"{run_id}-bucket-{bucket}"
-        c_slice = corpus_b.where(F.col("_bucket") == bucket).drop("_bucket")
-        s_slice = seeds_b.where(F.col("_bucket") == bucket).drop("_bucket")
-        g = build_graph(
-            spark, c_slice, s_slice, run_id=run_id, hanzi_dim=hanzi_dim,
-            composed_mode=composed_mode,
-            full_hanzi_properties=full_hanzi_properties,
-            full_term_properties=full_term_properties,
-        )
+    # the run's pins (staging, each bucket's frames) go on any exit
+    keep_rdds = persistent_rdd_ids(sc)
+    try:
+        if pending:
+            # ONE staging per run: all zidian pages — the composed-of
+            # dimension is global, a word in one bucket must still link
+            # characters whose zidian page lives in another — plus the
+            # pending buckets' term pages, each parsed once. Every bucket
+            # slices it, so a seed links to its page in any bucket.
+            staged = stage_pages(
+                corpus.where(~is_term_page | page_bucket.isin(pending)), seeds,
+                full_hanzi_properties=full_hanzi_properties,
+                full_term_properties=full_term_properties,
+            )
+            hanzi_dim = staged.characters()
+            composed_mode = "salted" if hanzi_dim.count() > SALTED_DIM_THRESHOLD else "broadcast"
+            keep_staged = persistent_rdd_ids(sc)
+        for bucket in pending:
+            t0 = time.time()
+            in_page, in_seed = page_bucket == bucket, seed_bucket == bucket
+            g = graph_from_staged(
+                Staged(
+                    *(f.where(in_page) for f in staged[:3]),  # terms, hz, hz_valid
+                    *(f.where(in_seed) for f in staged[3:]),  # seeds, missing
+                ),
+                run_id=run_id, hanzi_dim=hanzi_dim, composed_mode=composed_mode,
+                full_hanzi_properties=full_hanzi_properties,
+            )
+            rows_in = corpus.where(in_page).count()
+            nodes_n = g.nodes.count()
+            edges_n = g.edges.count()
+            counts = g.family_counts
+            processed = counts["idiom_seeds"]() + counts["word_seeds"]()
+            missing = counts["idiom_missing"]() + counts["word_missing"]()
+            fail = g.errors.count()
+            success = processed - missing
 
-        rows_in = c_slice.count()
-        nodes_n = g.nodes.count()
-        edges_n = g.edges.count()
-        counts = g.family_counts
-        processed = counts["idiom_seeds"]() + counts["word_seeds"]()
-        missing = counts["idiom_missing"]() + counts["word_missing"]()
-        fail = g.errors.count()
-        success = processed - missing
+            # data first, checkpoint last: a crash between the two only
+            # means the unit re-runs, and every merge below is idempotent
+            # (T3). nodes use order-independent priority (crawled beats
+            # stub no matter which bucket commits first)
+            wh.nodes.merge_best(
+                g.nodes,
+                keys=["node_id"],
+                priority=[F.col("crawled").desc(), F.col("url").asc_nulls_last()],
+            )
+            wh.edges.insert_ignore(
+                g.edges, keys=["src_id", "dst_id", "rel_type"], order_by=["src_name"]
+            )
+            if fail > 0:
+                wh.errors.append(g.errors)
 
-        # data first, checkpoint last: a crash between the two only means
-        # the unit re-runs, and every merge below is idempotent (T3).
-        # nodes use order-independent priority (crawled beats stub no
-        # matter which bucket commits first)
-        wh.nodes.merge_best(
-            g.nodes,
-            keys=["node_id"],
-            priority=[F.col("crawled").desc(), F.col("url").asc_nulls_last()],
-        )
-        wh.edges.insert_ignore(
-            g.edges, keys=["src_id", "dst_id", "rel_type"], order_by=["src_name"]
-        )
-        if fail > 0:
-            wh.errors.append(g.errors)
+            elapsed = round(time.time() - t0, 3)
 
-        elapsed = round(time.time() - t0, 3)
+            if fail_buckets and bucket in fail_buckets:
+                # SIGINT analogue (batch_crawl.py:329-340): record the
+                # interruption, leave the unit un-checkpointed, abort
+                _metrics_row(
+                    wh, spark, run_id, bucket, processed, success, fail, missing,
+                    "manual_exit", elapsed,
+                )
+                raise RuntimeError(f"injected failure before checkpoint of bucket {bucket}")
 
-        if fail_buckets and bucket in fail_buckets:
-            # SIGINT analogue (batch_crawl.py:329-340): record the
-            # interruption, leave the unit un-checkpointed, abort
+            # T7/T8 termination vocabulary (reference README.md:50-56),
+            # mapped onto corpus-quality signals:
+            #   blocked_ip      — every record in the unit failed (the batch
+            #                     crawler's systematic-failure exit,
+            #                     batch_crawl.py:288)
+            #   network_outage  — seeds pending but no pages arrived at all
+            #                     (batch_crawl.py:115)
+            #   all_done        — last pending unit (batch_crawl.py:336)
+            #   batch_completed — normal mid-run unit
+            if fail > 0 and success == 0:
+                reason = "blocked_ip"
+            elif rows_in == 0 and processed > 0:
+                reason = "network_outage"
+            elif bucket == pending[-1]:
+                reason = "all_done"
+            else:
+                reason = "batch_completed"
+
             _metrics_row(
                 wh, spark, run_id, bucket, processed, success, fail, missing,
-                "manual_exit", elapsed,
+                reason, elapsed,
             )
-            raise RuntimeError(f"injected failure before checkpoint of bucket {bucket}")
+            checkpoint_row = {
+                "run_id": run_id,
+                "partition_key": f"{run_id}-bucket-{bucket}",
+                "status": "done",
+                "rows_in": rows_in,
+                "nodes_out": nodes_n,
+                "edges_out": edges_n,
+                "lineage": json.dumps(
+                    {
+                        "bucket": bucket,
+                        "n_buckets": n_buckets,
+                        "nodes_version": wh.nodes.current_version(),
+                        "edges_version": wh.edges.current_version(),
+                    }
+                ),
+                "committed_at": datetime.now(timezone.utc),
+            }
+            wh.checkpoints.append(
+                spark.createDataFrame([checkpoint_row], wh.checkpoints.schema)
+            )
+            # the bucket's own blocks go; the staging stays for the next
+            free_cached_since(sc, keep_staged)
 
-        # T7/T8 termination vocabulary (reference README.md:50-56),
-        # mapped onto corpus-quality signals:
-        #   blocked_ip      — every record in the unit failed (the batch
-        #                     crawler's systematic-failure exit,
-        #                     batch_crawl.py:288)
-        #   network_outage  — seeds pending but no pages arrived at all
-        #                     (batch_crawl.py:115)
-        #   all_done        — last pending unit (batch_crawl.py:336)
-        #   batch_completed — normal mid-run unit
-        if fail > 0 and success == 0:
-            reason = "blocked_ip"
-        elif rows_in == 0 and processed > 0:
-            reason = "network_outage"
-        elif bucket == pending[-1]:
-            reason = "all_done"
-        else:
-            reason = "batch_completed"
-
-        _metrics_row(
-            wh, spark, run_id, bucket, processed, success, fail, missing,
-            reason, elapsed,
-        )
-        checkpoint_row = {
-            "run_id": run_id,
-            "partition_key": part_key,
-            "status": "done",
-            "rows_in": rows_in,
-            "nodes_out": nodes_n,
-            "edges_out": edges_n,
-            "lineage": json.dumps(
-                {
-                    "bucket": bucket,
-                    "n_buckets": n_buckets,
-                    "nodes_version": wh.nodes.current_version(),
-                    "edges_version": wh.edges.current_version(),
-                }
-            ),
-            "committed_at": datetime.now(timezone.utc),
-        }
-        wh.checkpoints.append(
-            spark.createDataFrame([checkpoint_row], wh.checkpoints.schema)
-        )
-        free_cached_since(spark.sparkContext, keep_rdds)
-
-    if sweep_range is not None:
-        # S7: codepoints in the sweep range with no zidian page at all
-        # are failures the per-bucket loop never sees. Runs regardless of
-        # whether any bucket was pending — a --sweep invocation on an
-        # already-checkpointed run must still record its gap accounting.
-        t0 = time.time()
-        lo, hi = sweep_range
-        observed = corpus.where(F.col("path").startswith("zidian/")).select(
-            F.regexp_extract("path", r"zi-(\d+)", 1).cast("long")
-        )
-        gaps = sweep_gaps(spark, observed, lo, hi)
-        _metrics_row(
-            wh, spark, run_id, n_buckets, hi - lo + 1, hi - lo + 1 - gaps, 0,
-            gaps, "sweep_completed", round(time.time() - t0, 3),
-        )
+        if sweep_range is not None:
+            # S7: codepoints in the sweep range with no zidian page at all
+            # are failures the per-bucket loop never sees. Runs regardless
+            # of whether any bucket was pending — a --sweep invocation on
+            # an already-checkpointed run must still record its gap
+            # accounting.
+            t0 = time.time()
+            lo, hi = sweep_range
+            observed = corpus.where(F.col("path").startswith("zidian/")).select(
+                F.regexp_extract("path", r"zi-(\d+)", 1).cast("long")
+            )
+            gaps = sweep_gaps(spark, observed, lo, hi)
+            _metrics_row(
+                wh, spark, run_id, n_buckets, hi - lo + 1, hi - lo + 1 - gaps, 0,
+                gaps, "sweep_completed", round(time.time() - t0, 3),
+            )
+    finally:
+        free_cached_since(sc, keep_rdds)
 
     return wh
 

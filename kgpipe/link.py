@@ -10,11 +10,10 @@ the normalized name; seeds with no surviving match are the
 Skew note (north_star): mention keys are head-skewed — 一/不 appear in a
 large fraction of composed-of mentions. Two mitigations, used by callers:
 
-  * ``dim_broadcast_join`` — when the dimension (entity→id) fits the
-    broadcast threshold there is no shuffle at all, so key skew cannot
-    concentrate on one reducer. This is the default path: even at full
-    scale the hanzi dimension is ≤ ~90k rows and the term dimension is
-    bounded by the seed universe.
+  * broadcast — when the dimension fits the broadcast threshold there
+    is no shuffle at all, so key skew cannot concentrate on one reducer.
+    This is the default path (triples.composed_of): even at full scale
+    the hanzi dimension is ≤ ~90k rows.
   * ``salted_join`` — explicit salting for the case where the dimension
     outgrows broadcast: the fact side gets a uniform salt in [0, n), the
     dimension side is exploded ×n, and the join key becomes (key, salt),
@@ -56,18 +55,6 @@ def link_seeds_to_pages(
     linked = s.join(p, "_k", "inner").drop("_k")
     missing = s.join(p.select("_k"), "_k", "left_anti").drop("_k")
     return linked, missing
-
-
-def dim_broadcast_join(
-    facts: DataFrame, dim: DataFrame, key: str, how: str = "inner"
-) -> DataFrame:
-    """J1/J3: facts ⋈ broadcast(dimension) on an equality key.
-
-    The reference does 2-4 per-record SELECT round-trips for the same
-    lookup (chengyu_mysql.py:197-221); one broadcast join replaces all of
-    them per batch.
-    """
-    return facts.join(F.broadcast(dim), key, how)
 
 
 def salted_join(

@@ -140,15 +140,15 @@ def make_parse_ciyu_udf(fields: tuple | None = None):
     return udf
 
 
-#: full-extraction UDFs (S9/S10 fidelity surface and streaming)
+#: full-extraction UDFs (the S9/S10 fidelity surface)
 parse_chengyu_udf = make_parse_chengyu_udf(None)
 parse_ciyu_udf = make_parse_ciyu_udf(None)
 
 
 def make_parse_hanzi_udf(sections: tuple):
-    """Projection-pruned variant of ``parse_hanzi_udf``: only the
-    requested sections are extracted and serialized (the others return
-    NULL structs). The KG pipeline consumes basic_info + fanyi_info;
+    """Projection-pruned character parser UDF: only the requested
+    ``sections`` are extracted and serialized (the others return NULL
+    structs). The KG pipeline consumes basic_info + fanyi_info;
     extracting the 5 unused sections costs ~27% of per-page parse CPU
     and most of the struct serialization through its cache barrier."""
 
@@ -162,8 +162,3 @@ def make_parse_hanzi_udf(sections: tuple):
 
     return udf
 
-
-@F.pandas_udf(schemas.HANZI_PARSED)
-def parse_hanzi_udf(content: pd.Series, url: pd.Series) -> pd.DataFrame:
-    rows = [_adapt_hanzi(parse_hanzi_html(c, u)) for c, u in zip(content, url)]
-    return pd.DataFrame(rows, columns=_HANZI_COLUMNS)

@@ -1,7 +1,8 @@
 """End-to-end graph construction: corpus → nodes / edges / triples.
 
 Spark restatement of the reference's three crawl entry points
-(SURVEY.md §3): one batch job, no threads, no queues —
+(SURVEY.md §3): one batch job, a parse step then a graph step whose
+barrier jobs run on threads while it builds the downstream plans —
 
     corpus ──┬─ chengyu pages ─ parse UDF ─┐
              ├─ cidian  pages ─ parse UDF ─┼─ link seeds (J2/P13)
@@ -13,9 +14,10 @@ Spark restatement of the reference's three crawl entry points
         triples (name-level, for the golden P/R gate)
 
 Scale notes:
-  * each family is parsed exactly once and persisted before fan-out to
-    nodes + several edge families (at warehouse scale this would be a
-    materialized staging table instead of an executor cache);
+  * the parse step (``stage_pages``) parses each page exactly once and
+    checkpoints it before the fan-out to nodes + several edge families:
+    the staging table every consumer reads (the bucket runner slices one
+    per run, the stream stages one per micro-batch);
   * the only joins are (a) broadcast seed-linkage, (b) broadcast semi-
     join of composed-of chars against the hanzi dimension, (c) broadcast
     canonical mapping — no large-×-large shuffle joins anywhere;
@@ -26,6 +28,7 @@ Scale notes:
 from __future__ import annotations
 
 import threading
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -161,7 +164,7 @@ def _family(corpus: DataFrame, prefix: str) -> DataFrame:
     return corpus.where(F.col("path").startswith(prefix + "/"))
 
 
-def _term_frame(linked: DataFrame, entity_type: str, data_prefix: str) -> DataFrame:
+def term_frame(linked: DataFrame, entity_type: str, data_prefix: str) -> DataFrame:
     """Normalize chengyu/ciyu linked rows into one shape.
 
     The two families' parse structs differ (chengyu has emotion/source/
@@ -188,64 +191,57 @@ def _term_frame(linked: DataFrame, entity_type: str, data_prefix: str) -> DataFr
     )
 
 
-def build_graph(
-    spark: SparkSession,
-    corpus: DataFrame,
-    seeds: DataFrame,
-    run_id: str = "run-1",
-    cache: bool = True,
-    hanzi_dim: DataFrame | None = None,
-    composed_mode: str = "broadcast",
-    full_hanzi_properties: bool = False,
-    full_term_properties: bool = False,
-) -> GraphResult:
-    """``hanzi_dim`` (one ``name`` column) overrides the composed-of
-    dimension — the checkpointed runner passes the *global* character
-    universe so that a word in one bucket still links characters whose
-    zidian pages live in another bucket. ``composed_mode`` selects the
-    composed-of skew strategy (see kgpipe.triples.composed_of); the
-    runner switches to 'salted' when the dimension exceeds the broadcast
-    budget. ``full_hanzi_properties`` (S11 full fidelity) parses and
-    persists ALL seven zidian sections into the Hanzi node properties —
-    matching the reference's per-character section blobs
-    (hanyuguoxue.py:1411-1439); triple derivation is identical in both
-    modes (it reads only basic_info + fanyi_info).
-
-    ``full_term_properties`` is the term-family twin (S9/S10 fidelity):
-    the reference upserts the COMPLETE idiom/word record (explanation,
-    source, usage, example, zhuyin, emotion / definition, part_of_speech,
-    is_common — chengyu_mysql.py:162-221); the default hot path extracts
-    only the triple-bearing fields, so term node ``properties`` JSON
-    carries just those. Triples are identical in both modes."""
-    hanzi_sections = (
-        ALL_HANZI_SECTIONS if full_hanzi_properties else PIPELINE_HANZI_SECTIONS
-    )
-    parse_hanzi = (
-        parse_hanzi_full_udf if full_hanzi_properties else parse_hanzi_pruned_udf
-    )
-    parse_chengyu = (
-        parse_chengyu_udf if full_term_properties else parse_chengyu_pruned_udf
-    )
-    parse_ciyu = parse_ciyu_udf if full_term_properties else parse_ciyu_pruned_udf
-    # ---- parse (one scan per family; zidian parsed once for all sections) --
-    # Generate barrier around each term-family parse: the linkage join's
-    # key derives from the UDF output, and Catalyst's ExtractPythonUDFs
-    # then plants ONE ArrowEvalPython below the join (key side) and a
-    # SECOND one above it (output projection) — every term page was
-    # parsed twice (4 ArrowEvalPython nodes in the terms plan; the whole
-    # Python-parse floor doubled, ~4.2s of the 9.6s barrier at bench
-    # scale 1600). explode(array(udf(...))) pins the evaluation below a
-    # Generate node, which projection collapse cannot cross, so the
-    # struct is computed once and rides through the join. Also drops
-    # `content` before the join instead of carrying it to a post-join
-    # re-parse.
-    def _parsed_once(family_df: DataFrame, udf) -> DataFrame:
-        return family_df.select(
+def parse_term_pages(corpus: DataFrame, full_term_properties: bool = False):
+    """(chengyu, cidian) pages as (path, parsed) rows, each page through
+    its parse UDF once: explode(array(udf(...))) pins the evaluation
+    below a Generate node, which projection collapse cannot cross. A
+    consumer that keys or filters on the UDF output (the linkage join)
+    otherwise makes ExtractPythonUDFs plant a SECOND ArrowEvalPython for
+    the output projection — every term page parsed twice, ~4.2s of the
+    9.6s barrier at bench scale 1600."""
+    full = full_term_properties
+    return tuple(
+        _family(corpus, family).select(
             "path", F.explode(F.array(udf("content", "path"))).alias("parsed")
         )
+        for family, udf in (
+            ("chengyu", parse_chengyu_udf if full else parse_chengyu_pruned_udf),
+            ("cidian", parse_ciyu_udf if full else parse_ciyu_pruned_udf),
+        )
+    )
 
-    chengyu_parsed = _parsed_once(_family(corpus, "chengyu"), parse_chengyu)
-    cidian_parsed = _parsed_once(_family(corpus, "cidian"), parse_ciyu)
+
+class Staged(NamedTuple):
+    """The parse step's output, a run's staging table. ``terms`` and
+    ``hz_valid`` are the localCheckpoint barriers (with caching on),
+    ``hz`` every parsed zidian row; ``seeds`` and ``missing`` are
+    (name, entity_type) rows."""
+
+    terms: DataFrame
+    hz: DataFrame
+    hz_valid: DataFrame
+    seeds: DataFrame
+    missing: DataFrame
+
+    def characters(self) -> DataFrame:
+        """The valid characters: one ``name`` row per zidian page that
+        passed the validity gate — the composed-of dimension."""
+        return self.hz_valid.select(F.col("basic_info.data.character").alias("name"))
+
+
+def stage_pages(
+    corpus: DataFrame,
+    seeds: DataFrame,
+    cache: bool = True,
+    full_hanzi_properties: bool = False,
+    full_term_properties: bool = False,
+) -> Staged:
+    """Parse step: parse each page once, link the seeds to the term pages
+    and gate the zidian pages. Runs no job."""
+    hanzi_sections = ALL_HANZI_SECTIONS if full_hanzi_properties else PIPELINE_HANZI_SECTIONS
+    parse_hanzi = parse_hanzi_full_udf if full_hanzi_properties else parse_hanzi_pruned_udf
+    chengyu_parsed, cidian_parsed = parse_term_pages(corpus, full_term_properties)
+    # zidian parsed once for all sections
     zidian_parsed = _family(corpus, "zidian").select(
         "path", parse_hanzi("content", "path").alias("parsed")
     )
@@ -254,19 +250,17 @@ def build_graph(
 
     # ---- linkage (J2/P13): seed ⋈ page title, by family -------------------
     # null-name seeds dropped (reference ciyu_neo4j.py:37-39)
-    seeds = seeds.where(F.col("name").isNotNull())
-    idiom_seeds = seeds.where(F.col("entity_type") == "Idiom").select("name")
-    word_seeds = seeds.where(F.col("entity_type") == "Word").select("name")
-    idiom_linked, idiom_missing = L.link_seeds_to_pages(
-        idiom_seeds, chengyu_parsed, "parsed.data.chengyu"
-    )
-    word_linked, word_missing = L.link_seeds_to_pages(
-        word_seeds, cidian_parsed, "parsed.data.word"
-    )
+    seeds = seeds.where(
+        F.col("name").isNotNull() & F.col("entity_type").isin("Idiom", "Word")
+    ).select("name", "entity_type")
 
-    terms = _term_frame(idiom_linked, "Idiom", "chengyu").unionByName(
-        _term_frame(word_linked, "Word", "word")
-    )
+    def linked(entity_type: str, parsed: DataFrame, title: str) -> DataFrame:
+        type_seeds = seeds.where(F.col("entity_type") == entity_type).select("name")
+        return L.link_seeds_to_pages(type_seeds, parsed, title)[0]
+
+    terms = term_frame(
+        linked("Idiom", chengyu_parsed, "parsed.data.chengyu"), "Idiom", "chengyu"
+    ).unionByName(term_frame(linked("Word", cidian_parsed, "parsed.data.word"), "Word", "word"))
 
     # ---- hanzi validity (hanyuguoxue.py:1155-1157) -------------------------
     hz = zidian_parsed.select("path", "parsed.*")
@@ -286,9 +280,63 @@ def build_graph(
         # downstream plan compilation pay the full analysis cost on the
         # driver. The checkpoint call itself truncates the plan to a
         # LogicalRDD immediately (eager=False defers only the DATA
-        # materialization, which the barrier jobs below perform).
+        # materialization, which the first job over it performs).
         terms = terms.localCheckpoint(eager=False)
         hz_valid = hz_valid.localCheckpoint(eager=False)
+
+    # seeds no page linked to (the missing_detail_pages population), read
+    # off the terms barrier: an anti-join against the parsed pages would
+    # run their parse UDF again
+    key = L.normalize_title("name").alias("_k")
+    missing = seeds.select("*", key).join(
+        terms.select("entity_type", key), ["entity_type", "_k"], "left_anti"
+    ).select("name", "entity_type")
+    return Staged(terms, hz, hz_valid, seeds, missing)
+
+
+def build_graph(
+    spark: SparkSession,
+    corpus: DataFrame,
+    seeds: DataFrame,
+    run_id: str = "run-1",
+    cache: bool = True,
+    hanzi_dim: DataFrame | None = None,
+    composed_mode: str = "broadcast",
+    full_hanzi_properties: bool = False,
+    full_term_properties: bool = False,
+) -> GraphResult:
+    """``stage_pages`` then ``graph_from_staged``. ``hanzi_dim`` (one
+    ``name`` column) overrides the composed-of dimension (default: the
+    staged valid characters); ``composed_mode`` selects its skew strategy
+    (see kgpipe.triples.composed_of). ``full_hanzi_properties`` (S11 full
+    fidelity) parses and persists ALL seven zidian sections into the
+    Hanzi node properties — matching the reference's per-character
+    section blobs (hanyuguoxue.py:1411-1439); triple derivation is
+    identical in both modes (it reads only basic_info + fanyi_info).
+
+    ``full_term_properties`` is the term-family twin (S9/S10 fidelity):
+    the reference upserts the COMPLETE idiom/word record (explanation,
+    source, usage, example, zhuyin, emotion / definition, part_of_speech,
+    is_common — chengyu_mysql.py:162-221); the default hot path extracts
+    only the triple-bearing fields, so term node ``properties`` JSON
+    carries just those. Triples are identical in both modes."""
+    staged = stage_pages(corpus, seeds, cache, full_hanzi_properties, full_term_properties)
+    return graph_from_staged(staged, run_id, cache, hanzi_dim, composed_mode, full_hanzi_properties)
+
+
+def graph_from_staged(
+    staged: Staged,
+    run_id: str = "run-1",
+    cache: bool = True,
+    hanzi_dim: DataFrame | None = None,
+    composed_mode: str = "broadcast",
+    full_hanzi_properties: bool = False,
+) -> GraphResult:
+    """Graph step: edge families, canonical mapping, triples and the lazy
+    members from staged (or sliced staged) frames. With ``cache`` on,
+    the terms/hz_valid barriers and the mapping job run on threads
+    during plan construction and have finished when this returns."""
+    terms, hz, hz_valid = staged.terms, staged.hz, staged.hz_valid
 
     # variant-of alias edges: one definition feeds the edge family, the
     # Hanzi stubs of its endpoints and the canonicalization mapping
@@ -340,7 +388,7 @@ def build_graph(
         syn_ant = T.undirected_by_name(mentions, F.col("entity_type"))
 
         if hanzi_dim is None:
-            hanzi_dim = hz_valid.select(F.col("basic_info.data.character").alias("name"))
+            hanzi_dim = staged.characters()
         composed = T.composed_of(terms, hanzi_dim, mode=composed_mode)
 
         radicals = hz_valid.select(
@@ -377,23 +425,18 @@ def build_graph(
                 ),
                 empty,
             )
-            guoyu_py = F.coalesce(
-                F.transform(
-                    F.col("guoyu_info.data.main_content"),
-                    lambda c: c["pinyin_info"]["pinyin"],
-                ),
-                empty,
-            )
-            liangan_py = F.coalesce(
-                F.transform(
-                    F.col("liangan_info.data.main_content"),
-                    lambda c: c["pinyin_info"]["pinyin"],
-                ),
-                empty,
-            )
+            guoyu_liangan_py = [
+                F.coalesce(
+                    F.transform(
+                        F.col(f"{section}.data.main_content"), lambda c: c["pinyin_info"]["pinyin"]
+                    ),
+                    empty,
+                )
+                for section in ("guoyu_info", "liangan_info")
+            ]
             section_pinyin = hz_valid.select(
                 F.col("basic_info.data.character").alias("src_name"),
-                F.explode(F.concat(yisi_py, guoyu_py, liangan_py)).alias("py"),
+                F.explode(F.concat(yisi_py, *guoyu_liangan_py)).alias("py"),
                 F.col("path").alias("lineage"),
             ).where(F.col("py").isNotNull() & (F.length("py") > 0))
             hz_pinyin = hz_pinyin.unionByName(section_pinyin)
@@ -476,11 +519,6 @@ def build_graph(
             F.coalesce(F.col("error"), F.col("basic_info.error")).alias("error"),
         )
 
-    def _make_missing() -> DataFrame:
-        return idiom_missing.withColumn("entity_type", F.lit("Idiom")).unionByName(
-            word_missing.withColumn("entity_type", F.lit("Word"))
-        )
-
     # ---- nodes (LAZY plan construction, round 8) ---------------------------
     # Every edge endpoint gets a node row: crawled pages as full records,
     # everything else (mentions, variant characters, radicals, pinyin and
@@ -502,7 +540,7 @@ def build_graph(
         # node properties: basic_info only on the hot path; every parsed
         # section in full-fidelity mode (the reference's section blobs,
         # hanyuguoxue.py:1411-1439)
-        prop_sections = hanzi_sections if full_hanzi_properties else ("basic_info",)
+        prop_sections = ALL_HANZI_SECTIONS if full_hanzi_properties else ("basic_info",)
         prop_cols = [F.col(s) for s in prop_sections] + [F.col("unicode_decimal")]
         hanzi_nodes = hz_valid.select(
             node_id(F.lit("Hanzi"), F.col("basic_info.data.character")).alias("node_id"),
@@ -580,12 +618,15 @@ def build_graph(
         edges if mapping() is None else _Memo(lambda: _rewrite_dedup(edges(), mapping()))
     )
 
+    def count_of(frame: DataFrame, entity_type: str) -> _Memo:
+        return _Memo(frame.where(F.col("entity_type") == entity_type).count)
+
     # lazy: each count is a job; callers that don't need metrics pay nothing
     family_counts = {
-        "idiom_seeds": _Memo(idiom_seeds.count),
-        "word_seeds": _Memo(word_seeds.count),
-        "idiom_missing": _Memo(idiom_missing.count),
-        "word_missing": _Memo(word_missing.count),
+        "idiom_seeds": count_of(staged.seeds, "Idiom"),
+        "word_seeds": count_of(staged.seeds, "Word"),
+        "idiom_missing": count_of(staged.missing, "Idiom"),
+        "word_missing": count_of(staged.missing, "Word"),
         "hanzi_pages": _Memo(hz.count),
         "hanzi_valid": hz_count,
     }
@@ -594,7 +635,7 @@ def build_graph(
         edges=edges,
         edges_canonical=edges_canonical,
         triples=triples,
-        missing=_Memo(_make_missing),
+        missing=lambda: staged.missing,
         errors=_Memo(_make_errors),
         family_counts=family_counts,
     )

@@ -20,13 +20,18 @@ sink idempotent (replayed micro-batches re-merge to the same result).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgpipe import link as L
+from kgpipe import schemas
 from kgpipe import triples as T
-from kgpipe.parse.udfs import parse_chengyu_udf, parse_ciyu_udf
+from kgpipe.materialize import SnapshotTable, Warehouse
+from kgpipe.pipeline import graph_from_staged, parse_term_pages, stage_pages, term_frame
 from kgpipe.schemas import CORPUS_SCHEMA
+from kgpipe.session import free_cached_since, persistent_rdd_ids
 
 
 def stream_corpus(spark: SparkSession, source_dir: str) -> DataFrame:
@@ -45,26 +50,15 @@ def streaming_mention_edges(corpus_stream: DataFrame) -> DataFrame:
     global dedup happens at the merge sink (idempotent insert_ignore), so
     no streaming state is held here.
     """
-    chengyu = corpus_stream.where(F.col("path").startswith("chengyu/")).withColumn(
-        "parsed", parse_chengyu_udf("content", "path")
+    # no seeds here: the page title alone names the term
+    chengyu, cidian = (
+        p.withColumn("name", F.lit(None).cast("string")) for p in parse_term_pages(corpus_stream)
     )
-    cidian = corpus_stream.where(F.col("path").startswith("cidian/")).withColumn(
-        "parsed", parse_ciyu_udf("content", "path")
-    )
-
-    def mentions(parsed: DataFrame, name_field: str, entity_type: str) -> DataFrame:
-        base = parsed.select(
-            F.col(f"parsed.data.{name_field}").alias("name"),
-            F.coalesce(F.col("parsed.data.synonyms"), F.array()).alias("synonyms"),
-            F.coalesce(F.col("parsed.data.antonyms"), F.array()).alias("antonyms"),
-            "path",
-        ).where(F.col("name").isNotNull())
-        m = L.extract_mentions(base, "name", "synonyms", "antonyms")
-        return T.undirected_by_name(m, entity_type)
-
-    return mentions(chengyu, "chengyu", "Idiom").unionByName(
-        mentions(cidian, "word", "Word")
-    )
+    terms = term_frame(chengyu, "Idiom", "chengyu").unionByName(
+        term_frame(cidian, "Word", "word")
+    ).where(F.col("name").isNotNull())
+    m = L.extract_mentions(terms, "name", "synonyms", "antonyms", carry_cols=("entity_type",))
+    return T.undirected_by_name(m, F.col("entity_type"))
 
 
 def streaming_windowed_metrics(
@@ -159,7 +153,7 @@ def run_graph_stream(
     """Full-graph streaming ingest: every edge family, not just mentions.
 
     Each micro-batch IS the batch pipeline applied to the arriving pages
-    (build_graph) followed by the same idempotent warehouse merges the
+    (build_graph's parse and graph steps) followed by the same idempotent warehouse merges the
     bucket runner uses — streaming mode and incremental mode are the one
     code path driven by different arrival orders.
 
@@ -168,10 +162,12 @@ def run_graph_stream(
     the DB): the dimension for a micro-batch is the dedicated hanzi_dim
     table — seeded once from the warehouse's crawled Hanzi nodes when it
     is empty but nodes exist (a warehouse populated by the batch runner,
-    or by a stream run that predates hanzi_dim) — UNION the batch's own
-    valid characters. A term page that arrives before its characters
-    misses those edges exactly as the reference's crawler does;
-    re-driving the term (retry / new run) picks them up.
+    or by a stream run that predates hanzi_dim) — UNION the valid
+    characters of the batch's staging, which the graph step reads too,
+    so each page is parsed once per micro-batch. A term page that
+    arrives before its characters misses those edges exactly as the
+    reference's crawler does; re-driving the term (retry / new run)
+    picks them up.
 
     Drain → finalize contract: the per-batch merges record RAW edges;
     global variant-cluster canonicalization needs the COMPLETE edge set
@@ -183,16 +179,6 @@ def run_graph_stream(
     test_full_graph_stream_matches_batch isolates a chain head in its own
     micro-batch).
     """
-    import os
-
-    from pyspark.sql import functions as _F
-
-    from kgpipe import schemas
-    from kgpipe.materialize import SnapshotTable, Warehouse
-    from kgpipe.parse.udfs import make_parse_hanzi_udf
-    from kgpipe.pipeline import build_graph
-    from kgpipe.session import free_cached_since, persistent_rdd_ids
-
     wh = Warehouse(warehouse_root)
     # Incremental composed-of dimension: a dedicated append-only snapshot
     # table of crawled Hanzi names. Re-reading the full nodes table per
@@ -213,42 +199,35 @@ def run_graph_stream(
     if hanzi_dim_table.read(spark).first() is None:
         crawled_hanzi = (
             wh.nodes.read(spark)
-            .where((_F.col("entity_type") == "Hanzi") & _F.col("crawled"))
+            .where((F.col("entity_type") == "Hanzi") & F.col("crawled"))
             .select("name")
             .distinct()
         )
         if crawled_hanzi.first() is not None:
             hanzi_dim_table.append(crawled_hanzi)
-    parse_basic = make_parse_hanzi_udf(("basic_info",))
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        # per-batch cache hygiene: build_graph pins localCheckpoint/persist
-        # blocks; release them after the merges or a long stream grows the
-        # block store unboundedly (same fix as the bucket runner)
+        # per-batch cache hygiene: the staging and the graph step pin
+        # localCheckpoint/persist blocks; release them after the merges or
+        # a long stream grows the block store unboundedly (same fix as
+        # the bucket runner)
         keep_rdds = persistent_rdd_ids(spark.sparkContext)
-        batch_df = batch_df.dropDuplicates(["path"])
-        known = hanzi_dim_table.read(spark)
-        batch_chars = (
-            batch_df.where(_F.col("path").startswith("zidian/"))
-            .select(parse_basic("content", "path").alias("p"))
-            .where(
-                _F.col("p.error").isNull()
-                & _F.col("p.basic_info.data.character").isNotNull()
-            )
-            .select(_F.col("p.basic_info.data.character").alias("name"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        dim = known.unionByName(batch_chars).distinct()
-        g = build_graph(
-            spark, batch_df, seeds, run_id=f"stream-{batch_id}", hanzi_dim=dim,
+        staged = stage_pages(
+            batch_df.dropDuplicates(["path"]), seeds,
             full_hanzi_properties=full_hanzi_properties,
             full_term_properties=full_term_properties,
+        )
+        known = hanzi_dim_table.read(spark)
+        batch_chars = staged.characters().distinct()
+        g = graph_from_staged(
+            staged, run_id=f"stream-{batch_id}",
+            hanzi_dim=known.unionByName(batch_chars).distinct(),
+            full_hanzi_properties=full_hanzi_properties,
         )
         wh.nodes.merge_best(
             g.nodes,
             keys=["node_id"],
-            priority=[_F.col("crawled").desc(), _F.col("url").asc_nulls_last()],
+            priority=[F.col("crawled").desc(), F.col("url").asc_nulls_last()],
         )
         wh.edges.insert_ignore(
             g.edges, keys=["src_id", "dst_id", "rel_type"], order_by=["src_name"]
@@ -281,8 +260,6 @@ def run_stream_to_warehouse(
 ) -> None:
     """availableNow streaming run: drain the source, merge each micro-batch
     idempotently into the edges snapshot table, stop."""
-    from kgpipe.materialize import Warehouse
-
     wh = Warehouse(warehouse_root)
     edges_stream = streaming_mention_edges(stream_corpus(spark, source_dir))
 

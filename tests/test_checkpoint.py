@@ -517,3 +517,91 @@ def test_merge_best_null_priority_replay_consistent(spark, tmp_path):
         "(SELECT true AS crawled, CAST(NULL AS STRING) AS url) t"
     ).first().b
     assert beats is True
+
+
+def _bucket_by_key(spark, keys, n_buckets):
+    """The runner's bucket of each key: a term page path buckets on its
+    normalized slug, a zidian path on itself, a seed name normalized."""
+    from kgpipe.checkpoint import bucket_of
+    from kgpipe.link import normalize_title
+
+    k = F.col("k")
+    key = F.when(
+        k.rlike("^(chengyu|cidian)/"), normalize_title(F.element_at(F.split(k, "/"), 2))
+    ).otherwise(F.when(k.startswith("zidian/"), k).otherwise(normalize_title(k)))
+    df = spark.createDataFrame([(x,) for x in keys], "k string")
+    return {r.k: r.b for r in df.select("k", bucket_of(key, n_buckets).alias("b")).collect()}
+
+
+@pytest.mark.slow
+def test_run_parses_each_page_once(spark, frames, parse_log, tmp_path):
+    """One incremental run feeds every page through its parse UDF exactly
+    once: the composed-of dimension and every bucket read one staging."""
+    cdf, sdf = frames
+    run_incremental(spark, cdf, sdf, str(tmp_path / "wh"), n_buckets=3)
+    pages = [r.path for r in cdf.select("path").collect()]
+    assert parse_log() == {p: 1 for p in pages}
+
+
+@pytest.mark.slow
+def test_resume_parses_only_pending_term_pages(spark, frames, parse_log, tmp_path):
+    """A resume parses every zidian page once (the dimension is global)
+    and, of the term pages, only the pending buckets' — once each."""
+    cdf, sdf = frames
+    root = str(tmp_path / "wh")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_incremental(spark, cdf, sdf, root, n_buckets=3, fail_buckets={1})
+    assert pending_units(Warehouse(root), spark, 3) == [1, 2]
+    bucket = _bucket_by_key(spark, [r.path for r in cdf.select("path").collect()], 3)
+    # the done bucket 0 holds term pages, which the resume must skip
+    assert any(b == 0 for p, b in bucket.items() if not p.startswith("zidian/"))
+    before = parse_log()
+    run_incremental(spark, cdf, sdf, root, n_buckets=3)
+    expected = {p: 1 for p, b in bucket.items() if p.startswith("zidian/") or b in (1, 2)}
+    assert parse_log() - before == expected
+
+
+@pytest.mark.slow
+def test_run_releases_its_pins(spark, frames, tmp_path):
+    """run_incremental leaves no cached block behind — neither its
+    staging nor a bucket's frames — on return and on an injected
+    failure."""
+    from kgpipe.session import persistent_rdd_ids
+
+    cdf, sdf = frames
+    sc = spark.sparkContext
+    entry = persistent_rdd_ids(sc)
+    run_incremental(spark, cdf, sdf, str(tmp_path / "wh"), n_buckets=3)
+    assert persistent_rdd_ids(sc) <= entry
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_incremental(spark, cdf, sdf, str(tmp_path / "whf"), n_buckets=3, fail_buckets={1})
+    assert persistent_rdd_ids(sc) <= entry
+
+
+@pytest.mark.slow
+def test_seed_links_to_page_in_another_bucket(spark, small_corpus, tmp_path):
+    """A chengyu page whose path slug differs from its <h1> title can
+    hash to another bucket than its seed. The runner links the seed
+    anyway, like the single-shot pipeline: same triples, same missing
+    seeds."""
+    from kgpipe.schemas import CORPUS_SCHEMA, SEED_SCHEMA
+
+    # a page whose <h1> equals its slug, so its seed links in the fixture
+    page = next(
+        r for r in small_corpus.rows
+        if r["path"].startswith("chengyu/") and f"<h1>{r['path'][8:]}</h1>" in r["content"]
+    )
+    name = page["path"][8:]
+    candidates = [f"chengyu/{name}-{i}" for i in range(20)]
+    bucket = _bucket_by_key(spark, [name, *candidates], 3)
+    path = next(c for c in candidates if bucket[c] != bucket[name])
+    assert bucket[path] != bucket[name]  # page and seed bucket apart
+    rows = [{**r, "path": path} if r is page else r for r in small_corpus.rows]
+    cdf = spark.createDataFrame(rows, CORPUS_SCHEMA)
+    sdf = spark.createDataFrame(small_corpus.seeds, SEED_SCHEMA)
+
+    wh = run_incremental(spark, cdf, sdf, str(tmp_path / "wh"), n_buckets=3)
+    single = build_graph(spark, cdf, sdf)
+    assert _triples(wh, spark) == {(r.subj, r.pred, r.obj) for r in single.triples.collect()}
+    missing = wh.run_metrics.read(spark).agg(F.sum("missing_detail_pages")).first()[0]
+    assert missing == single.missing.count()

@@ -454,6 +454,22 @@ def test_stream_seeds_hanzi_dim_from_preexisting_warehouse(
     assert composed.count() > 0  # dim was seeded from wh.nodes, not empty
 
 
+@pytest.mark.slow
+def test_graph_stream_parses_each_page_once(spark, small_corpus, parse_log, tmp_path):
+    """Each micro-batch is staged once: its composed-of characters and
+    its graph read the same parse, so every page goes through its parse
+    UDF exactly once over the drained stream."""
+    from kgpipe.streaming import run_graph_stream
+
+    cdf, sdf = corpus_to_dataframes(spark, small_corpus)
+    src = str(tmp_path / "src")
+    cdf.coalesce(3).write.parquet(src)
+    run_graph_stream(
+        spark, src, sdf, str(tmp_path / "wh"), str(tmp_path / "ck"), max_files_per_trigger=1
+    )
+    assert parse_log() == {r.path: 1 for r in cdf.select("path").collect()}
+
+
 def test_stateful_streaming_dedup_across_batches(spark, tmp_path):
     """applyInPandasWithState first-occurrence filter: a key replayed in a
     LATER micro-batch must be suppressed by the state store (not by
