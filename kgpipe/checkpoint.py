@@ -18,7 +18,9 @@ metrics rows (:342-366) — maps onto:
     (T3's replay-idempotence without row-level intent logging);
   * metrics          = one run_metrics row per unit in the reference's
     exact column vocabulary incl. termination_reason values
-    (README.md:50-56).
+    (README.md:50-56). The input counts of every unit come from one
+    per-run tally job, the output counts from observations on the
+    merges' own jobs — no count job per unit.
 """
 
 from __future__ import annotations
@@ -26,8 +28,9 @@ from __future__ import annotations
 import json
 import time
 from datetime import datetime, timezone
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from kgpipe.link import normalize_title
@@ -57,6 +60,8 @@ def pending_units(
     differs from the requested one fails loudly — silently reusing
     bucket indices under a different modulus would skip rows forever.
     """
+    if wh.checkpoints.current_version() is None:  # nothing ever committed
+        return list(range(n_buckets))
     rows = wh.checkpoints.read(spark).where(F.col("status") == "done")
     if run_id is not None:
         rows = rows.where(F.col("run_id") == run_id)
@@ -177,6 +182,18 @@ def run_incremental(
             )
             hanzi_dim = staged.characters()
             composed_mode = "salted" if hanzi_dim.count() > SALTED_DIM_THRESHOLD else "broadcast"
+            # one job counts every bucket's inputs, keyed (bucket, kind):
+            # corpus rows, seeds, seeds without a page, failed zidian pages
+            tally = reduce(DataFrame.unionByName, (
+                df.select(b.alias("b"), F.lit(kind).alias("kind"))
+                for df, b, kind in (
+                    (corpus, page_bucket, "rows_in"),
+                    (staged.seeds, seed_bucket, "processed"),
+                    (staged.missing, seed_bucket, "missing"),
+                    (staged.failed_pages(), page_bucket, "fail"),
+                )
+            ))
+            counts = {(r.b, r.kind): r["count"] for r in tally.groupBy("b", "kind").count().collect()}
             keep_staged = persistent_rdd_ids(sc)
         for bucket in pending:
             t0 = time.time()
@@ -189,26 +206,26 @@ def run_incremental(
                 run_id=run_id, hanzi_dim=hanzi_dim, composed_mode=composed_mode,
                 full_hanzi_properties=full_hanzi_properties,
             )
-            rows_in = corpus.where(in_page).count()
-            nodes_n = g.nodes.count()
-            edges_n = g.edges.count()
-            counts = g.family_counts
-            processed = counts["idiom_seeds"]() + counts["word_seeds"]()
-            missing = counts["idiom_missing"]() + counts["word_missing"]()
-            fail = g.errors.count()
+            rows_in, processed, missing, fail = (
+                counts.get((bucket, kind), 0) for kind in ("rows_in", "processed", "missing", "fail")
+            )
             success = processed - missing
 
             # data first, checkpoint last: a crash between the two only
             # means the unit re-runs, and every merge below is idempotent
             # (T3). nodes use order-independent priority (crawled beats
-            # stub no matter which bucket commits first)
+            # stub no matter which bucket commits first). The output
+            # counts ride on the merges' own jobs: an Observation keeps
+            # the first action's row count over the frame handed in
+            nodes_obs, edges_obs = Observation(), Observation()
             wh.nodes.merge_best(
-                g.nodes,
+                g.nodes.observe(nodes_obs, F.count(F.lit(1)).alias("n")),
                 keys=["node_id"],
                 priority=[F.col("crawled").desc(), F.col("url").asc_nulls_last()],
             )
             wh.edges.insert_ignore(
-                g.edges, keys=["src_id", "dst_id", "rel_type"], order_by=["src_name"]
+                g.edges.observe(edges_obs, F.count(F.lit(1)).alias("n")),
+                keys=["src_id", "dst_id", "rel_type"], order_by=["src_name"],
             )
             if fail > 0:
                 wh.errors.append(g.errors)
@@ -251,8 +268,8 @@ def run_incremental(
                 "partition_key": f"{run_id}-bucket-{bucket}",
                 "status": "done",
                 "rows_in": rows_in,
-                "nodes_out": nodes_n,
-                "edges_out": edges_n,
+                "nodes_out": nodes_obs.get["n"],
+                "edges_out": edges_obs.get["n"],
                 "lineage": json.dumps(
                     {
                         "bucket": bucket,
@@ -293,9 +310,7 @@ def run_incremental(
 
 def finalize(wh: Warehouse, spark: SparkSession):
     """Global post-merge view: canonical edges + name-level triples from
-    the accumulated warehouse tables (canonicalization must see the whole
+    the accumulated edges table (canonicalization must see the whole
     variant graph, so it cannot run per bucket)."""
-    nodes = wh.nodes.read(spark)
-    edges = wh.edges.read(spark)
-    edges_canonical = canonicalize_edges(edges, nodes)
+    edges_canonical = canonicalize_edges(wh.edges.read(spark))
     return edges_canonical, triples_view(edges_canonical)

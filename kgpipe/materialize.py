@@ -28,6 +28,13 @@ Commit cost is O(delta), not O(table):
     only the buckets the incoming batch collides with; files of
     untouched buckets carry over by reference.
 
+Layout: a hash-bucketed table's write is clustered by its table bucket
+(``kb``) before ``partitionBy("kb")`` — Iceberg's hash distribution
+mode — so one commit adds at most one data file per bucket (AQE may
+still split a skewed bucket). Against an empty table the merges skip
+their merge work: no bucket-membership collect, no current-key scan,
+no anti-join.
+
 On a real deployment every call here maps 1:1 onto an Iceberg operation:
 ``merge_best/merge_upsert`` → ``MERGE INTO`` (with the same
 bucket-partition pruning), ``append`` → append snapshot, ``read`` →
@@ -121,6 +128,23 @@ def _dedup_source_sql(keys: list[str], terms: list[tuple[str, str]]) -> str:
         "(SELECT * FROM (SELECT src.*, row_number() OVER ("
         f"PARTITION BY {', '.join(keys)} ORDER BY {_order_sql(terms)}"
         ") AS _rn FROM incoming_batch src) WHERE _rn = 1) s"
+    )
+
+
+def _dedup_first(df: DataFrame, keys: list[str], order_by: list[str]) -> DataFrame:
+    """One row per key: the first by ``order_by`` ASC NULLS LAST, the
+    remaining columns breaking ties. The ``min``-over-struct aggregate of
+    ``triples.dedup_edges``: it elects the row ``_dedup_source_sql``'s
+    window elects wherever ``order_by`` leaves no tie."""
+    rest = [c for c in df.columns if c not in keys and c not in order_by]
+    nulls_last = [
+        f for i, c in enumerate(order_by)
+        for f in (F.col(c).isNull().alias(f"_null{i}"), F.col(c))
+    ]
+    return (
+        df.groupBy(*keys)
+        .agg(F.min(F.struct(*nulls_last, *rest)).alias("_w"))
+        .select(*[c if c in keys else F.col(f"_w.{c}").alias(c) for c in df.columns])
     )
 
 
@@ -238,8 +262,11 @@ class SnapshotTable:
         prune to colliding buckets."""
         target = os.path.join(self.path, "data", f"c{uuid.uuid4().hex[:12]}")
         if self.bucket_keys:
+            # clustered by kb: one file per table bucket, not one per
+            # (task, bucket) pair
             (
                 df.withColumn("kb", self._bucket_col())
+                .hint("rebalance", "kb")
                 .write.partitionBy("kb")
                 .parquet(target)
             )
@@ -259,7 +286,8 @@ class SnapshotTable:
 
     def _read_files(self, spark: SparkSession, entries: list[dict]) -> DataFrame:
         if not entries:
-            return spark.createDataFrame([], self.schema)
+            # zero partitions: a job over it launches no task
+            return spark.createDataFrame(spark.sparkContext.emptyRDD(), self.schema)
         return spark.read.schema(self.schema).parquet(*[e["path"] for e in entries])
 
     # -- operations ---------------------------------------------------------
@@ -276,9 +304,9 @@ class SnapshotTable:
     def _affected(self, incoming: DataFrame) -> tuple[list[dict], list[dict]]:
         """Split current files into (colliding-bucket, untouched-bucket)
         by the incoming batch's bucket membership (one tiny collect of at
-        most n_buckets values)."""
+        most n_buckets values; none when the table is empty)."""
         current = self.manifest()
-        if not self.bucket_keys:
+        if not self.bucket_keys or not current:
             return current, []
         hit = {
             r.kb
@@ -300,18 +328,12 @@ class SnapshotTable:
             f"MERGE INTO {self.name} t USING {_dedup_source_sql(keys, terms)} "
             f"ON {on} WHEN NOT MATCHED THEN INSERT *"
         )
-        spark = df.sparkSession
-        w = Window.partitionBy(*keys).orderBy(
-            *[F.col(c).asc_nulls_last() for c in order_by]
-        )
-        incoming = (
-            df.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        incoming = _dedup_first(df, keys, order_by)
         touched, untouched = self._affected(incoming)
-        current_keys = self._read_files(spark, touched).select(*keys)
-        delta = incoming.join(current_keys, keys, "left_anti")
+        delta = incoming
+        if touched:
+            current_keys = self._read_files(df.sparkSession, touched).select(*keys)
+            delta = incoming.join(current_keys, keys, "left_anti")
         return self._commit(touched + untouched + self._write_data(delta))
 
     def _merge_rewrite(

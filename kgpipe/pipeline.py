@@ -94,7 +94,8 @@ class _Memo:
 
 class GraphResult:
     """Graph-construction result. ``triples`` is a frame and
-    ``family_counts`` maps each name to a count memo; the other members
+    ``family_counts`` maps ``hanzi_pages`` (parsed zidian rows) to a count
+    memo (the runner counts its inputs in one per-run job); the other members
     are memos built on first read (round 8: plan construction is serial
     py4j driver work — ~2.5k round-trips per build_graph, ~1.7s measured
     — and the flagship triples path never reads nodes/edges/
@@ -121,16 +122,17 @@ class GraphResult:
         return member()
 
 
-def canonicalize_edges(edges: DataFrame, nodes: DataFrame = None) -> DataFrame:
+def canonicalize_edges(edges: DataFrame) -> DataFrame:
     """Global alias canonicalization: CC over variant-of edges, endpoint
     rewrite, re-dedup. Must run over the *complete* edge set (variant
     clusters can span work-unit boundaries), which is why the runner
     calls this after all buckets merge, not per bucket.
 
-    ``nodes`` is the optional (node_id, name) lookup for the winner
-    election; None derives it from the variant edges themselves. The
-    runner passes its already-materialized warehouse nodes."""
-    mapping = canonical_mapping(edges.where(F.col("rel_type") == "variant-of"), nodes)
+    The winner election's (node_id, name) lookup derives from the
+    variant edges themselves, so a graph that fits the driver is solved
+    by one collect, a driver union-find and election, and comes back as
+    a local mapping frame."""
+    mapping = canonical_mapping(edges.where(F.col("rel_type") == "variant-of"))
     if mapping is None:  # no alias graph
         return edges
     return _rewrite_dedup(edges, mapping)
@@ -227,6 +229,13 @@ class Staged(NamedTuple):
         """The valid characters: one ``name`` row per zidian page that
         passed the validity gate — the composed-of dimension."""
         return self.hz_valid.select(F.col("basic_info.data.character").alias("name"))
+
+    def failed_pages(self) -> DataFrame:
+        """The zidian rows that failed the validity gate — the errors
+        table population."""
+        return self.hz.where(
+            F.col("error").isNotNull() | F.col("basic_info.data.character").isNull()
+        )
 
 
 def stage_pages(
@@ -360,7 +369,6 @@ def graph_from_staged(
     # election's name lookup derives from the variant edges themselves,
     # keeping the node pipeline off the flagship path.
     mapping = _Memo(lambda: canonical_mapping(variant_edges))
-    hz_count = _Memo(hz_valid.count)
 
     # Round 8: with caching on, both barriers and the mapping job run on
     # background threads while this thread constructs every downstream
@@ -372,7 +380,7 @@ def graph_from_staged(
     # hides under the terms barrier. Each join point is a plain memo
     # call; if plan construction raises, the threads are still joined
     # before the error leaves, so no barrier job outlives build_graph.
-    barriers = [_Memo(terms.count), hz_count, mapping] if cache else []
+    barriers = [_Memo(terms.count), _Memo(hz_valid.count), mapping] if cache else []
     threads = [threading.Thread(target=m, name="kg-barrier", daemon=True) for m in barriers]
     for t in threads:
         t.start()
@@ -510,9 +518,7 @@ def graph_from_staged(
         m()
 
     def _make_errors() -> DataFrame:
-        return hz.where(
-            F.col("error").isNotNull() | F.col("basic_info.data.character").isNull()
-        ).select(
+        return staged.failed_pages().select(
             F.lit(run_id).alias("run_id"),
             F.lit("zidian").alias("partition_key"),
             F.col("path").alias("key"),
@@ -618,18 +624,6 @@ def graph_from_staged(
         edges if mapping() is None else _Memo(lambda: _rewrite_dedup(edges(), mapping()))
     )
 
-    def count_of(frame: DataFrame, entity_type: str) -> _Memo:
-        return _Memo(frame.where(F.col("entity_type") == entity_type).count)
-
-    # lazy: each count is a job; callers that don't need metrics pay nothing
-    family_counts = {
-        "idiom_seeds": count_of(staged.seeds, "Idiom"),
-        "word_seeds": count_of(staged.seeds, "Word"),
-        "idiom_missing": count_of(staged.missing, "Idiom"),
-        "word_missing": count_of(staged.missing, "Word"),
-        "hanzi_pages": _Memo(hz.count),
-        "hanzi_valid": hz_count,
-    }
     return GraphResult(
         nodes=_Memo(_make_nodes),
         edges=edges,
@@ -637,5 +631,5 @@ def graph_from_staged(
         triples=triples,
         missing=lambda: staged.missing,
         errors=_Memo(_make_errors),
-        family_counts=family_counts,
+        family_counts={"hanzi_pages": _Memo(hz.count)},
     )

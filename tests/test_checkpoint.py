@@ -605,3 +605,110 @@ def test_seed_links_to_page_in_another_bucket(spark, small_corpus, tmp_path):
     assert _triples(wh, spark) == {(r.subj, r.pred, r.obj) for r in single.triples.collect()}
     missing = wh.run_metrics.read(spark).agg(F.sum("missing_detail_pages")).first()[0]
     assert missing == single.missing.count()
+
+
+def test_insert_ignore_dedup_matches_sql_window(spark):
+    """insert_ignore dedups its batch with a min-over-struct aggregate;
+    its MERGE statement (sql_log) keeps the row_number() window. Over
+    batches with duplicate keys and NULL or tied order_by values, the
+    aggregate must elect a row the window ranks first, the window's own
+    row wherever the ordering leaves no tie, and the same rows at 1 and
+    8 input partitions."""
+    import random
+
+    from kgpipe.materialize import _dedup_first, _dedup_source_sql, _order_terms
+
+    keys, order_by = ["k1", "k2"], ["o"]
+    schema = "k1 int, k2 string, o int, p string, q long"
+    sql = f"SELECT * FROM {_dedup_source_sql(keys, _order_terms(order_by))}"
+
+    def rows_of(df):
+        return sorted((tuple(r) for r in df.collect()), key=repr)
+
+    rng = random.Random(7)
+    for trial in range(8):
+        tie_free = trial % 2 == 0
+        rows = []
+        for k1 in range(3):
+            for k2 in ("a", "b", None):
+                # tie-free batches: distinct order values per key, one NULL at most
+                values = rng.sample([None, 0, 1, 2, 3], rng.randint(1, 4)) if tie_free else [
+                    rng.choice([None, None, 0, 1]) for _ in range(rng.randint(1, 5))
+                ]
+                rows += [
+                    (k1, k2, o, rng.choice([None, "x", "y"]), rng.randrange(3))
+                    for o in values
+                ]
+        batch = spark.createDataFrame(rows, schema)
+        batch.createOrReplaceTempView("incoming_batch")
+        window = {(r.k1, r.k2): tuple(r) for r in spark.sql(sql).drop("_rn").collect()}
+        agg = rows_of(_dedup_first(batch.repartition(1), keys, order_by))
+        assert agg == rows_of(_dedup_first(batch.repartition(8), keys, order_by))
+        assert len(agg) == len(window) and {r[:2] for r in agg} == set(window)
+        for r in agg:
+            assert r in rows
+            group = [x for x in rows if x[:2] == r[:2]]
+            assert r[2] == window[r[:2]][2]  # both rank the same order value first
+            if sum(x[2] == r[2] for x in group) == 1:
+                assert r == window[r[:2]]
+        if tie_free:
+            assert agg == sorted(window.values(), key=repr)
+
+
+#: the checkpoint rows (bucket, rows_in, nodes_out, edges_out) and the
+#: run_metrics rows (batch_idx, processed, success, fail, missing,
+#: termination_reason) of run_incremental(n_buckets=3) on small_corpus
+SMALL_CORPUS_CHECKPOINTS = [(0, 22, 79, 104), (1, 20, 89, 109), (2, 26, 95, 126)]
+SMALL_CORPUS_METRICS = [
+    (0, 18, 16, 0, 2, "batch_completed"),
+    (1, 12, 12, 0, 0, "batch_completed"),
+    (2, 21, 19, 0, 2, "all_done"),
+]
+
+
+def _unit_rows(wh, spark):
+    import json
+
+    checkpoints = sorted(
+        (json.loads(r.lineage)["bucket"], r.rows_in, r.nodes_out, r.edges_out)
+        for r in wh.checkpoints.read(spark).collect()
+    )
+    metrics = sorted(
+        (r.batch_idx, r.processed, r.success, r.fail, r.missing_detail_pages,
+         r.termination_reason)
+        for r in wh.run_metrics.read(spark).collect()
+    )
+    return checkpoints, metrics
+
+
+@pytest.mark.slow
+def test_commits_write_one_file_per_table_bucket(spark, frames, tmp_path):
+    """Each commit to nodes and edges adds at most one data file per
+    table bucket, and folding the unit counts into the per-run tally
+    and the merges' observations keeps every checkpoint and metrics
+    row."""
+    cdf, sdf = frames
+    wh = run_incremental(spark, cdf, sdf, str(tmp_path / "wh"), n_buckets=3)
+    for table in (wh.nodes, wh.edges):
+        seen: set = set()
+        for v in range(1, table.current_version() + 1):
+            files = {e["path"] for e in table.manifest(v)}
+            assert len(files - seen) <= table.n_buckets, (table.name, v, len(files - seen))
+            seen |= files
+    assert _unit_rows(wh, spark) == (SMALL_CORPUS_CHECKPOINTS, SMALL_CORPUS_METRICS)
+
+
+@pytest.mark.slow
+def test_resume_keeps_unit_counts(spark, frames, tmp_path):
+    """A resume re-runs the interrupted bucket against a non-empty table,
+    where each merge reads its observed frame twice: the counts must
+    still be the clean run's."""
+    cdf, sdf = frames
+    root = str(tmp_path / "wh")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_incremental(spark, cdf, sdf, root, n_buckets=3, fail_buckets={1})
+    wh = run_incremental(spark, cdf, sdf, root, n_buckets=3)
+    checkpoints, metrics = _unit_rows(wh, spark)
+    assert checkpoints == SMALL_CORPUS_CHECKPOINTS
+    interrupted = (1, 12, 12, 0, 0, "manual_exit")
+    assert metrics == sorted(SMALL_CORPUS_METRICS + [interrupted])
