@@ -97,12 +97,14 @@ def main() -> None:
     from kgpipe.pipeline import build_graph
     from kgpipe.queries import QUERIES
     from kgpipe.session import get_spark
+    from perfbench.probes import Contention
 
     # host-load discipline (BENCH.md round-5 reconciliation): a busy host
     # silently corrupts local[N] numbers by +-55%, so every artifact
-    # records the 1-min load average at start and end — drift questions
-    # close by reading the artifact instead of re-running
-    load_start = round(os.getloadavg()[0], 2)
+    # records the load average plus the CPU time taken by other processes
+    # and by the hypervisor (steal) over the run — drift questions close
+    # by reading the artifact instead of re-running
+    contention = Contention()
 
     spark = get_spark(app_name="kgpipe-bench", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
@@ -199,6 +201,7 @@ def main() -> None:
 
     total = round(sum(timings.values()), 3)
     load_end = round(os.getloadavg()[0], 2)
+    host = contention.finish()
     result = {
         "metric": "headline_suite_sec",
         "value": total,
@@ -208,13 +211,10 @@ def main() -> None:
         "kg_triples": n_triples,
         "kg_triples_per_sec": round(n_triples / kg_sec, 1) if kg_sec > 0 else None,
         "cores": cpus,
-        "load_1m_start": load_start,
+        "load_1m_start": host["load_1m_start"],
+        "foreign_cpu_s": round(host["foreign_cpu_s"], 2),
+        "steal_s": round(host["steal_s"], 2),
         "load_1m_end": load_end,
-        # a busy host silently corrupts local[N] numbers by +-55%
-        # (BENCH.md round-5 reconciliation; the r06 driver artifact ran
-        # at load 25.7/32) — flag it loudly so no reader has to do
-        # BENCH.md archaeology to discount a number
-        "contended": load_start > cpus / 8 or load_end > cpus / 2,
         # protocol provenance (round-6 ADVICE): every timed number above
         # is min-of-N with the raw passes recorded, so cross-round
         # comparisons can tell which protocol produced each figure

@@ -22,6 +22,20 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from kgpipe.session import local_frame
+
+_MAPPING_SCHEMA = StructType(
+    [
+        StructField("node_id", LongType()),
+        StructField("canonical_id", LongType()),
+        StructField("canonical_name", StringType()),
+    ]
+)
+_COMPONENT_SCHEMA = StructType(
+    [StructField("node_id", LongType()), StructField("component_id", LongType())]
+)
 
 
 def connected_components(
@@ -194,14 +208,8 @@ def canonical_mapping(
                 cid = min(comp_nodes, key=lambda nid: (name_of[nid], nid))
                 cname = name_of[cid]
                 mapping_rows.extend((nid, cid, cname) for nid in comp_nodes)
-            return spark.createDataFrame(
-                mapping_rows,
-                "node_id long, canonical_id long, canonical_name string",
-            )
-        comp = spark.createDataFrame(
-            [(node, find(node)) for node in parent],
-            "node_id long, component_id long",
-        )
+            return local_frame(spark, mapping_rows, _MAPPING_SCHEMA)
+        comp = local_frame(spark, [(node, find(node)) for node in parent], _COMPONENT_SCHEMA)
         return _elect_winners(comp, nodes)
 
     if edge_derived:

@@ -42,7 +42,7 @@ from kgpipe.pipeline import (
     stage_pages,
     triples_view,
 )
-from kgpipe.session import free_cached_since, persistent_rdd_ids
+from kgpipe.session import free_cached_since, local_frame, persistent_rdd_ids
 
 
 def bucket_of(col, n_buckets: int):
@@ -98,6 +98,12 @@ def sweep_gaps(spark: SparkSession, present, lo: int, hi: int) -> int:
 SALTED_DIM_THRESHOLD = 2_000_000
 
 
+def _append_row(table, spark: SparkSession, row: dict) -> None:
+    """Append one driver-built row to a warehouse table, as a
+    ``LocalRelation`` (no Python task in the commit job)."""
+    table.append(local_frame(spark, [tuple(row[f.name] for f in table.schema)], table.schema))
+
+
 def _metrics_row(
     wh: Warehouse,
     spark: SparkSession,
@@ -125,7 +131,7 @@ def _metrics_row(
         "error_rate": round(fail / processed, 4) if processed > 0 else 0.0,
         "timestamp": datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M:%S"),
     }
-    wh.run_metrics.append(spark.createDataFrame([row], wh.run_metrics.schema))
+    _append_row(wh.run_metrics, spark, row)
 
 
 def run_incremental(
@@ -280,9 +286,7 @@ def run_incremental(
                 ),
                 "committed_at": datetime.now(timezone.utc),
             }
-            wh.checkpoints.append(
-                spark.createDataFrame([checkpoint_row], wh.checkpoints.schema)
-            )
+            _append_row(wh.checkpoints, spark, checkpoint_row)
             # the bucket's own blocks go; the staging stays for the next
             free_cached_since(sc, keep_staged)
 

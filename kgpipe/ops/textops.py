@@ -254,14 +254,9 @@ def minhash_banded(
 
 def _band_rows(wide: DataFrame, bands: int) -> DataFrame:
     """One row per (document, band) of a wide banded table: its columns
-    plus (band, bh) — one explode, still row-local."""
-    bb = F.explode(
-        F.array(*[
-            F.struct(F.lit(b).alias("band"), F.col(f"bh{b}").alias("bh"))
-            for b in range(bands)
-        ])
-    ).alias("bb")
-    return wide.select(*wide.columns, bb).select(*wide.columns, "bb.band", "bb.bh")
+    plus (band, bh) — one generator, still row-local."""
+    rows = ", ".join(f"named_struct('band', {b}, 'bh', bh{b})" for b in range(bands))
+    return wide.selectExpr("*", f"inline(array({rows}))")
 
 
 def band_pairs_exactly_once(wide: DataFrame, bands: int = 4) -> DataFrame:
@@ -284,24 +279,19 @@ def band_pairs_exactly_once(wide: DataFrame, bands: int = 4) -> DataFrame:
     doc_id is the table's key. The retired ``.distinct()`` additionally
     masked duplicate doc_id input rows; this path, like the oracle,
     treats duplicate ids as distinct documents that happen to collide.
+
+    The predicate is one SQL string: as Column calls it cost one py4j
+    round trip per comparison, most of this builder's driver time.
     """
     banded = _band_rows(wide, bands)
     a, b = banded.alias("a"), banded.alias("b")
-    cond = (
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bh") == F.col("b.bh"))
-        & (F.col("a.doc_id") < F.col("b.doc_id"))
-    )
     # min-band predicate: this band is the FIRST where the pair collides
-    minband = None
-    for bx in range(bands):
-        c = F.col("a.band") == bx
-        for e in range(bx):
-            c = c & (F.col(f"a.bh{e}") != F.col(f"b.bh{e}"))
-        minband = c if minband is None else (minband | c)
-    return a.join(b, cond & minband).select(
-        F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+    minband = " OR ".join(
+        "(" + " AND ".join([f"a.band = {bx}"] + [f"a.bh{e} <> b.bh{e}" for e in range(bx)]) + ")"
+        for bx in range(bands)
     )
+    cond = f"a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id AND ({minband})"
+    return a.join(b, F.expr(cond)).selectExpr("a.doc_id AS doc_a", "b.doc_id AS doc_b")
 
 
 def dedup_minhash_lsh(
@@ -756,12 +746,11 @@ def clean_corpus(
     join, and each scan prunes to the columns it reads.
     """
     staged = _quality_staged(docs, "text", rep_n=rep_n)
-    _, stop_ratio, _, score = _quality_cols()
-    rep_ratio = F.when(F.col("_total_ngrams") == 0, F.lit(0.0)).otherwise(
-        F.round(F.lit(1.0) - F.col("_distinct_ngrams") / F.col("_total_ngrams"), 4)
-    )
-    signals = staged.select(
-        "doc_id", score.alias("quality"), rep_ratio.alias("repetition_ratio")
+    signals = staged.selectExpr(
+        "doc_id",
+        f"{_quality_cols()['quality']} AS quality",
+        "CASE WHEN _total_ngrams = 0 THEN 0.0D"
+        " ELSE round(1.0D - _distinct_ngrams / _total_ngrams, 4) END AS repetition_ratio",
     )
     c = dedup_clusters(docs, k=k, num_hashes=num_hashes, bands=bands).select(
         "doc_id", "is_survivor"
@@ -1178,29 +1167,30 @@ def _quality_staged(docs: DataFrame, text_col: str, rep_n: int | None):
             F.size(F.array_distinct(arr)).alias("_distinct_ngrams"),
         ]
     tokenized = docs.select("doc_id", *stage1)
-    stage2 = [
-        "_n_chars",
-        "_n_punct",
-        F.size("_toks").alias("_n_toks"),
-        "_stop_hits",
-        "_solid_chars",
-    ]
+    stage2 = ["_n_chars", "_n_punct", "size(_toks) AS _n_toks", "_stop_hits", "_solid_chars"]
     if rep_n is not None:
         stage2 += ["_total_ngrams", "_distinct_ngrams"]
-    return tokenized.select("doc_id", *stage2)
+    return tokenized.selectExpr("doc_id", *stage2)
 
 
-def _quality_cols():
-    punct_ratio = F.round(F.col("_n_punct") / F.greatest("_n_chars", F.lit(1)), 4)
-    stop_ratio = F.round(F.col("_stop_hits") / F.greatest("_n_toks", F.lit(1)), 4)
-    mean_tok = F.round(F.col("_solid_chars") / F.greatest("_n_toks", F.lit(1)), 4)
-    score = F.round(
-        F.least(F.col("_n_toks") / F.lit(100.0), F.lit(1.0)) * 0.4
-        + stop_ratio * 0.4
-        + (F.lit(1.0) - F.least(punct_ratio * 5, F.lit(1.0))) * 0.2,
-        4,
+def _quality_cols() -> dict[str, str]:
+    """The quality ratios and score as SQL over ``_quality_staged``'s
+    columns — integer-ratio arithmetic, double literals, 4 dp. One
+    string per column instead of a Column call per operator and literal
+    (this builder's py4j round trips)."""
+    punct_ratio = "round(_n_punct / greatest(_n_chars, 1), 4)"
+    stop_ratio = "round(_stop_hits / greatest(_n_toks, 1), 4)"
+    mean_tok = "round(_solid_chars / greatest(_n_toks, 1), 4)"
+    score = (
+        f"round(least(_n_toks / 100.0D, 1.0D) * 0.4D + {stop_ratio} * 0.4D"
+        f" + (1.0D - least({punct_ratio} * 5, 1.0D)) * 0.2D, 4)"
     )
-    return punct_ratio, stop_ratio, mean_tok, score
+    return {
+        "punct_ratio": punct_ratio,
+        "stopword_ratio": stop_ratio,
+        "mean_token_len": mean_tok,
+        "quality": score,
+    }
 
 
 def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -1208,15 +1198,11 @@ def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
     composite score — integer-ratio arithmetic rounded at 4 dp, one
     corpus scan (see ``_quality_staged``)."""
     staged = _quality_staged(docs, text_col, rep_n=None)
-    punct_ratio, stop_ratio, mean_tok, score = _quality_cols()
-    return staged.select(
+    return staged.selectExpr(
         "doc_id",
-        F.col("_n_chars").alias("n_chars_measured"),
-        F.col("_n_toks").alias("n_tokens"),
-        punct_ratio.alias("punct_ratio"),
-        stop_ratio.alias("stopword_ratio"),
-        mean_tok.alias("mean_token_len"),
-        score.alias("quality"),
+        "_n_chars AS n_chars_measured",
+        "_n_toks AS n_tokens",
+        *(f"{sql} AS {name}" for name, sql in _quality_cols().items()),
     )
 
 

@@ -14,22 +14,43 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+def _dot(a: str, b: str) -> str:
+    """SQL dot product of two array expressions, summed left to right in
+    double precision."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
+        " 0D, (acc, v) -> acc + v)"
     )
 
 
-def _norm(a):
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double"))
-    )
+def _norm(a: str) -> str:
+    return f"sqrt(aggregate({a}, 0D, (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
+
+
+def _cos(a: str, b: str, digits: int) -> str:
+    return f"round({_dot(a, b)} / ({_norm(a)} * {_norm(b)}), {digits})"
+
+
+def _vec(v) -> str:
+    """A driver-side vector as ONE SQL ``array<double>`` literal.
+
+    ``F.lit(list)`` and ``F.array(*[F.lit(x) ...])`` both cost one py4j
+    round trip per element at build time (a 64-coordinate vector is
+    over a hundred calls); this string costs none until the expression
+    holding it is parsed, once, on the JVM. ``repr`` of a Python float
+    round-trips exactly, so the literal is the same double; NaN and the
+    infinities have no literal form and go through a cast."""
+    import math
+
+    def lit(x: float) -> str:
+        x = float(x)
+        return f"{x!r}D" if math.isfinite(x) else f"CAST('{x}' AS DOUBLE)"
+
+    return "array(" + ", ".join(lit(x) for x in v) + ")"
 
 
 def l2_norms(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    return emb.select("vec_id", F.round(_norm(F.col(vec_col)), 4).alias("l2_norm"))
+    return emb.selectExpr("vec_id", f"round({_norm(f'`{vec_col}`')}, 4) AS l2_norm")
 
 
 def cosine_topk(
@@ -37,41 +58,38 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k by cosine similarity against a literal query vector.
 
-    The query is a broadcast literal (array constant folded by Catalyst);
-    ranking is a single global top-k (TakeOrderedAndProject — no full
-    sort). Similarity rounded at 4 dp; ties broken by vec_id for
-    engine-portable determinism.
+    The query is an array literal (``_vec``; folded by Catalyst) and the
+    whole similarity is one SQL expression, so building the frame is a
+    handful of py4j calls whatever the dimension. Ranking is a single
+    global top-k (TakeOrderedAndProject — no full sort). Similarity
+    rounded at 4 dp; ties broken by vec_id for engine-portable
+    determinism.
     """
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    sim = F.round(_dot(F.col(vec_col), q) / (_norm(F.col(vec_col)) * _norm(q)), 4)
+    sim = _cos(f"`{vec_col}`", _vec(query_vec), 4)
     return (
-        emb.select("vec_id", sim.alias("cosine"))
+        emb.selectExpr("vec_id", f"{sim} AS cosine")
         .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
         .limit(k)
     )
 
 
-def _plane(p: int, dim: int):
-    """Pseudo-random ±1 hyperplane p as ONE array-literal plan node:
+def _plane(p: int, dim: int) -> str:
+    """Pseudo-random ±1 hyperplane p as one SQL array literal (``_vec``):
     coordinate c is +1 iff the first hex digit of md5("p|c") ≥ '8' — no
     RNG state, identical on any cluster and portable to the DuckDB
     oracle (queries._lsh_bucket_sql applies the same rule).
 
-    The coordinates are hashed driver-side and emitted as a single
-    ``F.lit(list)`` Literal instead of dim CASE expressions per plane:
-    the signature expression is O(planes) plan nodes, not O(planes×dim)
-    — at production dims (768+) and the 24-plane ceiling the per-
-    coordinate form is ~18k expression nodes per projection, which blows
-    up driver plan-build/codegen; the literal form stays trivial."""
+    The coordinates are hashed driver-side and emitted as one literal
+    instead of dim CASE expressions per plane: the signature expression
+    is O(planes) plan nodes, not O(planes×dim) — at production dims
+    (768+) and the 24-plane ceiling the per-coordinate form is ~18k
+    expression nodes per projection, which blows up driver
+    plan-build/codegen; the literal form stays trivial."""
     import hashlib
 
-    return F.lit(
-        [
-            1.0
-            if hashlib.md5(f"{p}|{c}".encode()).hexdigest()[0] >= "8"
-            else -1.0
-            for c in range(dim)
-        ]
+    return _vec(
+        1.0 if hashlib.md5(f"{p}|{c}".encode()).hexdigest()[0] >= "8" else -1.0
+        for c in range(dim)
     )
 
 
@@ -103,17 +121,16 @@ def derive_n_planes(
     return min(max(raw, min_planes), max_planes)
 
 
-def hyperplane_bucket(vec_col="embedding", n_planes: int = 8, dim: int = 32):
+def hyperplane_bucket(vec_col: str = "embedding", n_planes: int = 8, dim: int = 32):
     """Column expression: deterministic random-hyperplane LSH bucket
     (bit p = sign of dot with plane p) — a pure per-row projection, so
     adding the bucket to any frame costs zero shuffle."""
-    col = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    sig = None
-    for p in range(n_planes):
-        bit = F.when(_dot(col, _plane(p, dim)) >= 0, F.lit(1)).otherwise(F.lit(0))
-        term = bit * F.lit(2 ** p)
-        sig = term if sig is None else sig + term
-    return sig
+    return F.expr(
+        " + ".join(
+            f"CASE WHEN {_dot(f'`{vec_col}`', _plane(p, dim))} >= 0 THEN 1 ELSE 0 END * {2 ** p}"
+            for p in range(n_planes)
+        )
+    )
 
 
 def cosine_near_dup(
@@ -180,11 +197,8 @@ def cosine_near_dup(
         F.col(vec_col).alias("_vb"),
     )
     pairs = a.join(b, "_b").where(F.col("vec_a") < F.col("vec_b"))
-    cos = F.round(
-        _dot(F.col("_va"), F.col("_vb")) / (_norm(F.col("_va")) * _norm(F.col("_vb"))), 4
-    )
     return (
-        pairs.select("vec_a", "vec_b", cos.alias("cosine"))
+        pairs.selectExpr("vec_a", "vec_b", f"{_cos('_va', '_vb', 4)} AS cosine")
         .where(F.col("cosine") >= threshold)
     )
 
@@ -213,14 +227,14 @@ def ivf_assign(
     column becomes the partition key of the vector table, so a probe
     reads only n_probe partitions.
     """
-    scored = []
-    for cid, cvec in centroids:
-        c = F.array(*[F.lit(float(x)) for x in cvec])
-        sim = F.round(_dot(F.col(vec_col), c) / (_norm(F.col(vec_col)) * _norm(c)), 6)
-        # struct comparison: sim first, then -cid so ties pick lowest id
-        scored.append(F.struct(sim.alias("sim"), F.lit(-cid).alias("negid")))
-    best = F.array_max(F.array(*scored))
-    return emb.select("vec_id", vec_col, (-best["negid"]).alias("centroid_id"))
+    # struct comparison: sim first, then -cid so ties pick lowest id
+    scored = ", ".join(
+        f"named_struct('sim', {_cos(f'`{vec_col}`', _vec(cvec), 6)}, 'negid', {-cid})"
+        for cid, cvec in centroids
+    )
+    return emb.selectExpr(
+        "vec_id", f"`{vec_col}`", f"-(array_max(array({scored})).negid) AS centroid_id"
+    )
 
 
 def _pycos(a: list[float], b: list[float]) -> float:

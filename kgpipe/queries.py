@@ -17,6 +17,9 @@ Engine-parity rules used throughout (verified against DuckDB 1.0):
 
 from __future__ import annotations
 
+import os
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -67,8 +70,40 @@ def _values_table(rows, columns: list[str]) -> str:
     return f"SELECT * FROM (VALUES {vals}) AS t({', '.join(columns)})"
 
 
+#: per-session table schemas: SparkSession → {(path, mtime_ns, size): schema}
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """A fresh relation over ``{sf_dir}/{name}.parquet``, read with the
+    table's schema resolved once per session.
+
+    ``spark.read.parquet`` infers the schema from the footers on every
+    call, and each inference is a Spark job (about 80 ms per table on a
+    4-core host, against about 20 ms with a given schema). The schema is
+    cached per SparkSession, because inference reads session confs (e.g.
+    ``spark.sql.parquet.binaryAsString``), and keyed on the path plus its
+    ``st_mtime_ns`` and size, so a table rewritten in place is inferred
+    again. A path ``os.stat`` cannot see (a remote store) is inferred on
+    every call.
+
+    The schema is cached, not the DataFrame: every call returns a new
+    relation with its own attribute ids, so two reads of one table in a
+    query (a self-join) still resolve apart.
+    """
+    path = f"{sf_dir}/{name}.parquet"
+    try:
+        st = os.stat(path)
+        key = (path, st.st_mtime_ns, st.st_size)
+    except OSError:
+        key = None
+    schemas = _SCHEMAS.setdefault(spark, {})
+    schema = schemas.get(key)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+        if key is not None:
+            schemas[key] = schema
+    return spark.read.schema(schema).parquet(path)
 
 
 # ===========================================================================

@@ -11,7 +11,8 @@ import os
 import tempfile
 import zipfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _package_zip() -> str:
@@ -55,6 +56,26 @@ def free_cached_since(sc, keep_ids: set) -> int:
             jmap.get(rid).unpersist(True)
             dropped += 1
     return dropped
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType) -> DataFrame:
+    """A small driver-built frame as a ``LocalRelation``.
+
+    ``spark.createDataFrame(list, schema)`` parallelizes pickled Python
+    rows: its executed plan is ``Scan ExistingRDD``, a Python task per
+    partition each time a job reads it, even for one row. The same rows
+    handed over as one Arrow table become a ``LocalTableScan`` the JVM
+    reads without Python. ``rows`` are non-empty tuples in ``schema``
+    order."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(zip(*rows), arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def get_spark(
