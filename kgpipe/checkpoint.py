@@ -143,8 +143,7 @@ def run_incremental(
     n_buckets: int = 4,
     fail_buckets: set[int] | None = None,
     sweep_range: tuple[int, int] | None = None,
-    full_hanzi_properties: bool = False,
-    full_term_properties: bool = False,
+    full_properties: bool = False,
 ) -> Warehouse:
     """Process pending buckets one commit at a time; re-entrant.
 
@@ -183,13 +182,12 @@ def run_incremental(
             # slices it, so a seed links to its page in any bucket.
             staged = stage_pages(
                 corpus.where(~is_term_page | page_bucket.isin(pending)), seeds,
-                full_hanzi_properties=full_hanzi_properties,
-                full_term_properties=full_term_properties,
+                full_properties=full_properties,
             )
             hanzi_dim = staged.characters()
-            composed_mode = "salted" if hanzi_dim.count() > SALTED_DIM_THRESHOLD else "broadcast"
             # one job counts every bucket's inputs, keyed (bucket, kind):
-            # corpus rows, seeds, seeds without a page, failed zidian pages
+            # corpus rows, seeds, seeds without a page, failed zidian
+            # pages; and, under bucket -1, the run's composed-of dimension
             tally = reduce(DataFrame.unionByName, (
                 df.select(b.alias("b"), F.lit(kind).alias("kind"))
                 for df, b, kind in (
@@ -197,9 +195,13 @@ def run_incremental(
                     (staged.seeds, seed_bucket, "processed"),
                     (staged.missing, seed_bucket, "missing"),
                     (staged.failed_pages(), page_bucket, "fail"),
+                    (hanzi_dim, F.lit(-1), "dim"),
                 )
             ))
             counts = {(r.b, r.kind): r["count"] for r in tally.groupBy("b", "kind").count().collect()}
+            composed_mode = (
+                "salted" if counts.get((-1, "dim"), 0) > SALTED_DIM_THRESHOLD else "broadcast"
+            )
             keep_staged = persistent_rdd_ids(sc)
         for bucket in pending:
             t0 = time.time()
@@ -210,7 +212,7 @@ def run_incremental(
                     *(f.where(in_seed) for f in staged[3:]),  # seeds, missing
                 ),
                 run_id=run_id, hanzi_dim=hanzi_dim, composed_mode=composed_mode,
-                full_hanzi_properties=full_hanzi_properties,
+                full_properties=full_properties,
             )
             rows_in, processed, missing, fail = (
                 counts.get((bucket, kind), 0) for kind in ("rows_in", "processed", "missing", "fail")

@@ -423,8 +423,9 @@ def render_hanzi_page(h: HanziSpec) -> str:
 # ---------------------------------------------------------------------------
 # realistic page chrome (round 7): the reference crawls a LIVE site whose
 # pages carry head/nav/breadcrumb/ad chrome before the content blocks and
-# a footer after them — the shape the pre-DOM slicers (parse/slicing.py,
-# parse/hanzi.py:_slice_cards) exist for. chrome=True wraps every page in
+# a footer after them — the shape the term flat scan (parse/fastterm.py)
+# and the zidian card slicer (parse/hanzi.py:_slice_cards) must read
+# without a change of output. chrome=True wraps every page in
 # deterministic chrome (seeded per path) WITHOUT touching the content
 # blocks, so every golden/oracle gate must stay green with it on.
 # ---------------------------------------------------------------------------
@@ -451,12 +452,12 @@ def _chromify(path: str, page: str) -> str:
     """Wrap a bare '<html><body>…</body></html>' page in realistic site
     chrome: head (title/meta/style/two scripts — one holding
     markup-lookalike strings and a bare '<', the raw-text shapes the
-    prefix gate must clear), a two-tier dropdown nav, breadcrumb, ad and
-    sidebar blocks before the content; a multi-column footer after. On
-    real dictionary sites this template weighs 3-10x the content blocks
-    (the shape parse/slicing.py exists for); here it is ~4 KB against
-    ~0.5 KB of content. Pure function of the path, so the sha256
-    manifest stays exact."""
+    term flat scan and the card slicer's prefix gate must read), a
+    two-tier dropdown nav, a breadcrumb with character references, ad
+    and sidebar blocks before the content; a multi-column footer after.
+    On real dictionary sites this template weighs 3-10x the content
+    blocks; here it is ~4 KB against ~0.5 KB of content. Pure function
+    of the path, so the sha256 manifest stays exact."""
     h = int(hashlib.md5(path.encode("utf-8")).hexdigest()[:8], 16)
     title = path.rsplit("/", 1)[-1]
     assert page.startswith("<html><body>") and page.endswith("</body></html>")

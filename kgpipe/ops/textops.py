@@ -47,8 +47,13 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
 
 def _fanout_barrier(df: DataFrame, reliable: bool = False) -> DataFrame:
     """Pin a fan-out intermediate so concurrent consumers never recompute
-    its lineage. Both forms are LAZY (operator construction stays
-    job-free; materialization happens at the first consuming action).
+    its lineage. Both forms write the pinned blocks at the first
+    consuming action, but construction is job-free only when ``df``'s
+    plan has no exchange: ``Dataset.checkpoint`` executes the adaptive
+    plan at construction, which runs one job per shuffle or broadcast
+    stage below the barrier (``dedup_minhash_lsh``: the
+    ``ensure_parallelism`` repartition, one job per build; a narrow
+    plan: none).
 
     ``reliable=False`` (default): ``localCheckpoint`` — executor-local,
     non-replicated blocks. Fastest, but an executor loss mid-job loses
@@ -440,11 +445,10 @@ def duplicate_ngram_spans(
     builds; it is released by the ContextCleaner once the result frame is
     garbage-collected.
 
-    The barrier is LAZY (``_fanout_barrier``): operator construction
-    stays free of jobs (the plan-declaration contract every other
-    operator keeps), and the single materialization happens at the first
+    The barrier (``_fanout_barrier``) writes its blocks at the first
     consuming action, after which both the duplicated-gram aggregation
-    and the participant lookup read the checkpointed blocks. The default
+    and the participant lookup read them; construction runs one job per
+    exchange in ``docs``'s plan (none for a plain table scan). The default
     is executor-local blocks (fast, lost on executor failure — the job
     restarts); ``reliable=True`` swaps in a reliable checkpoint of the
     (doc_id, gram_hash) projection so a 100 TB run survives executor
@@ -798,15 +802,17 @@ def prepare_training_corpus(
     The composition fans out — the survivor set feeds the span detector,
     the span cut AND the split — so the expensive filter lineage
     (fused quality/repetition scan + LSH banding + CC + decision
-    semi-join) is pinned behind TWO lazy barriers and evaluates exactly
+    semi-join) is pinned behind TWO barriers and evaluates exactly
     once: ``keep_ids`` (the doc_id column of the keep decisions — all
     the split needs, so the split never re-scans the corpus) and
     ``kept`` (the surviving documents with text, read by the span
     detector's gram projection, the positional re-explode, and the cut
-    join). The barriers stay lazy in both modes; ``reliable=True``
-    makes them (and the span detector's) reliable checkpoints so
-    executor loss recomputes instead of failing the job — the
-    restart-intolerant 100 TB configuration (see ``_fanout_barrier``).
+    join). The barriers write their blocks at the first consuming
+    action, but constructing them runs the filter lineage's shuffle and
+    broadcast stages as jobs — one per exchange (see
+    ``_fanout_barrier``). ``reliable=True`` makes them (and the span
+    detector's) reliable checkpoints so executor loss recomputes instead
+    of failing the job — the restart-intolerant 100 TB configuration.
 
     ``decisions``: pass an already-computed ``clean_corpus`` frame
     (same filter params) to reuse it instead of re-deriving — the

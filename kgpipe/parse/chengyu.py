@@ -19,10 +19,11 @@ Reproduces the field semantics of the reference parser
 Absent fields are simply missing from the dict (the reference sets keys
 only when found); the Spark layer surfaces them as nulls.
 
-Round 7 adds parser-level projection pushdown: ``fields`` selects which
-of the above to extract — unrequested fields skip their extraction AND
-(via ``slice_term_page``) the DOM parse of any page region only they
-could observe. The KG triple derivation consumes only ``HOT_FIELDS``.
+``fields`` selects which of the above to extract (parser-level
+projection pushdown); unrequested fields skip their extraction. The KG
+triple derivation consumes only ``HOT_FIELDS``, which the guarded flat
+scan (kgpipe/parse/fastterm.py) extracts without building a DOM; a page
+it declines, and every other field set, takes the DOM parse.
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ import re
 from typing import Optional
 
 from kgpipe.htmldom import parse_html
-from kgpipe.parse.slicing import CHENGYU_SURFACE, slice_term_page
+from kgpipe.parse.fastterm import fast_hot_chengyu
 
 _ZHUYIN_RE = re.compile(r"注音[：:]\s*([^\n]+)")
 _SOURCE_RE = re.compile(r"出处[：:]\s*(.+)")
@@ -57,57 +58,24 @@ ALL_FIELDS = (
 HOT_FIELDS = ("chengyu", "pinyin", "synonyms", "antonyms", "translation")
 _HOT_FSET = frozenset(HOT_FIELDS)
 
-#: field → the doc-level query-surface hazard that serves it
-#: (CHENGYU_SURFACE keys; slicing keeps exactly the regions these touch)
-_FIELD_HAZARDS = {
-    "chengyu": ("h1",),
-    "pinyin": ("ci-title",),
-    "zhuyin": ("ci-attrs",),
-    "emotion": ("ci-attrs",),
-    "synonyms": ("ci-attrs",),
-    "antonyms": ("ci-attrs",),
-    "explanation": ("ci-content",),
-    "source": ("ci-content",),
-    "usage": ("ci-content",),
-    "example": ("ci-content",),
-    "translation": ("ci-fanyi",),
-}
-
-
-def _wanted_hazards(fset: frozenset) -> frozenset:
-    return frozenset(h for f in fset for h in _FIELD_HAZARDS[f])
-
 
 def parse_chengyu_html(
     html: str,
     url: Optional[str] = None,
-    slice_input: bool = True,
     fields: Optional[tuple] = None,
     fast: bool = True,
 ) -> dict:
     fset = frozenset(ALL_FIELDS if fields is None else fields)
     try:
         if fast and fset == _HOT_FSET:
-            # guarded flat-scan extraction of exactly the HOT fields,
-            # attempted on the RAW page BEFORE slicing (the flat scan is
-            # one regex pass, cheaper than the slicer itself; the slicer
-            # only pays off for the DOM path). Returns None on any page
-            # it cannot prove simple → the normal slice+DOM path below.
-            # Field semantics mirrored and fuzz-pinned
-            # (kgpipe/parse/fastterm.py, tests/test_fastterm.py);
-            # fast(raw) == DOM(raw) == DOM(sliced) by the slicer's own
-            # soundness contract.
-            from kgpipe.parse.fastterm import fast_hot_chengyu
-
+            # guarded flat-scan extraction of exactly the HOT fields;
+            # None on any page it cannot prove simple → the DOM parse
+            # below. Field semantics mirrored and fuzz-pinned
+            # (kgpipe/parse/fastterm.py, tests/test_fastterm.py)
             data = fast_hot_chengyu(html)
             if data is not None:
                 return {"url": url, "data": data}
-        sliced = (
-            slice_term_page(html, CHENGYU_SURFACE, _wanted_hazards(fset))
-            if slice_input
-            else None
-        )
-        doc = parse_html(html if sliced is None else sliced)
+        doc = parse_html(html)
         data: dict = {}
 
         if "chengyu" in fset:

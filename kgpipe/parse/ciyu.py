@@ -15,10 +15,10 @@ Reproduces ``extract_ciyu_details_from_html``
   * definition     — <h3>网络解释</h3> parent's next-sibling div,
                      get_text(' ', strip=True) (:124-128)
 
-Round 7 adds parser-level projection pushdown (``fields``) mirroring
-chengyu.py; the 网络解释 definition is the droppable region on the KG
-hot path. Slicing uses CIYU_KEEP_TAIL because the definition extractor
-hops doc-level siblings (see slicing.py module docstring).
+``fields`` is the parser-level projection pushdown, as in chengyu.py:
+``HOT_FIELDS`` go through the guarded flat scan
+(kgpipe/parse/fastterm.py) first; a page it declines, and every other
+field set, takes the DOM parse.
 """
 
 from __future__ import annotations
@@ -26,7 +26,7 @@ from __future__ import annotations
 from typing import Optional
 
 from kgpipe.htmldom import Element, parse_html
-from kgpipe.parse.slicing import CIYU_KEEP_TAIL, CIYU_SURFACE, slice_term_page
+from kgpipe.parse.fastterm import fast_hot_ciyu
 
 ALL_FIELDS = (
     "word",
@@ -43,21 +43,6 @@ ALL_FIELDS = (
 HOT_FIELDS = ("word", "pinyin", "synonyms", "antonyms")
 _HOT_FSET = frozenset(HOT_FIELDS)
 
-_FIELD_HAZARDS = {
-    "word": ("ci-title",),
-    "pinyin": ("ci-title", "ci-attrs"),
-    "is_common": ("ci-title",),
-    "zhuyin": ("ci-attrs",),
-    "part_of_speech": ("ci-attrs",),
-    "synonyms": ("ci-attrs",),
-    "antonyms": ("ci-attrs",),
-    "definition": ("defn",),
-}
-
-
-def _wanted_hazards(fset: frozenset) -> frozenset:
-    return frozenset(h for f in fset for h in _FIELD_HAZARDS[f])
-
 
 def _list_from_label(ci_attrs: Optional[Element], label_text: str) -> list[str]:
     if not ci_attrs:
@@ -72,28 +57,17 @@ def _list_from_label(ci_attrs: Optional[Element], label_text: str) -> list[str]:
 def parse_ciyu_html(
     html: str,
     url: Optional[str] = None,
-    slice_input: bool = True,
     fields: Optional[tuple] = None,
     fast: bool = True,
 ) -> dict:
     fset = frozenset(ALL_FIELDS if fields is None else fields)
     try:
         if fast and fset == _HOT_FSET:
-            # guarded flat-scan extraction on the RAW page before
-            # slicing (see chengyu.py twin / fastterm.py)
-            from kgpipe.parse.fastterm import fast_hot_ciyu
-
+            # guarded flat scan first (see the chengyu.py twin)
             data = fast_hot_ciyu(html)
             if data is not None:
                 return {"url": url, "data": data}
-        sliced = (
-            slice_term_page(
-                html, CIYU_SURFACE, _wanted_hazards(fset), keep_tail=CIYU_KEEP_TAIL
-            )
-            if slice_input
-            else None
-        )
-        doc = parse_html(html if sliced is None else sliced)
+        doc = parse_html(html)
         data: dict = {}
 
         if fset & {"word", "pinyin", "is_common"}:

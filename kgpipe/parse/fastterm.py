@@ -1,18 +1,23 @@
 # -*- coding: utf-8 -*-
-"""Guarded fast extraction of the HOT term fields (round 8).
+"""Guarded fast extraction of the HOT term fields.
 
-The flagship parse floor is DOM construction: ``parse_html`` builds
-Element objects + find-indexes for every node (~150µs of the ~225µs/page
-term parse) although the KG hot path reads five chengyu / four ciyu
-fields. This module extracts exactly those fields from a single
-C-speed regex token scan over the page — **declining to the DOM path on
-any input it cannot prove simple**, the same contract the fast scanner
-(htmldom) and the slicers already follow:
+The term parse floor is DOM construction: ``parse_html`` builds Element
+objects + find-indexes for every node although the KG hot path reads
+five chengyu / four ciyu fields. This module extracts exactly those
+fields from one C-speed regex token scan over the page — **declining to
+the DOM path on any input it cannot prove simple**, the contract the
+fast scanner (htmldom) and the zidian card slicer also follow:
 
-  * a strict global precondition (every ``<`` opens a lowercase
-    double-quoted-attribute tag with no ``&``/comments/declarations
-    anywhere) guarantees that tag-stripping equals ``get_text`` and that
-    the token stream determines the tree;
+  * a strict precondition on every ``<``: it opens a lowercase tag with
+    double-quoted (or valueless) attributes, a strict lowercase close
+    tag, a comment, or a ``<!…>`` declaration such as ``<!DOCTYPE>``;
+  * the constructs a live page's chrome carries get exactly the
+    semantics ``htmldom._fast_parse`` gives them, with its own rules
+    (``_RAW_END``, ``_ENDTAGFIND``, ``_COMMENT_CLOSE``, ``html.unescape``):
+    ``script``/``style`` raw text runs to the strict close tag and is not
+    unescaped; comments and declarations are dropped, splitting the text
+    around them; character references resolve in text and attribute
+    values;
   * the token stream is folded into flat event arrays (open/close/text
     with parent and extent links) replicating html.parser's close-tag
     recovery, void elements and self-closing tags exactly as
@@ -23,31 +28,40 @@ any input it cannot prove simple**, the same contract the fast scanner
     variants, ``Element.string`` single-child descent,
     ``find_next_sibling``, ``select`` stage order + identity dedup,
     first-label ``decompose``);
-  * ANY surprise — unmatched ``<``, uppercase tag, entity, exception —
+  * ANY surprise — a literal ``<``, an uppercase tag, a single-quoted
+    attribute, a processing instruction or marked section, a raw-text
+    look-alike or missing close, an unterminated comment, an exception —
     returns None and the caller falls back to the full DOM parse.
 
-Equality fast-vs-DOM is pinned by tests over the whole bench corpus plus
-randomized mutation fuzz (tests/test_fastterm.py); the golden P/R gate
-and the kg oracles gate the end-to-end result.
+Equality fast-vs-DOM is pinned by tests over the bare and chromed
+corpora, randomized mutation fuzz and hypothesis chrome + soup fuzz
+(tests/test_fastterm.py, tests/test_fuzz_parsers.py); the golden P/R
+gate and the kg oracles gate the end-to-end result.
 """
 
 from __future__ import annotations
 
 import re
+from html import unescape
 from typing import Optional
 
-#: html.parser void elements (mirrors htmldom.VOID_ELEMENTS)
-_VOID = frozenset(
-    "area base br col embed hr img input link meta param source track wbr".split()
-)
+from kgpipe.htmldom import _COMMENT_CLOSE, _ENDTAGFIND, _RAW_END, VOID_ELEMENTS
 
-_TAG_RE = re.compile(
+#: one match per '<', spanning exactly what htmldom._fast_parse consumes
+#: for the construct. Groups: 1=close-tag name; 2=open-tag name, 3=attrs
+#: blob, 4=self-close slash (always participates in an open tag, so
+#: lastindex==4 marks one); 5=comment opener (span finished with
+#: _COMMENT_CLOSE); 6=declaration (not a marked section '<!['). The empty
+#: last alternative takes any other '<' with lastindex None: a decline.
+_TOKEN_RE = re.compile(
     r"<(?:"
     r"/([a-z][a-z0-9]*)\s*>"
     r"|([a-z][a-z0-9]*)"
-    r"((?:\s+[a-z][a-z0-9-]*(?:=\"[^\"<>&]*\")?)*)"
+    r"((?:\s+[a-z][a-z0-9-]*(?:=\"[^\"<>]*\")?)*)"
     r"\s*(/?)>"
-    r")"
+    r"|(!--)"
+    r"|(!(?!\[)[^>]*>)"
+    r"|)"
 )
 _ATTR_RE = re.compile(r"([a-z][a-z0-9-]*)(?:=\"([^\"]*)\")?")
 
@@ -66,62 +80,87 @@ class _Events:
     __slots__ = ("kinds", "payload", "attrblob", "parent", "close", "_attrs_cache")
 
     def __init__(self, html: str):
-        if "&" in html:
-            raise _Decline
         kinds: list = []
         payload: list = []
         attrblob: list = []
         parent: list = []
         close: list = []
         stack: list = []  # (event_index, tag)
-        n_lt = html.count("<")
-        pos = 0
-        n_tags = 0
+        top = -1  # event index of the innermost open element, -1 at root
         append_k, append_p, append_a, append_par, append_c = (
             kinds.append, payload.append, attrblob.append, parent.append, close.append
         )
-        for m in _TAG_RE.finditer(html):
-            n_tags += 1
-            s = m.start()
+        search = _TOKEN_RE.search
+        pos = 0
+        end = len(html)
+        while pos < end:
+            m = search(html, pos)
+            s = end if m is None else m.start()
             if s > pos:
+                # one text node per run between constructs, as
+                # _fast_parse builds it (resolved, even to '')
+                t = html[pos:s]
                 append_k(_TEXT)
-                append_p(html[pos:s])
+                append_p(unescape(t) if "&" in t else t)
                 append_a(None)
-                append_par(stack[-1][0] if stack else -1)
+                append_par(top)
                 append_c(0)
+            if m is None:
+                break
             pos = m.end()
-            ctag = m.group(1)
-            if ctag is not None:
+            kind = m.lastindex
+            if kind == 4:  # open tag
+                tag, blob, slash = m.group(2, 3, 4)
+                idx = len(kinds)
+                append_k(_OPEN)
+                append_p(tag)
+                append_a(blob)
+                append_par(top)
+                append_c(idx + 1)  # provisional: empty extent
+                if slash or tag in VOID_ELEMENTS:
+                    continue
+                if tag in _RAW_END:
+                    # raw text up to the strict close tag, not resolved;
+                    # a look-alike first close or none at all declines
+                    em = _RAW_END[tag].search(html, pos)
+                    if em is None:
+                        raise _Decline
+                    gm = _ENDTAGFIND.match(html, em.start())
+                    if gm is None or gm.group(1).lower() != tag:
+                        raise _Decline
+                    if em.start() > pos:
+                        append_k(_TEXT)
+                        append_p(html[pos : em.start()])
+                        append_a(None)
+                        append_par(idx)
+                        append_c(0)
+                    close[idx] = len(kinds)
+                    pos = gm.end()
+                else:
+                    stack.append((idx, tag))
+                    top = idx
+            elif kind == 1:
                 # close tag: html.parser recovery — pop to the matching
                 # open (closing everything above it); ignore if unmatched
+                ctag = m.group(1)
                 for i in range(len(stack) - 1, -1, -1):
                     if stack[i][1] == ctag:
                         here = len(kinds)
                         for j in range(len(stack) - 1, i - 1, -1):
                             close[stack[j][0]] = here
                         del stack[i:]
+                        top = stack[-1][0] if stack else -1
                         break
-                continue
-            tag = m.group(2)
-            idx = len(kinds)
-            append_k(_OPEN)
-            append_p(tag)
-            append_a(m.group(3) or "")
-            append_par(stack[-1][0] if stack else -1)
-            append_c(idx + 1)  # provisional: empty extent
-            if not m.group(4) and tag not in _VOID:
-                stack.append((idx, tag))
-        if pos < len(html):
-            append_k(_TEXT)
-            append_p(html[pos:])
-            append_a(None)
-            append_par(stack[-1][0] if stack else -1)
-            append_c(0)
-        if n_tags != n_lt:
-            raise _Decline  # some '<' did not form a simple tag
-        end = len(kinds)
+            elif kind == 5:  # comment: dropped up to its close
+                cm = _COMMENT_CLOSE.search(html, pos)
+                if cm is None:
+                    raise _Decline
+                pos = cm.end()
+            elif kind != 6:  # a '<' outside the precondition
+                raise _Decline
+        n_events = len(kinds)
         for idx, _tag in stack:
-            close[idx] = end
+            close[idx] = n_events
         self.kinds = kinds
         self.payload = payload
         self.attrblob = attrblob
@@ -133,11 +172,11 @@ class _Events:
     def attrs(self, i: int) -> dict:
         d = self._attrs_cache.get(i)
         if d is None:
-            d = {}
+            # last duplicate wins; a valueless attribute reads ''
             blob = self.attrblob[i]
-            if blob:
-                for am in _ATTR_RE.finditer(blob):
-                    d[am.group(1)] = am.group(2) or ""
+            d = dict(_ATTR_RE.findall(blob))
+            if "&" in blob:
+                d = {k: unescape(v) for k, v in d.items()}
             self._attrs_cache[i] = d
         return d
 

@@ -621,7 +621,7 @@ def _slice_cards(html: str, sections: tuple) -> Optional[str]:
         keep = m is not None and m.group(1) in wanted
         # kept blocks must also drain their element stack (a kept
         # residue's subtree would differ between the two parses);
-        # dropped blocks may leave residues — see _tag_stream_safe
+        # dropped blocks may leave residues — see slicing._scan_region
         if not block_self_contained(part, require_drain=keep):
             return None  # scope crosses a marker boundary → full parse
         if m is None:

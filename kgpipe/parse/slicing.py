@@ -1,67 +1,41 @@
 # -*- coding: utf-8 -*-
-"""Pre-DOM input pruning shared by the page parsers (rounds 6-7).
+"""Pre-DOM gates for the zidian card slicer (parse/hanzi.py:_slice_cards).
 
-The zidian card slicer (parse/hanzi.py:_slice_cards) proved cutting a
-page down BEFORE DOM construction is worth ~3x on pages dominated by
-unconsumed chrome. Round 7 generalizes the machinery to term pages
-(chengyu/cidian dialects): ``slice_term_page`` splits a page into
-regions at the parsers' own doc-level query markers, keeps only the
-regions the requested field set can observe, and concatenates them —
-under gates that make the sliced parse provably equal to the full one:
+Cutting a page down to its wanted card blocks BEFORE DOM construction
+pays on pages dominated by unconsumed cards and chrome. The slicer is
+sound only where the sliced parse provably equals the full one, and the
+two gates here prove it by simulating the tree builders' tag stream
+(innermost-match close, no implicit closes, raw-text script/style,
+html.parser comment/PI/bogus spans):
 
-  * the hazard list IS the family's doc-level query surface (<h1> plus
-    the marker classes plus the 网络解释 heading text,
-    extract_chengyu.py:80-168 / extract_ciyu.py:82-128): every region
-    containing ANY hazard occurrence a requested field could match is
-    kept, so a doc-level find() sees the same first match;
-  * every region is simulated as a tag stream under the tree builders'
-    shared close rule (innermost match, no implicit closes): construct
-    spans must terminate inside their region (regions whose spans cross
-    a boundary are MERGED with the following region and re-scanned, so
-    a marker inside an open element — span.ci-list inside div.ci-attrs —
-    heals instead of declining), kept regions must drain their element
-    stack, and a close that matches none of a region's own opens while
-    some are open declines the slice (it may bind to a dropped element
-    and implicitly close kept ones in the full parse);
-  * NEW (round 7): a close matching nothing while the region stack is
-    EMPTY is harmless for containment but still splits root-level
-    SIBLING groups in the full parse (a mid-page '</body>' makes later
-    roots children of <html> while the sliced parse, which never saw
-    <body> open, keeps everything adjacent under one root) — and the
-    ciyu extractor navigates doc-level siblings (heading.parent.
-    find_next_sibling, extract_ciyu.py:124-128). Term slicing therefore
-    declines when any element start follows such a stray close in a
-    kept region, or when any later region is kept at all. The zidian
-    card slicer keeps the old exemption: its slice-safe sections
-    (basic_info / fanyi / evolution) use no doc-level sibling
-    navigation, so root-sibling splits are unobservable there;
-  * the dropped page prefix is gated by the SAME tag-stream simulation
-    in prefix mode (every construct span must terminate inside it, so
-    the first marker provably sits in data mode) — replacing the round-6
-    open/close substring counting, which miscounted raw-text lookalike
-    closes and missed markers inside unterminated start-tag attribute
-    values (round-6 ADVICE);
-  * anything else returns None → caller takes the full parse, output
-    unchanged by construction.
+  * ``raw_prefix_terminated``: the always-dropped page prefix ends in
+    data mode — every construct span terminates inside it, so the first
+    card marker is real markup; a close there can only pop prefix
+    elements;
+  * ``block_self_contained``: a card block is a detachable forest —
+    every construct span terminates inside it, every close binds inside
+    it (or, on an empty stack, to the always-dropped prefix), and a
+    KEPT block drains its open-element stack by block end. A close that
+    matches none of the block's own opens while some are open may bind
+    to a dropped element and implicitly close kept ones in the full
+    parse, so it fails the block. A close on an EMPTY stack is exempt:
+    it may split root-level sibling groups, but the slice-safe sections
+    (basic_info / fanyi_info / evolution) use no doc-level sibling
+    navigation, so such splits are unobservable there;
+  * anything else returns False → the caller takes the full parse,
+    output unchanged by construction.
 
-Economics: the exact gate simulation costs ~0.7x the DOM parse per
-byte (measured on chromed pages — nearly break-even), so the scans are
-served by a dispatch (``_scan``) whose fast front-end
-(``_scan_region_fast``) tokenizes all-simple-construct regions with one
-C-level master-regex match per construct at ~2x, deciding identically
-or falling back to the exact simulation (fuzz-pinned). Slicing pays
-when the droppable fraction clears ~45%; callers pass ``min_drop_frac``
-(default 0.5) and the slicer bails out cheaply (one substring pass, no
-gate scans) below it. Bare synthetic term pages
-(first marker at byte ~12) therefore skip slicing entirely — the
-round-6 prefix slicer burned a full-page gate scan there to drop 12
-bytes — while chrome-heavy real-page shapes (70-90% droppable) take it.
+Economics: the exact simulation (``_scan_region``) costs ~0.7x the DOM
+parse per byte, so the gates are served by a dispatch (``_scan``) whose
+fast front-end (``_scan_region_fast``) tokenizes all-simple-construct
+regions with one C-level master-regex match per construct at ~2x,
+deciding identically or falling back to the exact simulation
+(fuzz-pinned).
 """
 
 from __future__ import annotations
 
 import re
-from bisect import bisect_left, bisect_right
 from typing import NamedTuple, Optional
 
 from kgpipe.htmldom import (
@@ -112,66 +86,43 @@ class RegionScan(NamedTuple):
 
     ok: bool  # region safe under the mode's rules
     drained: bool  # open-element stack empty at region end
-    saw_stray: bool  # close matched nothing on an EMPTY stack
-    elem_after_stray: bool  # an element start occurred after such a stray
 
 
-_FAIL = RegionScan(False, False, False, False)
+_FAIL = RegionScan(False, False)
 
 
-def _scan_region(
-    kept: str,
-    interior: bool = False,
-    prefix: bool = False,
-    allow_empty_stray: bool = True,
-) -> RegionScan:
+def _scan_region(kept: str, prefix: bool = False) -> RegionScan:
     """Tag-stream simulation of a candidate slice region under the tree
     builders' shared semantics (htmldom: innermost-match close, no
     implicit closes, raw-text script/style, html.parser comment/PI/bogus
     spans).
 
-    Modes:
-      * default (suffix): everything after the region is part of it —
-        an unterminated comment / PI / raw text / declaration at EOF is
-        the same single non-element region in both parses, so the scan
-        stops as safe.
-      * ``interior=True``: the region is an interior block of a
-        marker-split page — every construct span must terminate INSIDE
-        it, so region boundaries always fall in data mode.
+    Every construct span must terminate INSIDE the region, so region
+    boundaries always fall in data mode. Modes:
+      * default: the region is an interior block of a marker-split page;
       * ``prefix=True``: the region is the always-dropped page prefix —
-        interior span rules apply (the first marker must provably sit
-        in data mode), but close tags are always harmless: nothing kept
-        precedes the prefix, so a close can only pop prefix elements.
+        close tags are always harmless: nothing kept precedes the
+        prefix, so a close can only pop prefix elements.
 
     Fails (ok=False) when a close tag matches none of the region's own
     open elements while at least one is still open (outside prefix
     mode): in the FULL parse that close may bind to an element of a
     dropped region and implicitly close the kept elements above it —
     the one tokenization-independent way dropped input can change
-    containment among kept nodes. Also fails on any construct whose
-    exact span the strict tokenizer can't guarantee (tolerant start
-    tags, marked sections, raw-text lookalike closes).
-
-    A close matching nothing while the stack is EMPTY is recorded
-    (``saw_stray``) rather than failed — it cannot change containment
-    among kept nodes, only pop always-dropped prefix/residue elements —
-    UNLESS ``allow_empty_stray=False``, where it also fails. Callers
-    whose extractors navigate doc-level siblings must additionally
-    reject strays followed by kept element starts (see module
-    docstring); ``elem_after_stray`` reports the in-region half of that
-    condition.
+    containment among kept nodes. A close matching nothing while the
+    stack is EMPTY passes (see the module docstring). Also fails on any
+    construct whose exact span the strict tokenizer can't guarantee
+    (tolerant start tags, marked sections, raw-text lookalike closes).
 
     ``drained`` reports whether the open-element stack emptied by
-    region end — required for KEPT interior blocks, whose residue
-    elements extractors could read through (a residue's get_text()
-    would include following blocks' text in the full parse but not the
-    sliced one). DROPPED blocks may leave residues: their unclosed
-    opens only deepen where later blocks attach, which no kept-node
-    containment or kept-subtree text ever observes.
+    region end — required for KEPT blocks, whose residue elements
+    extractors could read through (a residue's get_text() would include
+    following blocks' text in the full parse but not the sliced one).
+    DROPPED blocks may leave residues: their unclosed opens only deepen
+    where later blocks attach, which no kept-node containment or
+    kept-subtree text ever observes.
     """
     stack: list[str] = []
-    saw_stray = False
-    elem_after_stray = False
     pos, n = 0, len(kept)
     while pos < n:
         lt = kept.find("<", pos)
@@ -179,8 +130,6 @@ def _scan_region(
             break
         nxt = kept[lt + 1 : lt + 2]
         if nxt and (("a" <= nxt <= "z") or ("A" <= nxt <= "Z")):
-            if saw_stray:
-                elem_after_stray = True
             m = _SIMPLE_TAG_RE.match(kept, lt + 1)
             if m is not None:
                 tag = m.group(1).lower()
@@ -195,11 +144,7 @@ def _scan_region(
                 if tag in _RAW_END:
                     em = _RAW_END[tag].search(kept, pos)
                     if em is None:
-                        # suffix mode: raw text to EOF in both parses;
-                        # interior/prefix: the span crosses the region end
-                        if interior or prefix:
-                            return _FAIL
-                        return RegionScan(True, not stack, saw_stray, elem_after_stray)
+                        return _FAIL  # raw text crosses the region end
                     gm = _ENDTAGFIND.match(kept, em.start())
                     if gm is None or gm.group(1).lower() != tag:
                         return _FAIL  # lookalike close: stdlib chunking
@@ -219,9 +164,7 @@ def _scan_region(
                         continue
                     gt = kept.find(">", lt)  # bogus comment: dropped
                     if gt < 0:
-                        if interior or prefix:
-                            return _FAIL  # incomplete at region end
-                        return RegionScan(True, not stack, saw_stray, elem_after_stray)
+                        return _FAIL  # incomplete at region end
                     pos = gt + 1
                     continue
                 if em.end() >= n or kept[em.end()] not in " \t\n\r\f/>":
@@ -235,74 +178,41 @@ def _scan_region(
                 # innermost (topmost) matching open: pop through it
                 idx = len(stack) - 1 - stack[::-1].index(name)
                 del stack[idx:]
-            elif prefix:
-                pass  # can only pop always-dropped prefix elements
-            elif stack:
+            elif stack and not prefix:
                 return _FAIL  # may bind to a dropped-prefix element
-            else:
-                if not allow_empty_stray:
-                    return _FAIL
-                saw_stray = True
         elif nxt == "!":
             if kept.startswith("<!--", lt):
                 cm = _COMMENT_CLOSE.search(kept, lt + 4)
                 if cm is None:
-                    # suffix mode: comment to EOF in both parses;
-                    # interior/prefix: the span crosses the region end
-                    if interior or prefix:
-                        return _FAIL
-                    return RegionScan(True, not stack, saw_stray, elem_after_stray)
+                    return _FAIL  # comment crosses the region end
                 pos = cm.end()
             elif kept.startswith("<![", lt):
                 return _FAIL  # marked section: span rules differ
             else:
                 gt = kept.find(">", lt)  # declaration/bogus: dropped
                 if gt < 0:
-                    if interior or prefix:
-                        return _FAIL  # incomplete at region end
-                    return RegionScan(True, not stack, saw_stray, elem_after_stray)
+                    return _FAIL  # incomplete at region end
                 pos = gt + 1
         elif nxt == "?":
             gt = kept.find(">", lt)  # processing instruction: dropped
             if gt < 0:
-                if interior or prefix:
-                    return _FAIL  # incomplete at region end
-                return RegionScan(True, not stack, saw_stray, elem_after_stray)
+                return _FAIL  # incomplete at region end
             pos = gt + 1
         else:
             pos = lt + 1  # literal '<' text: no construct
-    return RegionScan(True, not stack, saw_stray, elem_after_stray)
+    return RegionScan(True, not stack)
 
 
-def _scan(
-    kept: str,
-    interior: bool = False,
-    prefix: bool = False,
-    allow_empty_stray: bool = True,
-) -> RegionScan:
+def _scan(kept: str, prefix: bool = False) -> RegionScan:
     """Dispatch: fast token-loop front-end (``_scan_region_fast``),
     exact simulation whenever the fast path can't decide. Result is
     identical to calling ``_scan_region`` directly (fuzz-asserted);
     only the constant factor changes — the fast path decides the
     all-simple-constructs regions real chrome is made of at ~2x."""
-    st = _scan_region_fast(
-        kept, interior=interior, prefix=prefix, allow_empty_stray=allow_empty_stray
-    )
+    st = _scan_region_fast(kept, prefix=prefix)
     if st is not None:
         return st
-    return _scan_region(
-        kept, interior=interior, prefix=prefix, allow_empty_stray=allow_empty_stray
-    )
-
-
-def _tag_stream_safe(
-    kept: str, interior: bool = False, require_drain: bool = False
-) -> bool:
-    """Round-6 boolean view of ``_scan_region`` (zidian card slicer and
-    suffix-slice gates): safe, with the empty-stack stray exemption, and
-    optionally drained."""
-    st = _scan(kept, interior=interior)
-    return st.ok and (st.drained or not require_drain)
+    return _scan_region(kept, prefix=prefix)
 
 
 def block_self_contained(block: str, require_drain: bool = True) -> bool:
@@ -311,7 +221,8 @@ def block_self_contained(block: str, require_drain: bool = True) -> bool:
     and no close can reach another region. ``require_drain=True`` (kept
     blocks) additionally requires its open-element stack to drain to
     empty by block end (see _scan_region for the full argument)."""
-    return _tag_stream_safe(block, interior=True, require_drain=require_drain)
+    st = _scan(block)
+    return st.ok and (st.drained or not require_drain)
 
 
 #: one-C-match-per-construct tokenizer for the region-scan fast path
@@ -338,12 +249,7 @@ _PREFIX_TOKEN_RE = re.compile(
 )
 
 
-def _scan_region_fast(
-    kept: str,
-    interior: bool = False,
-    prefix: bool = False,
-    allow_empty_stray: bool = True,
-) -> Optional[RegionScan]:
+def _scan_region_fast(kept: str, prefix: bool = False) -> Optional[RegionScan]:
     """One-C-match-per-construct front-end for ``_scan_region``: returns
     the identical RegionScan when every construct is one the master
     token pattern can PROVE the span of, or None when anything is
@@ -356,21 +262,18 @@ def _scan_region_fast(
       * simple start tags: the exact scan tries _SIMPLE_TAG_RE FIRST,
         so both consume m.end() with the same name/self-close split;
         script/style (not self-closed) then jump via the same
-        _RAW_END + _ENDTAGFIND check, with the same suffix-mode
-        early-return on an unterminated span;
+        _RAW_END + _ENDTAGFIND check;
       * comments: matched only at '<!--', span finished with the same
         stdlib _COMMENT_CLOSE ('--\\s*>' — a strict '-->' literal here
         would over-run past a tolerant close and diverge);
       * strict end tags: stdlib endtagfind's own pattern, fed through
-        the same innermost-match/prefix/stray state transitions;
+        the same innermost-match/prefix state transitions;
       * declarations exclude '<![' (marked section → exact scan, which
         declines) and comments by ordering; PIs mirror find('>').
     Everything else — tolerant start/end tags, any construct left
     open at region end — matches no alternative (or a jump fails) and
     returns None; the exact scan then renders the verdict."""
     stack: list[str] = []
-    saw_stray = False
-    elem_after_stray = False
     tok = _PREFIX_TOKEN_RE.match
     pos, n = 0, len(kept)
     while pos < n:
@@ -380,16 +283,12 @@ def _scan_region_fast(
         li = m.lastindex
         pos = m.end()
         if li == 3:  # simple start tag (1=name, 2=attrs blob, 3=slash)
-            if saw_stray:
-                elem_after_stray = True
             tag = m.group(1).lower()
             if not m.group(3) and tag not in VOID_ELEMENTS:
                 if tag in _RAW_END:
                     em = _RAW_END[tag].search(kept, pos)
                     if em is None:
-                        if interior or prefix:
-                            return _FAIL
-                        return RegionScan(True, not stack, saw_stray, elem_after_stray)
+                        return _FAIL
                     gm = _ENDTAGFIND.match(kept, em.start())
                     if gm is None or gm.group(1).lower() != tag:
                         return _FAIL  # lookalike close: stdlib chunking
@@ -401,25 +300,17 @@ def _scan_region_fast(
             if name in stack:
                 idx = len(stack) - 1 - stack[::-1].index(name)
                 del stack[idx:]
-            elif prefix:
-                pass  # can only pop always-dropped prefix elements
-            elif stack:
+            elif stack and not prefix:
                 return _FAIL  # may bind to a dropped-prefix element
-            else:
-                if not allow_empty_stray:
-                    return _FAIL
-                saw_stray = True
         elif li == 4:  # comment opener
             cm = _COMMENT_CLOSE.search(kept, pos)
             if cm is None:
-                if interior or prefix:
-                    return _FAIL
-                return RegionScan(True, not stack, saw_stray, elem_after_stray)
+                return _FAIL
             pos = cm.end()
         # else (li is None): text run, declaration/bogus, PI, or a
         # literal '<' — data-mode constructs the exact scan also just
         # steps over
-    return RegionScan(True, not stack, saw_stray, elem_after_stray)
+    return RegionScan(True, not stack)
 
 
 def raw_prefix_terminated(prefix: str) -> bool:
@@ -442,215 +333,3 @@ def raw_prefix_terminated(prefix: str) -> bool:
     scanning, and the fast path roughly halves it on the all-simple-
     construct chrome real pages are made of."""
     return _scan(prefix, prefix=True).ok
-
-
-# ---------------------------------------------------------------------------
-# term-page slicing: doc-level query surfaces per family
-# ---------------------------------------------------------------------------
-
-#: tag-name hazard, case-insensitive like the tokenizer's tag names
-_H1_RE = re.compile(r"<h1", re.IGNORECASE)
-
-#: chengyu doc-level query surface (extract_chengyu.py:80-168): h1,
-#: div.ci-title, div.ci-attrs, div.ci-content, ol.ci-fanyi. HTML class
-#: matching is case-sensitive, so plain substring search is exact (and
-#: over-approximates into text/attribute occurrences, which only ever
-#: KEEPS more).
-CHENGYU_SURFACE = {
-    "h1": _H1_RE,
-    "ci-title": "ci-title",
-    "ci-attrs": "ci-attrs",
-    "ci-content": "ci-content",
-    "ci-fanyi": "ci-fanyi",
-}
-
-#: ciyu doc-level query surface (extract_ciyu.py:82-128): the ci-title
-#: substring covers ci-title-wrap; ci-tag / ci-list / pinyin are
-#: descendant queries under these roots, never doc-level, so they need
-#: no cut of their own. 网络解释 is matched doc-level by heading text.
-CIYU_SURFACE = {
-    "ci-title": "ci-title",
-    "ci-attrs": "ci-attrs",
-    "defn": "网络解释",
-}
-
-#: hazards whose consumer navigates doc-level siblings FORWARD from the
-#: hazard's region (ciyu: heading.parent.find_next_sibling('div'),
-#: extract_ciyu.py:124-128) — every region from the first such kept
-#: hazard onward is kept, so the hop target and everything between stay
-#: verbatim.
-CIYU_KEEP_TAIL = frozenset({"defn"})
-
-#: gate-scan economics (module docstring): below this droppable
-#: fraction the gates cost more than the parse they save.
-MIN_DROP_FRAC = 0.5
-#: absolute floor — never bother for less than this many dropped bytes
-MIN_DROP_BYTES = 192
-#: pathological marker soups: decline past this many hazard occurrences
-#: (each occurrence is a potential cut; merging rescans are O(cuts^2))
-_MAX_OCCS = 64
-
-
-def _occurrences(html: str, surface: dict) -> list:
-    """All (position, hazard_key) occurrences, sorted by position."""
-    occs = []
-    for key, pat in surface.items():
-        if isinstance(pat, str):
-            i = html.find(pat)
-            while i >= 0:
-                occs.append((i, key))
-                i = html.find(pat, i + 1)
-        else:
-            for m in pat.finditer(html):
-                occs.append((m.start(), key))
-    occs.sort()
-    return occs
-
-
-def slice_term_page(
-    html: str,
-    surface: dict,
-    wanted: frozenset,
-    keep_tail: frozenset = frozenset(),
-    min_drop_frac: float = MIN_DROP_FRAC,
-) -> Optional[str]:
-    """Cut a term page down to the regions the requested query surface
-    can observe, or return None when not provably safe / not worth it
-    (caller falls back to the full parse — output unchanged either way).
-
-    ``surface`` maps hazard key → substring or compiled regex (the
-    family's doc-level query surface); ``wanted`` is the subset the
-    caller's requested fields actually query; ``keep_tail`` marks
-    hazards whose extractor hops doc-level siblings forward (everything
-    from such a kept hazard onward is kept verbatim).
-    """
-    n = len(html)
-    if n == 0:
-        return None
-    occs = _occurrences(html, surface)
-    if not occs or len(occs) > _MAX_OCCS:
-        return None
-    positions = [p for p, _ in occs]
-
-    # cut points: the tag start enclosing each occurrence
-    cutset = set()
-    for p, _ in occs:
-        lt = html.rfind("<", 0, p)
-        if lt < 0:
-            return None  # hazard in leading text: nothing provable to drop
-        cutset.add(lt)
-    cuts = sorted(cutset)
-
-    def labels(s: int, e: int) -> frozenset:
-        lo, hi = bisect_left(positions, s), bisect_right(positions, e - 1)
-        return frozenset(k for _, k in occs[lo:hi])
-
-    # cheap economics bail-out BEFORE any gate scan: prefix + regions
-    # with no wanted hazard are the droppable estimate (merging can only
-    # shrink it)
-    bounds = cuts + [n]
-    droppable = cuts[0]
-    tail_from = None
-    for i in range(len(cuts)):
-        lab = labels(bounds[i], bounds[i + 1])
-        if lab & wanted & keep_tail and tail_from is None:
-            tail_from = i
-        if not (lab & wanted) and (tail_from is None):
-            droppable += bounds[i + 1] - bounds[i]
-    if min_drop_frac > 0 and (
-        droppable < MIN_DROP_BYTES or droppable / n < min_drop_frac
-    ):
-        return None
-
-    # dropped prefix must provably end in data mode
-    if cuts[0] > 0 and not raw_prefix_terminated(html[: cuts[0]]):
-        return None
-
-    # region construction with forward merging: a region whose construct
-    # spans cross its end (or whose kept stack fails to drain) absorbs
-    # the following region and is re-scanned; labels only grow, so keep
-    # decisions stay sound.
-    regions: list = []  # (start, end, scan)
-    start = cuts[0]
-    bi = 1  # next boundary index into bounds
-    while start < n:
-        # find the smallest safe end for the region starting at `start`
-        while True:
-            end = bounds[bi] if bi < len(bounds) else n
-            last = end >= n
-            st = _scan(html[start:end], interior=not last)
-            bi += 1
-            if st.ok:
-                break
-            if last:
-                return None  # even the full tail is unsafe
-        regions.append([start, end, st])
-        start = end
-
-    # keep decisions
-    keeps = []
-    tail_active = False
-    for start, end, st in regions:
-        lab = labels(start, end)
-        if lab & wanted & keep_tail:
-            tail_active = True
-        keeps.append(tail_active or bool(lab & wanted))
-
-    # kept interior regions must drain; merge forward until they do
-    i = 0
-    while i < len(regions):
-        start, end, st = regions[i]
-        while keeps[i] and not st.drained and end < n:
-            if i + 1 >= len(regions):
-                break
-            nstart, nend, _ = regions.pop(i + 1)
-            nkeep = keeps.pop(i + 1)
-            keeps[i] = keeps[i] or nkeep
-            end = nend
-            st = _scan(html[start:end], interior=end < n)
-            if not st.ok:
-                return None
-            regions[i] = [start, end, st]
-        if keeps[i] and not st.drained and end < n:
-            return None
-        i += 1
-
-    # sibling-split rule (round 7, module docstring): a stray close on an
-    # empty region stack may merge/split root-level sibling groups — safe
-    # only if no kept element start can follow it anywhere on the page.
-    for i, (start, end, st) in enumerate(regions):
-        if not st.saw_stray:
-            continue
-        if keeps[i] and st.elem_after_stray:
-            return None
-        if any(keeps[j] for j in range(i + 1, len(regions))):
-            return None
-
-    if all(keeps):
-        kept = html[cuts[0] :]
-    else:
-        kept = "".join(html[s:e] for (s, e, _), k in zip(regions, keeps) if k)
-    if len(kept) >= n:
-        return None  # nothing dropped: the "slice" is the full parse
-    if min_drop_frac > 0 and (
-        n - len(kept) < MIN_DROP_BYTES or (n - len(kept)) / n < min_drop_frac
-    ):
-        return None  # merging ate the savings: not worth the sliced parse
-    return kept or None
-
-
-def prefix_slice(html: str) -> Optional[str]:
-    """Round-6 API kept for gate-viability checks and tests: drop the
-    pre-content chrome of a term page under the full (both-family) query
-    surface, with NO economics threshold. The parsers themselves now
-    call ``slice_term_page`` with their family surface, requested-field
-    pushdown and the cost threshold."""
-    surface = dict(CHENGYU_SURFACE)
-    surface.update(CIYU_SURFACE)
-    return slice_term_page(
-        html,
-        surface,
-        wanted=frozenset(surface),
-        keep_tail=CIYU_KEEP_TAIL,
-        min_drop_frac=0.0,
-    )

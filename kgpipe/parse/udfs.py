@@ -111,9 +111,9 @@ _HANZI_COLUMNS = [
 def make_parse_chengyu_udf(fields: tuple | None = None):
     """Projection-pruned idiom parser UDF: only ``fields`` are extracted
     (the rest come back NULL in the typed struct and are dropped by
-    to_json), and page regions only unrequested fields could observe are
-    sliced away before DOM construction (parse/slicing.py). The KG
-    pipeline passes chengyu.HOT_FIELDS; None = full extraction."""
+    to_json). The KG pipeline passes chengyu.HOT_FIELDS, which the flat
+    scan serves without a DOM (parse/fastterm.py); None = full
+    extraction."""
 
     @F.pandas_udf(schemas.CHENGYU_PARSED)
     def udf(content: pd.Series, url: pd.Series) -> pd.DataFrame:

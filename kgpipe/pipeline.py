@@ -48,14 +48,15 @@ from kgpipe.parse.udfs import (
 #: parser-level projection pushdown: the triple-derivation hot path
 #: consumes exactly these zidian sections (nodes properties, radicals,
 #: variants, pinyin, translations) — the other five are never extracted
-#: nor serialized unless full_hanzi_properties is requested
+#: nor serialized unless full_properties is requested
 PIPELINE_HANZI_SECTIONS = ("basic_info", "fanyi_info")
 parse_hanzi_pruned_udf = make_parse_hanzi_udf(PIPELINE_HANZI_SECTIONS)
 
-#: same pushdown for the term families (round 7): the triple derivation
-#: reads name + pinyin + mention lists (+ idiom translation) — the
-#: ci-content / 网络解释 regions are never extracted NOR DOM-parsed on
-#: the hot path (chengyu.HOT_FIELDS / ciyu.HOT_FIELDS + slice_term_page)
+#: same pushdown for the term families: the triple derivation reads
+#: name + pinyin + mention lists (+ idiom translation), which the flat
+#: scan extracts without a DOM (chengyu.HOT_FIELDS / ciyu.HOT_FIELDS,
+#: parse/fastterm.py); the ci-content / 网络解释 fields are never
+#: extracted on the hot path
 from kgpipe.parse.chengyu import HOT_FIELDS as CHENGYU_HOT_FIELDS
 from kgpipe.parse.ciyu import HOT_FIELDS as CIYU_HOT_FIELDS
 
@@ -193,15 +194,15 @@ def term_frame(linked: DataFrame, entity_type: str, data_prefix: str) -> DataFra
     )
 
 
-def parse_term_pages(corpus: DataFrame, full_term_properties: bool = False):
+def parse_term_pages(corpus: DataFrame, full: bool = False):
     """(chengyu, cidian) pages as (path, parsed) rows, each page through
     its parse UDF once: explode(array(udf(...))) pins the evaluation
     below a Generate node, which projection collapse cannot cross. A
     consumer that keys or filters on the UDF output (the linkage join)
     otherwise makes ExtractPythonUDFs plant a SECOND ArrowEvalPython for
     the output projection — every term page parsed twice, ~4.2s of the
-    9.6s barrier at bench scale 1600."""
-    full = full_term_properties
+    9.6s barrier at bench scale 1600. ``full`` extracts every field
+    instead of the hot ones."""
     return tuple(
         _family(corpus, family).select(
             "path", F.explode(F.array(udf("content", "path"))).alias("parsed")
@@ -242,14 +243,13 @@ def stage_pages(
     corpus: DataFrame,
     seeds: DataFrame,
     cache: bool = True,
-    full_hanzi_properties: bool = False,
-    full_term_properties: bool = False,
+    full_properties: bool = False,
 ) -> Staged:
     """Parse step: parse each page once, link the seeds to the term pages
     and gate the zidian pages. Runs no job."""
-    hanzi_sections = ALL_HANZI_SECTIONS if full_hanzi_properties else PIPELINE_HANZI_SECTIONS
-    parse_hanzi = parse_hanzi_full_udf if full_hanzi_properties else parse_hanzi_pruned_udf
-    chengyu_parsed, cidian_parsed = parse_term_pages(corpus, full_term_properties)
+    hanzi_sections = ALL_HANZI_SECTIONS if full_properties else PIPELINE_HANZI_SECTIONS
+    parse_hanzi = parse_hanzi_full_udf if full_properties else parse_hanzi_pruned_udf
+    chengyu_parsed, cidian_parsed = parse_term_pages(corpus, full_properties)
     # zidian parsed once for all sections
     zidian_parsed = _family(corpus, "zidian").select(
         "path", parse_hanzi("content", "path").alias("parsed")
@@ -311,26 +311,23 @@ def build_graph(
     cache: bool = True,
     hanzi_dim: DataFrame | None = None,
     composed_mode: str = "broadcast",
-    full_hanzi_properties: bool = False,
-    full_term_properties: bool = False,
+    full_properties: bool = False,
 ) -> GraphResult:
     """``stage_pages`` then ``graph_from_staged``. ``hanzi_dim`` (one
     ``name`` column) overrides the composed-of dimension (default: the
     staged valid characters); ``composed_mode`` selects its skew strategy
-    (see kgpipe.triples.composed_of). ``full_hanzi_properties`` (S11 full
-    fidelity) parses and persists ALL seven zidian sections into the
-    Hanzi node properties — matching the reference's per-character
-    section blobs (hanyuguoxue.py:1411-1439); triple derivation is
-    identical in both modes (it reads only basic_info + fanyi_info).
+    (see kgpipe.triples.composed_of).
 
-    ``full_term_properties`` is the term-family twin (S9/S10 fidelity):
-    the reference upserts the COMPLETE idiom/word record (explanation,
-    source, usage, example, zhuyin, emotion / definition, part_of_speech,
-    is_common — chengyu_mysql.py:162-221); the default hot path extracts
-    only the triple-bearing fields, so term node ``properties`` JSON
-    carries just those. Triples are identical in both modes."""
-    staged = stage_pages(corpus, seeds, cache, full_hanzi_properties, full_term_properties)
-    return graph_from_staged(staged, run_id, cache, hanzi_dim, composed_mode, full_hanzi_properties)
+    ``full_properties`` (S9-S11 full fidelity) parses and persists every
+    field the reference stores: ALL seven zidian sections into the Hanzi
+    node properties — the reference's per-character section blobs
+    (hanyuguoxue.py:1411-1439) — and the COMPLETE idiom/word record
+    (explanation, source, usage, example, zhuyin, emotion / definition,
+    part_of_speech, is_common — chengyu_mysql.py:162-221) into the term
+    node properties. The default hot path extracts only the
+    triple-bearing fields. Triples are identical in both modes."""
+    staged = stage_pages(corpus, seeds, cache, full_properties)
+    return graph_from_staged(staged, run_id, cache, hanzi_dim, composed_mode, full_properties)
 
 
 def graph_from_staged(
@@ -339,7 +336,7 @@ def graph_from_staged(
     cache: bool = True,
     hanzi_dim: DataFrame | None = None,
     composed_mode: str = "broadcast",
-    full_hanzi_properties: bool = False,
+    full_properties: bool = False,
 ) -> GraphResult:
     """Graph step: edge families, canonical mapping, triples and the lazy
     members from staged (or sliced staged) frames. With ``cache`` on,
@@ -415,7 +412,7 @@ def graph_from_staged(
         ).select("src_name", F.col("p.pinyin").alias("py"), "lineage").where(
             F.length("py") > 0
         )
-        if full_hanzi_properties:
+        if full_properties:
             # the unpruned sections carry per-reading pinyin (reference
             # extract_guoyu.py:25-220, extract_yisi.py, extract_liangan.py) —
             # SURVEY §2.11 maps them to has-pinyin evidence, so full-fidelity
@@ -546,7 +543,7 @@ def graph_from_staged(
         # node properties: basic_info only on the hot path; every parsed
         # section in full-fidelity mode (the reference's section blobs,
         # hanyuguoxue.py:1411-1439)
-        prop_sections = ALL_HANZI_SECTIONS if full_hanzi_properties else ("basic_info",)
+        prop_sections = ALL_HANZI_SECTIONS if full_properties else ("basic_info",)
         prop_cols = [F.col(s) for s in prop_sections] + [F.col("unicode_decimal")]
         hanzi_nodes = hz_valid.select(
             node_id(F.lit("Hanzi"), F.col("basic_info.data.character")).alias("node_id"),

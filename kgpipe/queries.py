@@ -1391,7 +1391,7 @@ def _kg_graph(spark):
     only enriches the node ``properties`` JSON (S11) — triples, edges
     and the projected node columns are identical either way (the five
     oracles verify exactly that) — so the cache always builds with
-    ``full_hanzi_properties=True``. Keyed by applicationId so a repeat
+    ``full_properties=True``. Keyed by applicationId so a repeat
     call in the same Spark application reuses the first build; the
     result frames are pinned with lazy localCheckpoints so each
     materializes once at its first consuming action and every later
@@ -1404,9 +1404,7 @@ def _kg_graph(spark):
     from kgpipe.pipeline import build_graph
 
     cdf, sdf = _kg_corpus(spark)
-    g = build_graph(
-        spark, cdf, sdf, full_hanzi_properties=True, full_term_properties=True
-    )
+    g = build_graph(spark, cdf, sdf, full_properties=True)
     g.triples = g.triples.localCheckpoint(eager=False)
     g.nodes = g.nodes.localCheckpoint(eager=False)
     g.edges = g.edges.localCheckpoint(eager=False)

@@ -130,8 +130,7 @@ def main() -> None:
         run_id=run_id,
         n_buckets=args.buckets,
         sweep_range=sweep_range,
-        full_hanzi_properties=args.full_sections,
-        full_term_properties=args.full_sections,
+        full_properties=args.full_sections,
     )
     if args.retry_errors:
         finish_retry(spark, wh, run_id, corpus_df)

@@ -147,8 +147,7 @@ def run_graph_stream(
     warehouse_root: str,
     checkpoint_dir: str,
     max_files_per_trigger: int = 8,
-    full_hanzi_properties: bool = False,
-    full_term_properties: bool = False,
+    full_properties: bool = False,
 ) -> None:
     """Full-graph streaming ingest: every edge family, not just mentions.
 
@@ -214,15 +213,14 @@ def run_graph_stream(
         keep_rdds = persistent_rdd_ids(spark.sparkContext)
         staged = stage_pages(
             batch_df.dropDuplicates(["path"]), seeds,
-            full_hanzi_properties=full_hanzi_properties,
-            full_term_properties=full_term_properties,
+            full_properties=full_properties,
         )
         known = hanzi_dim_table.read(spark)
         batch_chars = staged.characters().distinct()
         g = graph_from_staged(
             staged, run_id=f"stream-{batch_id}",
             hanzi_dim=known.unionByName(batch_chars).distinct(),
-            full_hanzi_properties=full_hanzi_properties,
+            full_properties=full_properties,
         )
         wh.nodes.merge_best(
             g.nodes,

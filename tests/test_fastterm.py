@@ -5,8 +5,9 @@ HOT-fields path must produce EXACTLY the DOM path's output or decline.
 Three layers:
   * full-corpus sweeps (bare + chromed generator modes) comparing
     ``fast=True`` vs ``fast=False`` end to end;
-  * randomized mutation fuzz — entities, comments, uppercase tags, stray
-    ``<``, unclosed/nested tags, raw-text scripts spliced into real
+  * randomized mutation fuzz — entities, comments, declarations,
+    uppercase tags, stray ``<``, unclosed/nested tags, raw-text scripts
+    with look-alike or missing closes spliced into bare and chromed
     pages: on every mutant the two paths must still agree (the fast path
     is free to decline, never to diverge);
   * targeted adversarial fixtures for the trickiest mirrored semantics
@@ -49,9 +50,11 @@ def test_fastterm_equals_dom_on_corpus():
 
 
 def test_fastterm_mutation_fuzz_never_diverges():
-    corpus = generate_corpus(n_hanzi=10, n_words=40, n_idioms=30, seed=42)
+    bare = generate_corpus(n_hanzi=10, n_words=40, n_idioms=30, seed=42)
+    chromed = generate_corpus(n_hanzi=10, n_words=40, n_idioms=30, seed=42, chrome=True)
     pages = [
         (p, h)
+        for corpus in (bare, chromed)
         for fam in _FAMS
         for p, h in _pages(corpus, fam)
     ]
@@ -62,6 +65,11 @@ def test_fastterm_mutation_fuzz_never_diverges():
         "<b>近</b>义词", "<span class=\"ci-list\">", "近义词",
         "<ol class=\"ci-fanyi\"><li><label>x</label>y</li></ol>",
         "<div class=\"ci-attrs\">", "<h1></h1>", "<span a=1>",
+        # chrome constructs: declarations, raw text with a missing or
+        # look-alike close, uppercase raw tags, references in attributes
+        "<!DOCTYPE html>", "<script>", "</scriptx>", "<SCRIPT>",
+        "<script>x</scriptx>", "<style>a<b</style>", "<!-- <h1>x</h1> -->",
+        "<a title=\"x&gt;y\">", "<span class=\"ci-list&#32;z\">", "&#1;",
     ]
     rng = random.Random(11)
     for _ in range(1500):
@@ -140,11 +148,43 @@ def test_fastterm_adversarial_fixtures():
 def test_fastterm_declines_are_conservative():
     """Inputs outside the precondition must decline (return None from the
     flat scan), never guess."""
-    assert fastterm.fast_hot_chengyu("<h1>a &amp; b</h1>") is None
-    assert fastterm.fast_hot_chengyu("<H1>upper</H1>") is None
-    assert fastterm.fast_hot_chengyu("<h1>a < b</h1>") is None
-    assert fastterm.fast_hot_chengyu("<h1 a='x'>single-quoted</h1>") is None
-    assert fastterm.fast_hot_chengyu("<!-- c --><h1>x</h1>") is None
+    for html in (
+        "<H1>upper</H1>",
+        "<h1>a < b</h1>",
+        "<h1 a='x'>single-quoted</h1>",
+        "<SCRIPT>x</SCRIPT><h1>x</h1>",
+        "<script>x</scriptx><h1>x</h1>",  # look-alike raw-text close
+        "<h1>x</h1><script>unterminated",
+        "<!-- unterminated <h1>x</h1>",
+        "<![CDATA[x]]><h1>x</h1>",
+        "<?php x ?><h1>x</h1>",
+    ):
+        assert fastterm.fast_hot_chengyu(html) is None, html
     # ...and the parser still answers correctly through the DOM path
-    out = parse_chengyu_html("<h1>a &amp; b</h1>", "u", fields=CY_HOT)
-    assert out["data"]["chengyu"] == "a & b"
+    out = parse_chengyu_html("<h1>a < b</h1>", "u", fields=CY_HOT)
+    assert out["data"]["chengyu"] == "a < b"
+
+
+def test_fastterm_reads_chrome_constructs():
+    """The constructs of a live page's chrome are inside the precondition
+    and read as the DOM reads them: references resolved in text and
+    attribute values, comments and declarations dropped, script/style
+    raw text kept verbatim up to the strict close tag."""
+    html = (
+        '<!DOCTYPE html><html><head><script>var s = "<h1>no</h1>&amp;";</script>'
+        "<style>p>a{}</style></head><body><!-- <h1>no</h1> -->"
+        "<h1>a &amp; b<!-- c --> &#x4e00;</h1>"
+        '<div class="ci-attrs"><p>近义词：<a title="x&gt;y">甲&lt;</a></p></div>'
+        "</body></html>"
+    )
+    fast = fastterm.fast_hot_chengyu(html)
+    assert fast == {"chengyu": "a & b 一", "synonyms": ["甲<"]}
+    assert fast == parse_chengyu_html(html, "u", fields=CY_HOT, fast=False)["data"]
+    # a character reference that makes an attribute's class list
+    ciyu = (
+        '<div class="ci-attrs"><p><label>近义词</label>'
+        '<span class="ci-list&#32;x"><a>乙</a></span></p></div>'
+    )
+    assert fastterm.fast_hot_ciyu(ciyu)["synonyms"] == ["乙"]
+    a, b = _both_ciyu(ciyu)
+    assert a == b

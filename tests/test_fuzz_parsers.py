@@ -176,20 +176,6 @@ def test_slice_cards_nested_card_regression():
     assert out["basic_info"] == {"error": "zi-title not found"}
 
 
-def test_term_slice_prefix_close_binding_regression():
-    """Hypothesis counterexample, pinned (round 6): a '<p>' dropped with
-    the prefix whose '</p>' lands between kept opens — in the full parse
-    the close implicitly pops the kept <div>/<h1>, in the sliced parse
-    it is stray, so the h1 text diverged. The kept-region tag-stream
-    simulation must decline."""
-    from kgpipe.parse.slicing import prefix_slice
-
-    html = "<p><div class='ci-title'><h1></p>注音：ㄨㄤ"
-    assert prefix_slice(html) is None
-    for fn in (parse_chengyu_html, parse_ciyu_html):
-        assert fn(html, "p") == fn(html, "p", slice_input=False)
-
-
 def test_slice_cards_cross_block_close_regression():
     """Same channel on the card slicer (round 6): the dropped page
     prefix leaves '<p>' open and the KEPT 基本信息 card carries the
@@ -321,84 +307,33 @@ def test_pii_parenthesized_phone_and_precise_variant():
 
 
 # ---------------------------------------------------------------------------
-# round-6 term-page prefix slicing: sliced parse must NEVER diverge from
-# the full parse, on synthetic pages, chrome-wrapped pages, and soup
+# term pages: the flat scan (fast=True) must equal the DOM parse
+# (fast=False) at the hot fields, or decline — on chrome + page soups
+# and on garbage
 # ---------------------------------------------------------------------------
 
 _CHROME = st.sampled_from(
     [
         "",
         "<html><head><title>站点</title><script>var nav = '<div>';</script></head><body>",
+        '<!DOCTYPE html><html><head><meta charset="utf-8">'
+        "<style>.a{color:#333}</style></head><body>",
         '<div id="page"><nav class="topbar"><ul><li><a href="/">首页</a></li></ul></nav>',
         '<header><div class="banner"><img src=/logo.png></div></header>'
         "<!-- ad slot --><aside>推广内容 123</aside>",
-        # hazard chrome: contains an <h1> — the gate must DECLINE and
-        # fall back to the full parse (results still equal by identity)
+        '<div class="crumb"><a href="/">首页</a> &gt; <a href="/c" title="词&amp;典">词典</a></div>',
+        # chrome carrying the content's own markers: the first match wins
         "<header><h1>站点标题</h1></header>",
-        '<div class="promo">关于 ci-title 的说明</div>',  # hazard substring in text
+        '<div class="promo">关于 ci-title 的说明</div>',  # marker substring in text
         "<script>if (a<b) document.write('<div class=\"ci-attrs\">');</script>",
         "<H1>UPPER</H1><div>x</div>",
         "<!-- <div class='ci-content'> commented out -->",
-        # unclosed prefix elements whose close tags may land in the kept
-        # region — the close-binding channel the round-6 gate simulation
-        # declines (hypothesis-found: '<p>' + kept '</p>')
+        # unclosed chrome elements whose close tags land in the content
         "<p>",
         "<div><p>intro",
         "<ul><li>菜单",
     ]
 )
-
-
-@settings(max_examples=200, deadline=None)
-@given(_CHROME, _SOUP)
-def test_term_slice_never_diverges(chrome, soup):
-    """prefix_slice either prunes losslessly or declines: for any chrome
-    + page-soup combination, the sliced term parse equals the full
-    parse for BOTH term families."""
-    html = chrome + soup
-    for fn in (parse_chengyu_html, parse_ciyu_html):
-        assert fn(html, "p") == fn(html, "p", slice_input=False)
-
-
-@settings(max_examples=100, deadline=None)
-@given(st.text(alphabet="<>/&=\"' cih1-титle网络解释divattrs!-", max_size=120))
-def test_term_slice_never_diverges_garbage(text):
-    for fn in (parse_chengyu_html, parse_ciyu_html):
-        assert fn(text, "p") == fn(text, "p", slice_input=False)
-
-
-def test_term_slice_on_synthetic_and_chromed_pages():
-    """Every synthetic term page parses identically with slicing on/off;
-    a chrome-wrapped page actually TAKES the slice path and still
-    yields the identical record."""
-    from kgpipe.corpus import generate_corpus, render_chengyu_page, render_ciyu_page
-    from kgpipe.parse.slicing import prefix_slice
-
-    c = generate_corpus(n_hanzi=30, n_words=40, n_idioms=30, seed=42)
-    chrome = (
-        "<html><head><title>汉语国学</title></head><body>"
-        '<nav class="topbar"><a href="/">首页</a><a href="/about">关于</a></nav>'
-        '<div class="ad">广告 108</div>'
-    )
-    n_sliced = 0
-    for t in c.terms[:40]:
-        fn = parse_chengyu_html if t.kind == "Idiom" else parse_ciyu_html
-        render = render_chengyu_page if t.kind == "Idiom" else render_ciyu_page
-        page = render(t)
-        assert fn(page, "p") == fn(page, "p", slice_input=False)
-        wrapped = chrome + page[len("<html><body>"):]
-        assert fn(wrapped, "p") == fn(wrapped, "p", slice_input=False)
-        assert fn(wrapped, "p")["data"] == fn(page, "p")["data"]
-        if prefix_slice(wrapped) is not None:
-            n_sliced += 1
-    assert n_sliced == 40  # the chrome-wrapped pages all took the slice path
-
-
-# ---------------------------------------------------------------------------
-# round-7 interior term slicing: region-split + pruned-field slicing must
-# NEVER diverge from the full parse, at any field subset, with the
-# economics threshold forced off so the slice path actually runs
-# ---------------------------------------------------------------------------
 
 _TERM_BITS = st.sampled_from(
     [
@@ -417,73 +352,68 @@ _TERM_BITS = st.sampled_from(
         "<script>var x = '<div class=\"ci-title\">';</script>",
         '<div class="ci-content">',  # truncated block
         "</div>",
-        "</body>",  # stray close: the sibling-split channel
+        "</body>",  # stray close
         "<p>",
         "</p>",
         "<!-- ci-attrs in a comment -->",
         "loose 文本",
-        '<div class="wrap"><div class="ci-attrs"><p>注音：ㄨ</p></div>',  # undrained
+        "a &lt;b&gt; &amp;c",
+        '<div class="wrap"><div class="ci-attrs"><p>注音：ㄨ</p></div>',  # unclosed
     ]
 )
 _TERM_SOUP = st.lists(_TERM_BITS, max_size=10).map("".join)
 
-_FIELD_SETS = st.sampled_from(
-    [
-        None,  # full extraction
-        ("chengyu", "pinyin", "synonyms", "antonyms", "translation"),
-        ("word", "pinyin", "synonyms", "antonyms"),
-        ("chengyu",),
-        ("definition",),
-        ("translation", "zhuyin"),
-        ("is_common", "part_of_speech"),
-    ]
-)
+
+def _fast_equals_dom(html):
+    import kgpipe.parse.chengyu as C
+    import kgpipe.parse.ciyu as Y
+
+    for fn, hot in ((C.parse_chengyu_html, C.HOT_FIELDS), (Y.parse_ciyu_html, Y.HOT_FIELDS)):
+        assert fn(html, "p", fields=hot, fast=True) == fn(html, "p", fields=hot, fast=False)
 
 
-def _forced_slice(monkey_module, html, fn, fields):
-    """Run fn with the economics threshold forced off so short synthetic
-    soups still take the slice path, and compare against the full parse."""
-    from kgpipe.parse import slicing as S
+@settings(max_examples=200, deadline=None)
+@given(_CHROME, _SOUP)
+def test_term_slice_never_diverges(chrome, soup):
+    """Named for the deleted term-page slicer these strategies were
+    written against: any chrome + parser-token soup parses identically
+    through the flat scan and the DOM, at the hot fields of both
+    families."""
+    _fast_equals_dom(chrome + soup)
 
-    orig = monkey_module.slice_term_page
 
-    def zero_threshold(page, surface, wanted, keep_tail=frozenset(), **_):
-        return S.slice_term_page(page, surface, wanted, keep_tail, min_drop_frac=0.0)
+@settings(max_examples=100, deadline=None)
+@given(st.text(alphabet="<>/&=\"' cih1-титle网络解释divattrs!-", max_size=120))
+def test_term_slice_never_diverges_garbage(text):
+    _fast_equals_dom(text)
 
-    monkey_module.slice_term_page = zero_threshold
-    try:
-        sliced_out = fn(html, "p", fields=fields)
-    finally:
-        monkey_module.slice_term_page = orig
-    full_out = fn(html, "p", slice_input=False, fields=fields)
-    assert sliced_out == full_out
+
+def test_term_slice_prefix_close_binding_regression():
+    """Hypothesis counterexample, pinned: a '<p>' opened in the chrome
+    whose '</p>' lands inside the content closes the <div>/<h1> opened
+    after it, so the h1 is empty when the text arrives. The flat scan
+    must decline the page (the DOM parse decides) and agree with it."""
+    from kgpipe.parse import fastterm
+
+    html = "<p><div class='ci-title'><h1></p>注音：ㄨㄤ"
+    assert fastterm.fast_hot_chengyu(html) is None
+    assert fastterm.fast_hot_ciyu(html) is None
+    _fast_equals_dom(html)
+    assert parse_chengyu_html(html, "p")["data"]["chengyu"] == ""
 
 
 @settings(max_examples=300, deadline=None)
-@given(_CHROME, _TERM_SOUP, _FIELD_SETS)
-def test_term_interior_slice_never_diverges(chrome, soup, fields):
-    import kgpipe.parse.chengyu as C
-    import kgpipe.parse.ciyu as Y
-
-    html = chrome + soup
-    cf = None if fields is None else tuple(f for f in fields if f in C.ALL_FIELDS)
-    yf = None if fields is None else tuple(f for f in fields if f in Y.ALL_FIELDS)
-    if cf is None or cf:
-        _forced_slice(C, html, C.parse_chengyu_html, cf)
-    if yf is None or yf:
-        _forced_slice(Y, html, Y.parse_ciyu_html, yf)
+@given(_CHROME, _TERM_SOUP)
+def test_term_interior_slice_never_diverges(chrome, soup):
+    """Same property as test_term_slice_never_diverges over soups of
+    whole and truncated term-page blocks."""
+    _fast_equals_dom(chrome + soup)
 
 
 @settings(max_examples=150, deadline=None)
-@given(st.text(alphabet="<>/&=\"' cih13-title网络解释divbodyattrs!-", max_size=160))
+@given(st.text(alphabet="<>/&=\"' cih13-title网络解释divbodyattrs!-;#gtscrp", max_size=160))
 def test_term_interior_slice_never_diverges_garbage(text):
-    import kgpipe.parse.chengyu as C
-    import kgpipe.parse.ciyu as Y
-
-    _forced_slice(C, text, C.parse_chengyu_html, None)
-    _forced_slice(Y, text, Y.parse_ciyu_html, None)
-    _forced_slice(C, text, C.parse_chengyu_html, C.HOT_FIELDS)
-    _forced_slice(Y, text, Y.parse_ciyu_html, Y.HOT_FIELDS)
+    _fast_equals_dom(text)
 
 
 _SCAN_BITS = st.sampled_from(
@@ -505,21 +435,14 @@ _SCAN_SOUP = st.lists(_SCAN_BITS, max_size=12).map("".join)
 @settings(max_examples=300, deadline=None)
 @given(
     _SCAN_SOUP,
-    st.sampled_from(
-        [
-            {},
-            {"interior": True},
-            {"prefix": True},
-            {"allow_empty_stray": False},
-            {"interior": True, "allow_empty_stray": False},
-        ]
-    ),
+    st.sampled_from([{}, {"prefix": True}]),
 )
 def test_scan_region_fast_agrees_with_exact(soup, mode):
     """Round-7 gate-economics fast path: whenever the one-C-match-per-
     construct scanner decides a region (returns non-None), its
-    RegionScan must be BIT-IDENTICAL to the exact simulation's in every
-    mode — the dispatch may only change speed, never a verdict."""
+    RegionScan must be BIT-IDENTICAL to the exact simulation's in both
+    modes (interior block, dropped prefix) — the dispatch may only
+    change speed, never a verdict."""
     from kgpipe.parse.slicing import _scan_region, _scan_region_fast
 
     fast = _scan_region_fast(soup, **mode)
@@ -547,65 +470,3 @@ def test_scan_region_fast_decides_the_chrome_shape():
         if fast is None:
             undecided += 1
     assert undecided == 0
-
-
-def test_term_slice_sibling_split_regression():
-    """Round-7 pinned divergence channel: a mid-page '</body>' stray
-    close puts the 网络解释 heading's parent (child of <body>) and the
-    definition <div> (child of <html>) in DIFFERENT sibling groups in
-    the full parse, while a sliced parse that dropped the '<body>' open
-    with the prefix sees them adjacent under one root — the empty-stack
-    stray exemption alone would slice and invent a definition. The
-    sibling rule (element start after a stray in a kept region) must
-    decline."""
-    from kgpipe.parse.slicing import CIYU_KEEP_TAIL, CIYU_SURFACE, slice_term_page
-
-    html = (
-        "<html><body><header>chrome</header>"
-        '<div class="ci-title-wrap"><h1>学习</h1></div>'
-        "<div><h3>网络解释</h3></div></body><div>学习 是词语。</div></html>"
-    )
-    assert (
-        slice_term_page(
-            html,
-            CIYU_SURFACE,
-            wanted=frozenset(CIYU_SURFACE),
-            keep_tail=CIYU_KEEP_TAIL,
-            min_drop_frac=0.0,
-        )
-        is None
-    )
-    out_full = parse_ciyu_html(html, "p", slice_input=False)
-    assert parse_ciyu_html(html, "p") == out_full
-
-
-def test_term_slice_prunes_interior_blocks():
-    """Positive path: with HOT_FIELDS and a chrome-heavy page, the
-    chengyu slicer drops the prefix AND the ci-content region while the
-    extraction stays byte-identical to the full parse at those fields."""
-    from kgpipe.parse.slicing import CHENGYU_SURFACE, slice_term_page
-
-    chrome = "<html><head><title>x</title></head><body>" + (
-        '<nav><ul>' + "".join(f'<li><a href="/{i}">菜单{i}</a></li>' for i in range(20)) + "</ul></nav>"
-    )
-    page = (
-        '<div class="ci-title"><h1>一心一意</h1><div class="pinyin"><span>yī</span></div></div>'
-        '<div class="ci-attrs"><p>近义词：<a href="/a">全心全意</a></p></div>'
-        '<div class="ci-content"><p class="explain primary">形容专心。</p>'
-        '<p class="ext">出处：《书》。</p><p class="ext">用法：作谓语。</p></div>'
-        '<ol class="ci-fanyi"><li><label>英语</label>wholeheartedly</li></ol>'
-        "</body></html>"
-    )
-    html = chrome + page
-    from kgpipe.parse.chengyu import HOT_FIELDS, _wanted_hazards
-
-    sliced = slice_term_page(
-        html, CHENGYU_SURFACE, _wanted_hazards(frozenset(HOT_FIELDS))
-    )
-    assert sliced is not None
-    assert "ci-content" not in sliced and "<nav>" not in sliced
-    assert "ci-fanyi" in sliced and "ci-attrs" in sliced
-    got = parse_chengyu_html(html, "p", fields=HOT_FIELDS)
-    assert got == parse_chengyu_html(html, "p", slice_input=False, fields=HOT_FIELDS)
-    assert got["data"]["chengyu"] == "一心一意"
-    assert got["data"]["translation"] == "英语: wholeheartedly"

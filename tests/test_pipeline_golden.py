@@ -323,7 +323,7 @@ def test_full_section_properties_roundtrip(spark, small_corpus, tmp_path):
     cdf, sdf = corpus_to_dataframes(spark, small_corpus)
     wh = run_incremental(
         spark, cdf, sdf, str(tmp_path / "whfull"), n_buckets=2,
-        full_hanzi_properties=True,
+        full_properties=True,
     )
 
     def strip(x):
@@ -397,7 +397,7 @@ def test_full_mode_section_pinyin_evidence(spark):
     target["content"] = target["content"].replace(marker, extra + marker)
     cdf, sdf = corpus_to_dataframes(spark, corpus)
 
-    g_full = build_graph(spark, cdf, sdf, cache=False, full_hanzi_properties=True)
+    g_full = build_graph(spark, cdf, sdf, cache=False, full_properties=True)
     full_triples = {(r.subj, r.pred, r.obj) for r in g_full.triples.collect()}
     assert (char, "has-pinyin", "extrapy") in full_triples
     nodes = {
@@ -445,7 +445,7 @@ def test_gate_corpus_triples_mode_invariant(spark):
     full = {
         tuple(r)
         for r in build_graph(
-            spark, cdf, sdf, cache=False, full_hanzi_properties=True
+            spark, cdf, sdf, cache=False, full_properties=True
         ).triples.collect()
     }
     assert pruned == full, (
@@ -456,29 +456,24 @@ def test_gate_corpus_triples_mode_invariant(spark):
 
 def test_chromed_corpus_pipeline_invariant(spark, small_corpus):
     """Round 7 (VERDICT task 5): the chrome=True corpus mode wraps every
-    page in realistic head/nav/sidebar/footer chrome — the real-page
-    shape the pre-DOM slicers exist for. The pipeline's triples must be
-    BYTE-IDENTICAL to the plain corpus's (chrome is unconsumed by every
-    extractor), with the term slicer actually engaging end-to-end (the
-    prefix + unwanted interior regions clear the economics threshold on
-    chromed pages, unlike the bare synthetic ones)."""
+    page in realistic head/nav/sidebar/footer chrome — the live-site
+    page shape. The pipeline's triples must be BYTE-IDENTICAL to the
+    plain corpus's (chrome is unconsumed by every extractor), with the
+    term flat scan reading every chromed page itself (scripts, styles,
+    comments, declarations and character references are inside its
+    precondition), so no chromed term page falls back to the DOM."""
     from kgpipe.corpus import generate_corpus
     from kgpipe.golden import golden_triples, precision_recall
-    from kgpipe.parse.chengyu import HOT_FIELDS, _wanted_hazards
-    from kgpipe.parse.slicing import CHENGYU_SURFACE, slice_term_page
+    from kgpipe.parse.fastterm import fast_hot_chengyu, fast_hot_ciyu
 
     chromed = generate_corpus(n_hanzi=12, n_words=24, n_idioms=16, seed=7, chrome=True)
     plain = generate_corpus(n_hanzi=12, n_words=24, n_idioms=16, seed=7)
     assert chromed.manifest != plain.manifest  # pages really differ
-    # the hot-path slicer takes the slice on every chromed idiom page
-    wanted = _wanted_hazards(frozenset(HOT_FIELDS))
-    n_sliced = sum(
-        1
-        for r in chromed.rows
-        if r["path"].startswith("chengyu/")
-        and slice_term_page(r["content"], CHENGYU_SURFACE, wanted) is not None
-    )
-    assert n_sliced == sum(1 for r in chromed.rows if r["path"].startswith("chengyu/"))
+    for family, fast in (("chengyu/", fast_hot_chengyu), ("cidian/", fast_hot_ciyu)):
+        pages = [r["content"] for r in chromed.rows if r["path"].startswith(family)]
+        assert pages
+        declined = [h for h in pages if fast(h) is None]
+        assert declined == [], (family, len(declined), len(pages))
 
     g_chromed = build_graph(spark, *corpus_to_dataframes(spark, chromed))
     g_plain = build_graph(spark, *corpus_to_dataframes(spark, plain))

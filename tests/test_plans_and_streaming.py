@@ -405,7 +405,7 @@ def test_full_graph_stream_matches_batch(spark, small_corpus, tmp_path):
     wh2_root = str(tmp_path / "graph_wh_full")
     run_graph_stream(
         spark, src, sdf, wh2_root, str(tmp_path / "gckpt_full"),
-        max_files_per_trigger=4, full_hanzi_properties=True,
+        max_files_per_trigger=4, full_properties=True,
     )
     props = json.loads(
         Warehouse(wh2_root).nodes.read(spark)
