@@ -10,7 +10,7 @@ idiomatic Spark batch pipeline:
       -> vectorized pandas/Arrow parse UDFs          # reference parsers, re-expressed
       -> mention detection + salted broadcast entity linking
       -> alias canonicalization (iterative connected components)
-      -> (subj, pred, obj) triples, window-over-hash dedup
+      -> (subj, pred, obj) triples, min-over-struct hash-aggregate dedup
       -> Neo4j-shaped nodes/edges tables, snapshot-committed
       -> per-partition checkpoints + lineage + run metrics
 

@@ -83,36 +83,3 @@ def salted_join(
     d = dim.withColumn("_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salt)])))
     return f.join(d, [key, "_salt"], how).drop("_salt")
 
-
-def extract_mentions(
-    linked: DataFrame,
-    name_col: str,
-    syn_col: str,
-    ant_col: str,
-    carry_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """U1 + A5: tagged explode of synonym/antonym lists, normalized.
-
-    Keeps rel_type per mention *before* the union (the reference tags
-    each relation tuple — chengyu_mysql.py:127-129), then trims and drops
-    empties (normalize_term — chengyu_mysql.py:207-210). Output columns:
-    (src_name, mention, rel_type, lineage, *carry_cols).
-
-    ``carry_cols`` rides source columns (e.g. entity_type) through the
-    explode — a narrow projection, NOT a join-back; keeping this
-    shuffle-free matters because every edge family fans out from it.
-    """
-    def one(col: str, rel: str) -> DataFrame:
-        return (
-            linked.select(
-                F.col(name_col).alias("src_name"),
-                F.explode_outer(F.col(col)).alias("mention"),
-                F.col("path").alias("lineage"),
-                *[F.col(c) for c in carry_cols],
-            )
-            .withColumn("mention", F.trim("mention"))
-            .where(F.col("mention").isNotNull() & (F.length("mention") > 0))
-            .withColumn("rel_type", F.lit(rel))
-        )
-
-    return one(syn_col, "synonym").unionByName(one(ant_col, "antonym"))

@@ -61,6 +61,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from kgpipe.triples import dedup_first
+
 
 def _render_sort_expr(c) -> str:
     """SQL string of a Column sort expression. Classic Spark exposes the
@@ -128,23 +130,6 @@ def _dedup_source_sql(keys: list[str], terms: list[tuple[str, str]]) -> str:
         "(SELECT * FROM (SELECT src.*, row_number() OVER ("
         f"PARTITION BY {', '.join(keys)} ORDER BY {_order_sql(terms)}"
         ") AS _rn FROM incoming_batch src) WHERE _rn = 1) s"
-    )
-
-
-def _dedup_first(df: DataFrame, keys: list[str], order_by: list[str]) -> DataFrame:
-    """One row per key: the first by ``order_by`` ASC NULLS LAST, the
-    remaining columns breaking ties. The ``min``-over-struct aggregate of
-    ``triples.dedup_edges``: it elects the row ``_dedup_source_sql``'s
-    window elects wherever ``order_by`` leaves no tie."""
-    rest = [c for c in df.columns if c not in keys and c not in order_by]
-    nulls_last = [
-        f for i, c in enumerate(order_by)
-        for f in (F.col(c).isNull().alias(f"_null{i}"), F.col(c))
-    ]
-    return (
-        df.groupBy(*keys)
-        .agg(F.min(F.struct(*nulls_last, *rest)).alias("_w"))
-        .select(*[c if c in keys else F.col(f"_w.{c}").alias(c) for c in df.columns])
     )
 
 
@@ -328,7 +313,7 @@ class SnapshotTable:
             f"MERGE INTO {self.name} t USING {_dedup_source_sql(keys, terms)} "
             f"ON {on} WHEN NOT MATCHED THEN INSERT *"
         )
-        incoming = _dedup_first(df, keys, order_by)
+        incoming = dedup_first(df, keys, order_by)
         touched, untouched = self._affected(incoming)
         delta = incoming
         if touched:

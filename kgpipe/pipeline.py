@@ -7,9 +7,12 @@ barrier jobs run on threads while it builds the downstream plans —
     corpus ──┬─ chengyu pages ─ parse UDF ─┐
              ├─ cidian  pages ─ parse UDF ─┼─ link seeds (J2/P13)
              └─ zidian  pages ─ parse UDF ─┘      │
-        nodes (crawled ∪ mention-minted stubs, upsert-dedup)
-        edges (syn/ant ∪ composed-of ∪ radical-of ∪ variant-of
-               ∪ has-pinyin ∪ translation-of) ─ window dedup
+        relations: one generator per staged source
+          terms    ─ syn/ant, has-pinyin, idiom translation-of
+          hz_valid ─ variant-of, radical-of, has-pinyin, translation-of
+        edges (relations ∪ composed-of) ─ min-over-struct dedup
+        nodes (crawled ∪ the relations' other endpoints as stubs,
+               upsert-dedup)
         variant-of ─ iterative CC ─ canonical mapping ─ edges_canonical
         triples (name-level, for the golden P/R gate)
 
@@ -30,7 +33,7 @@ from __future__ import annotations
 import threading
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgpipe import link as L
@@ -44,6 +47,7 @@ from kgpipe.parse.udfs import (
     parse_chengyu_udf,
     parse_ciyu_udf,
 )
+from kgpipe.triples import UNDIRECTED
 
 #: parser-level projection pushdown: the triple-derivation hot path
 #: consumes exactly these zidian sections (nodes properties, radicals,
@@ -71,9 +75,6 @@ from kgpipe.parse.hanzi import ALL_SECTIONS as ALL_HANZI_SECTIONS
 
 parse_hanzi_full_udf = make_parse_hanzi_udf(ALL_HANZI_SECTIONS)
 
-UNDIRECTED = ("synonym", "antonym", "variant-of")
-
-
 class _Memo:
     """Zero-argument callable that runs ``fn`` at most once successfully.
 
@@ -94,9 +95,7 @@ class _Memo:
 
 
 class GraphResult:
-    """Graph-construction result. ``triples`` is a frame and
-    ``family_counts`` maps ``hanzi_pages`` (parsed zidian rows) to a count
-    memo (the runner counts its inputs in one per-run job); the other members
+    """Graph-construction result. ``triples`` is a frame; the other members
     are memos built on first read (round 8: plan construction is serial
     py4j driver work — ~2.5k round-trips per build_graph, ~1.7s measured
     — and the flagship triples path never reads nodes/edges/
@@ -104,9 +103,8 @@ class GraphResult:
     ``nodes`` at a checkpointed frame) replaces its memo."""
 
     def __init__(self, *, nodes, edges, edges_canonical, triples, missing,
-                 errors, family_counts):
+                 errors):
         self.triples = triples
-        self.family_counts = family_counts
         self._members = {
             "nodes": nodes,
             "edges": edges,
@@ -142,9 +140,9 @@ def canonicalize_edges(edges: DataFrame) -> DataFrame:
 def _rewrite_dedup(edges: DataFrame, mapping: DataFrame) -> DataFrame:
     """Endpoint rewrite through the alias mapping, then the re-dedup of
     the (src, dst, rel_type) rows that aliases collapsed."""
-    return T.dedup_edges(
-        apply_canonicalization(edges, mapping).withColumn("lineage", F.col("src_name"))
-    ).drop("lineage")
+    return T.dedup_first(
+        apply_canonicalization(edges, mapping).drop("run_id"), T.EDGE_KEY, ["src_name"]
+    )
 
 
 def triples_view(edges_canonical: DataFrame) -> DataFrame:
@@ -303,6 +301,86 @@ def stage_pages(
     return Staged(terms, hz, hz_valid, seeds, missing)
 
 
+def _tagged(rel_type: str, other_type: str, values: str, drop_empty: bool = True) -> Column:
+    """One edge family's other endpoints: the SQL array<string>
+    ``values`` (NULL read as empty) as (rel_type, other_type, other_name)
+    structs, ``other_type`` a SQL expression. ``drop_empty`` nulls the
+    empty names, which the generator drops. One SQL expression: the
+    Column API would spend a py4j round trip per function and lambda."""
+    name = "nullif(v, '')" if drop_empty else "v"
+    return F.expr(
+        f"transform(coalesce({values}, array()), v -> named_struct("
+        f"'rel_type', '{rel_type}', 'other_type', {other_type}, 'other_name', {name}))"
+    )
+
+
+def _relations(source: DataFrame, entity_type: Column, name: Column, *families: Column) -> DataFrame:
+    """One generator over a staged source: every family's structs of a
+    page in one explode, as the relation rows ``T.to_edges`` projects.
+    A row survives when it names its other endpoint and, for an
+    undirected family, is no self-loop (chengyu_mysql.py:233-234
+    ``rid == main_id``)."""
+    return source.select(
+        # the generator leads: an alias listed before it would capture the
+        # source columns its lambdas read (a lateral alias reference)
+        F.inline(F.concat(*families)),
+        entity_type.alias("entity_type"),
+        name.alias("name"),
+        F.col("path").alias("lineage"),
+    ).where(
+        F.col("other_name").isNotNull()
+        & (~F.col("rel_type").isin(*UNDIRECTED) | (F.col("other_name") != F.col("name")))
+    )
+
+
+def term_relations(terms: DataFrame) -> DataFrame:
+    """The terms generator: synonym / antonym mentions, trimmed
+    (normalize_term — chengyu_mysql.py:207-210), has-pinyin and the
+    idiom translation-of relations of each term page."""
+    return _relations(
+        terms, F.col("entity_type"), F.col("name"),
+        _tagged("synonym", "entity_type", "transform(synonyms, m -> trim(m))"),
+        _tagged("antonym", "entity_type", "transform(antonyms, m -> trim(m))"),
+        _tagged("has-pinyin", "'Pinyin'", "array(pinyin)"),
+        # "lang: text; lang: text" (extract_chengyu.py:168); NULL on Word rows
+        _tagged("translation-of", "'Translation'", "split(translation, '; ')"),
+    )
+
+
+def hanzi_relations(hz_valid: DataFrame, full_properties: bool = False) -> DataFrame:
+    """The hz_valid generator: variant-of, radical-of (the ``部`` suffix
+    stripped), has-pinyin and translation-of relations of each valid
+    zidian page."""
+    data = "basic_info.data"
+    families = [
+        _tagged("variant-of", "'Hanzi'", f"{data}.variant_characters.character",
+                drop_empty=False),
+        _tagged("radical-of", "'Radical'",
+                f"array(regexp_replace({data}.bushou_detail.text, '部$', ''))"),
+        _tagged("has-pinyin", "'Pinyin'", f"{data}.pinyin_info.pinyin"),
+        _tagged("translation-of", "'Translation'",
+                "transform(fanyi_info.data.translations,"
+                " t -> concat_ws(': ', t.language, t.translation))",
+                drop_empty=False),
+    ]
+    if full_properties:
+        # the unpruned sections carry per-reading pinyin (reference
+        # extract_guoyu.py:25-220, extract_yisi.py, extract_liangan.py) —
+        # SURVEY §2.11 maps them to has-pinyin evidence, so full-fidelity
+        # mode widens the evidence base to every section reading; readings
+        # already covered by basic_info dedup away
+        families += [
+            _tagged("has-pinyin", "'Pinyin'", readings)
+            for readings in (
+                "flatten(transform(yisi_info.data.explanations,"
+                " e -> coalesce(e.pinyin_info.pinyin, array())))",
+                "guoyu_info.data.main_content.pinyin_info.pinyin",
+                "liangan_info.data.main_content.pinyin_info.pinyin",
+            )
+        ]
+    return _relations(hz_valid, F.lit("Hanzi"), F.col(f"{data}.character"), *families)
+
+
 def build_graph(
     spark: SparkSession,
     corpus: DataFrame,
@@ -342,35 +420,31 @@ def graph_from_staged(
     members from staged (or sliced staged) frames. With ``cache`` on,
     the terms/hz_valid barriers and the mapping job run on threads
     during plan construction and have finished when this returns."""
-    terms, hz, hz_valid = staged.terms, staged.hz, staged.hz_valid
+    terms, hz_valid = staged.terms, staged.hz_valid
 
-    # variant-of alias edges: one definition feeds the edge family, the
-    # Hanzi stubs of its endpoints and the canonicalization mapping
-    variants = hz_valid.select(
-        F.col("basic_info.data.character").alias("src_name"),
-        F.explode(F.col("basic_info.data.variant_characters")).alias("v"),
-        F.col("path").alias("lineage"),
-    ).select(
-        "src_name", F.col("v.character").alias("mention"), F.lit("variant-of").alias("rel_type"), "lineage"
-    )
-    variant_edges = T.undirected_by_name(variants, "Hanzi")
+    # one generator per staged source: the edge families, the node stubs
+    # and the canonical mapping's variant-of slice all read these rows
+    hz_relations = hanzi_relations(hz_valid, full_properties)
 
     # ---- canonicalization (variant-of alias graph → CC) --------------------
-    # The mapping derives from the VARIANT FAMILY alone, before the union
-    # and the id-level dedup: union-find is duplicate-insensitive (A~B
-    # twice is still one merge) and the election's name lookup distincts,
-    # so the result is identical to mapping over the deduped edge table
-    # (asserted by test_mapping_from_variant_family_equals_from_dedup) —
-    # but the collect job runs only the tiny variants lineage off the
-    # hz_valid barrier, never the 7-family union. nodes NOT passed: the
-    # election's name lookup derives from the variant edges themselves,
-    # keeping the node pipeline off the flagship path.
-    mapping = _Memo(lambda: canonical_mapping(variant_edges))
+    # The mapping derives from the variant-of relations alone, before the
+    # union and the id-level dedup: union-find is duplicate-insensitive
+    # (A~B twice is still one merge) and the election's name lookup
+    # distincts, so the result is identical to mapping over the deduped
+    # edge table (asserted by
+    # test_mapping_from_variant_family_equals_from_dedup) — but the
+    # collect job runs only the hz_valid generator, never the terms side.
+    # nodes NOT passed: the election's name lookup derives from the
+    # variant edges themselves, keeping the node pipeline off the
+    # flagship path.
+    mapping = _Memo(lambda: canonical_mapping(
+        T.to_edges(hz_relations.where(F.col("rel_type") == "variant-of"))
+    ))
 
     # Round 8: with caching on, both barriers and the mapping job run on
     # background threads while this thread constructs every downstream
-    # plan (mentions, 7 edge families, rewrite, triples: ~0.7s of serial
-    # py4j round-trips that previously ran after the barrier wall).
+    # plan (generators, composed-of, rewrite, triples: serial py4j
+    # round-trips that would otherwise run after the barrier wall).
     # Concurrent jobs over a not-yet-materialized localCheckpoint RDD are
     # safe: block-level locks make one task compute a partition and the
     # others wait. The mapping job depends only on the hz checkpoint and
@@ -383,117 +457,22 @@ def graph_from_staged(
         t.start()
 
     try:
-        mentions = L.extract_mentions(
-            terms, "name", "synonyms", "antonyms", carry_cols=("entity_type",)
-        )
-
-        # ---- edges -----------------------------------------------------------
-        # single narrow pass per family — entity_type rides as a column, so no
-        # filter-per-type double evaluation and no join-back (SURVEY.md §4)
-        syn_ant = T.undirected_by_name(mentions, F.col("entity_type"))
-
+        relations = term_relations(terms).unionByName(hz_relations)
         if hanzi_dim is None:
             hanzi_dim = staged.characters()
-        composed = T.composed_of(terms, hanzi_dim, mode=composed_mode)
-
-        radicals = hz_valid.select(
-            F.regexp_replace(F.col("basic_info.data.bushou_detail.text"), "部$", "").alias(
-                "radical"
-            ),
-            F.col("basic_info.data.character").alias("hanzi"),
-            F.col("path").alias("lineage"),
-        ).where(F.col("radical").isNotNull() & (F.length("radical") > 0))
-        radical_edges = T.directed(radicals, "Radical", "radical", "Hanzi", "hanzi", "radical-of")
-
-        hz_pinyin = hz_valid.select(
-            F.col("basic_info.data.character").alias("src_name"),
-            F.explode(F.col("basic_info.data.pinyin_info")).alias("p"),
-            F.col("path").alias("lineage"),
-        ).select("src_name", F.col("p.pinyin").alias("py"), "lineage").where(
-            F.length("py") > 0
-        )
-        if full_properties:
-            # the unpruned sections carry per-reading pinyin (reference
-            # extract_guoyu.py:25-220, extract_yisi.py, extract_liangan.py) —
-            # SURVEY §2.11 maps them to has-pinyin evidence, so full-fidelity
-            # mode widens the evidence base to every section reading; readings
-            # already covered by basic_info dedup away in dedup_edges
-            empty = F.array().cast("array<string>")
-            yisi_py = F.coalesce(
-                F.flatten(
-                    F.transform(
-                        F.col("yisi_info.data.explanations"),
-                        lambda e: F.coalesce(
-                            F.transform(e["pinyin_info"], lambda p: p["pinyin"]), empty
-                        ),
-                    )
-                ),
-                empty,
-            )
-            guoyu_liangan_py = [
-                F.coalesce(
-                    F.transform(
-                        F.col(f"{section}.data.main_content"), lambda c: c["pinyin_info"]["pinyin"]
-                    ),
-                    empty,
-                )
-                for section in ("guoyu_info", "liangan_info")
-            ]
-            section_pinyin = hz_valid.select(
-                F.col("basic_info.data.character").alias("src_name"),
-                F.explode(F.concat(yisi_py, *guoyu_liangan_py)).alias("py"),
-                F.col("path").alias("lineage"),
-            ).where(F.col("py").isNotNull() & (F.length("py") > 0))
-            hz_pinyin = hz_pinyin.unionByName(section_pinyin)
-        hz_pinyin_edges = T.directed(hz_pinyin, "Hanzi", "src_name", "Pinyin", "py", "has-pinyin")
-        term_pinyin = terms.select(
-            "entity_type", F.col("name").alias("src_name"), F.col("pinyin").alias("py"),
-            F.col("path").alias("lineage"),
-        ).where(F.col("py").isNotNull() & (F.length("py") > 0))
-        term_pinyin_edges = T.directed(
-            term_pinyin, F.col("entity_type"), "src_name", "Pinyin", "py", "has-pinyin"
-        )
-
-        hz_trans = hz_valid.select(
-            F.col("basic_info.data.character").alias("src_name"),
-            F.explode(F.col("fanyi_info.data.translations")).alias("t"),
-            F.col("path").alias("lineage"),
-        ).select(
-            "src_name",
-            F.concat_ws(": ", F.col("t.language"), F.col("t.translation")).alias("trans"),
-            "lineage",
-        )
-        # idiom translation string is "lang: text; lang: text" (extract_chengyu.py:168)
-        idiom_trans = terms.where(
-            (F.col("entity_type") == "Idiom") & F.col("translation").isNotNull()
-        ).select(
-            F.col("name").alias("src_name"),
-            F.explode(F.split(F.col("translation"), "; ")).alias("trans"),
-            F.col("path").alias("lineage"),
-        ).where(F.length("trans") > 0)
-        trans_edges = T.directed(
-            hz_trans, "Hanzi", "src_name", "Translation", "trans", "translation-of"
-        ).unionByName(
-            T.directed(idiom_trans, "Idiom", "src_name", "Translation", "trans", "translation-of")
-        )
-
-        raw_edges = (
-            syn_ant.unionByName(composed)
-            .unionByName(radical_edges)
-            .unionByName(variant_edges)
-            .unionByName(hz_pinyin_edges)
-            .unionByName(term_pinyin_edges)
-            .unionByName(trans_edges)
+        # composed-of keeps its own dimension join
+        raw_edges = T.to_edges(relations).unionByName(
+            T.composed_of(terms, hanzi_dim, mode=composed_mode)
         )
 
         if mapping() is None:  # no alias graph: canonicalization is the identity
             # name-level distinct subsumes the id-level dedup → one fused
-            # job: family projections → union → distinct, no edge barrier
+            # job: generators → union → distinct, no edge barrier
             triples = triples_view(raw_edges)
         else:
             # the name-level distinct in triples_view subsumes BOTH id-level
             # dedups (they only remove duplicate (src, dst, rel) rows), so
-            # the flagship triples path rewrites the RAW family union through
+            # the flagship triples path rewrites the RAW edge union through
             # the broadcast mapping and goes straight to the distinct — one
             # wide shuffle total, no materialization barrier between the
             # parse checkpoints and the final aggregate. Identical triple
@@ -524,13 +503,13 @@ def graph_from_staged(
 
     # ---- nodes (LAZY plan construction, round 8) ---------------------------
     # Every edge endpoint gets a node row: crawled pages as full records,
-    # everything else (mentions, variant characters, radicals, pinyin and
-    # translation literals) as crawled=False stubs — no dangling edge ids
-    # (schemas.py entity_type vocabulary: Idiom | Word | Hanzi | Radical |
-    # Pinyin | Translation). The whole node-plan construction (~10 selects
-    # + 9 unions + a window) is serial py4j driver work the flagship
-    # triples path never reads, so it is deferred into a GraphResult
-    # memo and only built when a caller touches g.nodes.
+    # every other endpoint of the relations (mentions, variant characters,
+    # radicals, pinyin and translation literals) as a crawled=False stub —
+    # no dangling edge ids (schemas.py entity_type vocabulary: Idiom | Word
+    # | Hanzi | Radical | Pinyin | Translation); composed-of links only
+    # characters of the dimension. The node plan is serial py4j driver
+    # work the flagship triples path never reads, so it is deferred into
+    # a GraphResult memo and only built when a caller touches g.nodes.
     def _make_nodes() -> DataFrame:
         term_nodes = terms.select(
             node_id("entity_type", "name").alias("node_id"),
@@ -553,43 +532,24 @@ def graph_from_staged(
             F.to_json(F.struct(*prop_cols)).alias("properties"),
             F.lit(True).alias("crawled"),
         )
-
-        def _stub(df: DataFrame, entity_type, name_col: str) -> DataFrame:
-            et = F.lit(entity_type) if isinstance(entity_type, str) else entity_type
-            return df.select(et.alias("entity_type"), F.col(name_col).alias("name"))
-
-        endpoint_stubs = (
-            _stub(mentions, F.col("entity_type"), "mention")
-            .unionByName(_stub(radicals, "Radical", "radical"))
-            .unionByName(
-                _stub(variants.where(F.col("mention") != F.col("src_name")), "Hanzi", "mention")
-            )
-            .unionByName(_stub(hz_pinyin, "Pinyin", "py"))
-            .unionByName(_stub(term_pinyin, "Pinyin", "py"))
-            .unionByName(_stub(hz_trans, "Translation", "trans"))
-            .unionByName(_stub(idiom_trans, "Translation", "trans"))
-            .distinct()
-            .select(
-                node_id("entity_type", "name").alias("node_id"),
-                "entity_type",
-                "name",
-                F.lit(None).cast("string").alias("url"),
-                F.lit(None).cast("string").alias("properties"),
-                F.lit(False).alias("crawled"),
-            )
+        stubs = relations.select(
+            node_id("other_type", "other_name").alias("node_id"),
+            F.col("other_type").alias("entity_type"),
+            F.col("other_name").alias("name"),
+            F.lit(None).cast("string").alias("url"),
+            F.lit(None).cast("string").alias("properties"),
+            F.lit(False).alias("crawled"),
         )
-
-        all_nodes = term_nodes.unionByName(endpoint_stubs).unionByName(hanzi_nodes)
+        all_nodes = term_nodes.unionByName(stubs).unionByName(hanzi_nodes)
         # upsert semantics: a crawled row replaces a mention-minted stub
         # (INSERT IGNORE + ON DUP KEY UPDATE — chengyu_mysql.py:162-221);
-        # deterministic winner: crawled first, then lexicographic url.
-        node_w = Window.partitionBy("node_id").orderBy(
-            F.col("crawled").desc(), F.col("url").asc_nulls_last()
-        )
+        # deterministic winner: crawled first (NOT crawled ascending),
+        # then lexicographic url
         nodes = (
-            all_nodes.withColumn("_rn", F.row_number().over(node_w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
+            T.dedup_first(
+                all_nodes.withColumn("_stub", ~F.col("crawled")), ["node_id"], ["_stub", "url"]
+            )
+            .drop("_stub")
             .withColumn("run_id", F.lit(run_id))
             .withColumn("updated_at", F.current_timestamp())
         )
@@ -608,7 +568,7 @@ def graph_from_staged(
         # bench scale 9600) before triples could start: 51s of the 133s
         # local[16] profile.
         edges = (
-            T.dedup_edges(raw_edges)
+            T.dedup_first(raw_edges, T.EDGE_KEY, ["lineage"])
             .withColumn("run_id", F.lit(run_id))
             .drop("lineage")
         )
@@ -628,5 +588,4 @@ def graph_from_staged(
         triples=triples,
         missing=lambda: staged.missing,
         errors=_Memo(_make_errors),
-        family_counts={"hanzi_pages": _Memo(hz.count)},
     )

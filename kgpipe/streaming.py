@@ -25,11 +25,16 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kgpipe import link as L
 from kgpipe import schemas
 from kgpipe import triples as T
 from kgpipe.materialize import SnapshotTable, Warehouse
-from kgpipe.pipeline import graph_from_staged, parse_term_pages, stage_pages, term_frame
+from kgpipe.pipeline import (
+    graph_from_staged,
+    parse_term_pages,
+    stage_pages,
+    term_frame,
+    term_relations,
+)
 from kgpipe.schemas import CORPUS_SCHEMA
 from kgpipe.session import free_cached_since, persistent_rdd_ids
 
@@ -57,8 +62,9 @@ def streaming_mention_edges(corpus_stream: DataFrame) -> DataFrame:
     terms = term_frame(chengyu, "Idiom", "chengyu").unionByName(
         term_frame(cidian, "Word", "word")
     ).where(F.col("name").isNotNull())
-    m = L.extract_mentions(terms, "name", "synonyms", "antonyms", carry_cols=("entity_type",))
-    return T.undirected_by_name(m, F.col("entity_type"))
+    return T.to_edges(
+        term_relations(terms).where(F.col("rel_type").isin("synonym", "antonym"))
+    )
 
 
 def streaming_windowed_metrics(
@@ -109,7 +115,7 @@ def streaming_stateful_dedup(
     the same footprint Structured Streaming's own dropDuplicates keeps,
     but with an explicit deterministic within-batch winner (min
     ``order_col``), matching the batch dedup's first-writer-wins
-    formalization (kgpipe.triples.dedup_edges). Arrow-batched
+    formalization (kgpipe.triples.dedup_first). Arrow-batched
     (FlatMapGroupsInPandasWithState) — no row-at-a-time Python.
     """
     import pandas as pd
@@ -263,7 +269,7 @@ def run_stream_to_warehouse(
 
     def merge_batch(batch_df: DataFrame, _batch_id: int) -> None:
         deduped = (
-            T.dedup_edges(batch_df)
+            T.dedup_first(batch_df, T.EDGE_KEY, ["lineage"])
             .drop("lineage")
             .withColumn("run_id", F.lit("stream"))
         )

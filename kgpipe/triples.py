@@ -14,111 +14,89 @@ arrival-order-dependent. We canonicalize by *name* order instead
 (deterministic under any parallelism); the edge set is identical because
 an undirected edge is a set, only the stored orientation differs.
 
+Edge rows: each family is generated as relation rows (rel_type, the
+page's entity_type and name, the other endpoint's other_type and
+other_name, lineage) and ``to_edges`` is the one projection to ids.
+
 Dedup: the reference's ``UNIQUE KEY uniq_relation (min_id,max_id,
 relation_type)`` + INSERT IGNORE (create_table_chengyu.py:50,
 chengyu_mysql.py:239-241) is first-writer-wins in DB-arrival order. The
-Spark formalization is a window over the edge hash ordered by a
-deterministic lineage key — ``row_number() = 1`` — so replays and
+Spark formalization (``dedup_first``) elects the minimum of a struct led
+by a deterministic lineage key in a hash aggregate, so replays and
 different cluster sizes elect the same winner.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kgpipe.ids import node_id
 
 
-def _type_col(entity_type: str | Column) -> Column:
-    return F.lit(entity_type) if isinstance(entity_type, str) else entity_type
+#: symmetric relations: stored once, endpoints in name order
+UNDIRECTED = ("synonym", "antonym", "variant-of")
+#: relations whose generated other endpoint is the edge SOURCE (a radical
+#: heads the characters of its pages)
+INBOUND = ("radical-of",)
+#: the edge key: one row per (src, dst, rel_type)
+EDGE_KEY = ["src_id", "dst_id", "rel_type"]
 
 
-def undirected_by_name(
-    mentions: DataFrame, entity_type: str | Column
-) -> DataFrame:
-    """(src_name, mention, rel_type, lineage) → canonical undirected edges.
-
-    ``entity_type`` may be a literal or a column (one narrow pass over a
-    mixed-type frame instead of filter-per-type double evaluation).
-    Self-loops dropped (chengyu_mysql.py:233-234 ``rid == main_id``).
-    """
-    a = F.least("src_name", "mention")
-    b = F.greatest("src_name", "mention")
-    et = _type_col(entity_type)
-    return (
-        mentions.where(F.col("src_name") != F.col("mention"))
-        .select(
-            node_id(et, a).alias("src_id"),
-            node_id(et, b).alias("dst_id"),
-            "rel_type",
-            a.alias("src_name"),
-            b.alias("dst_name"),
-            F.lit(None).cast("string").alias("properties"),
-            F.col("lineage"),
-        )
+def to_edges(relations: DataFrame) -> DataFrame:
+    """(rel_type, entity_type, name, other_type, other_name, lineage)
+    relation rows → edge rows: the page entity is the source, the other
+    endpoint the destination, except for ``INBOUND`` relations, and
+    ``UNDIRECTED`` ones order their (same-typed) endpoints by name
+    (least → src, greatest → dst)."""
+    undirected = F.col("rel_type").isin(*UNDIRECTED)
+    inbound = F.col("rel_type").isin(*INBOUND)
+    page, other = F.col("name"), F.col("other_name")
+    src_name = F.when(undirected, F.least(page, other)).when(inbound, other).otherwise(page)
+    dst_name = F.when(undirected, F.greatest(page, other)).when(inbound, page).otherwise(other)
+    src_type = F.when(inbound, F.col("other_type")).otherwise(F.col("entity_type"))
+    dst_type = F.when(inbound, F.col("entity_type")).otherwise(F.col("other_type"))
+    return relations.select(
+        node_id(src_type, src_name).alias("src_id"),
+        node_id(dst_type, dst_name).alias("dst_id"),
+        "rel_type",
+        src_name.alias("src_name"),
+        dst_name.alias("dst_name"),
+        F.lit(None).cast("string").alias("properties"),
+        "lineage",
     )
 
 
-def directed(
-    df: DataFrame,
-    src_type: str | Column,
-    src_name: str,
-    dst_type: str | Column,
-    dst_name: str,
-    rel_type: str,
-    lineage: str = "lineage",
-    properties=None,
-) -> DataFrame:
-    return df.select(
-        node_id(_type_col(src_type), F.col(src_name)).alias("src_id"),
-        node_id(_type_col(dst_type), F.col(dst_name)).alias("dst_id"),
-        F.lit(rel_type).alias("rel_type"),
-        F.col(src_name).alias("src_name"),
-        F.col(dst_name).alias("dst_name"),
-        (properties if properties is not None else F.lit(None).cast("string")).alias(
-            "properties"
-        ),
-        F.col(lineage).alias("lineage"),
-    )
+def dedup_first(df: DataFrame, keys: list[str], order_by: list[str]) -> DataFrame:
+    """One row per key: the first by ``order_by`` ASC NULLS LAST, the
+    remaining columns breaking ties, in ``df``'s column order.
 
-
-def dedup_edges(edges: DataFrame) -> DataFrame:
-    """Deterministic first-writer-wins dedup on (src, dst, rel_type).
-
-    Formalizes the reference's ``UNIQUE KEY uniq_relation`` + INSERT
-    IGNORE (create_table_chengyu.py:50, chengyu_mysql.py:239-241) with a
-    deterministic order key (lineage) instead of DB-arrival order.
-
-    Implemented as a hash aggregation (``min_by`` over the payload struct)
-    rather than a row_number window: aggregation gets MAP-SIDE PARTIAL
-    combining, so the bulk of duplicates (composed-of character repeats,
-    both directions of an undirected mention) collapse before the
-    shuffle — at corpus scale this cuts shuffled bytes by ~5-10× versus a
-    window, which must shuffle every pre-dedup row. Ties on lineage carry
-    identical payloads (names are functions of the ids), so the result is
-    deterministic at any parallelism.
-    """
-    payload = F.struct("lineage", "src_name", "dst_name", "properties")
+    Formalizes the reference's ``UNIQUE KEY`` + INSERT IGNORE
+    (create_table_chengyu.py:50, chengyu_mysql.py:239-241) with a
+    deterministic order key instead of DB-arrival order. A hash
+    aggregation (``min`` over a struct led by the order key) rather than
+    a row_number window: aggregation gets MAP-SIDE PARTIAL combining, so
+    the bulk of duplicates (composed-of character repeats, both
+    directions of an undirected mention) collapse before the shuffle,
+    where a window must shuffle every row. It elects the row the
+    window ``row_number() OVER (PARTITION BY keys ORDER BY order_by)``
+    elects wherever ``order_by`` leaves no tie, and the same row at any
+    parallelism."""
+    rest = [c for c in df.columns if c not in keys and c not in order_by]
+    nulls_last = [
+        f for i, c in enumerate(order_by)
+        for f in (F.col(c).isNull().alias(f"_null{i}"), F.col(c))
+    ]
     return (
-        edges.groupBy("src_id", "dst_id", "rel_type")
-        .agg(F.min(payload).alias("_p"))
-        .select(
-            "src_id",
-            "dst_id",
-            "rel_type",
-            F.col("_p.src_name").alias("src_name"),
-            F.col("_p.dst_name").alias("dst_name"),
-            F.col("_p.properties").alias("properties"),
-            F.col("_p.lineage").alias("lineage"),
-        )
+        df.groupBy(*keys)
+        .agg(F.min(F.struct(*nulls_last, *rest)).alias("_w"))
+        .select(*[c if c in keys else F.col(f"_w.{c}").alias(c) for c in df.columns])
     )
 
 
 def composed_of(
     terms: DataFrame,
     hanzi_dim: DataFrame,
-    entity_type: str | Column = None,
     mode: str = "broadcast",
     n_salt: int = 16,
 ) -> DataFrame:
@@ -139,29 +117,30 @@ def composed_of(
       * ``salted`` — content-deterministic salted shuffle join
         (kgpipe.link.salted_join) for a dimension beyond broadcast:
         each hot character fans across ``n_salt`` reducers keyed by
-        xxhash64(char, src_name).
+        xxhash64(char, name).
     """
     if mode not in ("broadcast", "salted"):
         raise ValueError(f"composed_of: unknown mode {mode!r}")
-    et = _type_col(entity_type if entity_type is not None else F.col("entity_type"))
     chars = terms.select(
-        F.col("name").alias("src_name"),
-        et.alias("_et"),
+        F.lit("composed-of").alias("rel_type"),
+        "entity_type",
+        "name",
+        F.lit("Hanzi").alias("other_type"),
         F.explode(
             F.expr("transform(sequence(1, char_length(name)), i -> substring(name, i, 1))")
-        ).alias("char"),
+        ).alias("other_name"),
         F.col("path").alias("lineage"),
     )
-    dim = hanzi_dim.select(F.col("name").alias("char"))
+    dim = hanzi_dim.select(F.col("name").alias("other_name"))
     if mode == "salted":
         from kgpipe.link import salted_join
 
         # inner join must not fan out on duplicate dimension rows (the
         # broadcast path's left_semi dedups implicitly)
         present = salted_join(
-            chars, dim.distinct(), key="char", disambiguator="src_name",
+            chars, dim.distinct(), key="other_name", disambiguator="name",
             n_salt=n_salt, how="inner",
         )
     else:
-        present = chars.join(F.broadcast(dim), "char", "left_semi")
-    return directed(present, F.col("_et"), "src_name", "Hanzi", "char", "composed-of")
+        present = chars.join(F.broadcast(dim), "other_name", "left_semi")
+    return to_edges(present)

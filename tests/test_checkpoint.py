@@ -616,7 +616,8 @@ def test_insert_ignore_dedup_matches_sql_window(spark):
     8 input partitions."""
     import random
 
-    from kgpipe.materialize import _dedup_first, _dedup_source_sql, _order_terms
+    from kgpipe.materialize import _dedup_source_sql, _order_terms
+    from kgpipe.triples import dedup_first
 
     keys, order_by = ["k1", "k2"], ["o"]
     schema = "k1 int, k2 string, o int, p string, q long"
@@ -642,8 +643,8 @@ def test_insert_ignore_dedup_matches_sql_window(spark):
         batch = spark.createDataFrame(rows, schema)
         batch.createOrReplaceTempView("incoming_batch")
         window = {(r.k1, r.k2): tuple(r) for r in spark.sql(sql).drop("_rn").collect()}
-        agg = rows_of(_dedup_first(batch.repartition(1), keys, order_by))
-        assert agg == rows_of(_dedup_first(batch.repartition(8), keys, order_by))
+        agg = rows_of(dedup_first(batch.repartition(1), keys, order_by))
+        assert agg == rows_of(dedup_first(batch.repartition(8), keys, order_by))
         assert len(agg) == len(window) and {r[:2] for r in agg} == set(window)
         for r in agg:
             assert r in rows

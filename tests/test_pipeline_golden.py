@@ -70,10 +70,11 @@ def test_mapping_from_edge_names_equals_from_nodes(graph):
 
 def test_mapping_from_variant_family_equals_from_dedup(graph):
     """Round 6: the flagship path computes the mapping from the RAW
-    variant family (pre-union, pre-dedup) so the collect job never runs
-    the 7-family union. Union-find is duplicate-insensitive and the
-    name lookup distincts, so the mapping over raw variant rows must
-    equal the mapping over the deduped edge table's variant slice."""
+    variant-of relations of the hz_valid generator (pre-union,
+    pre-dedup) so the collect job never reads the terms side. Union-find
+    is duplicate-insensitive and the name lookup distincts, so the
+    mapping over raw variant rows must equal the mapping over the
+    deduped edge table's variant slice."""
     from kgpipe.canon import canonical_mapping
 
     deduped_variant = graph.edges.where(F.col("rel_type") == "variant-of")
@@ -89,6 +90,31 @@ def test_mapping_from_variant_family_equals_from_dedup(graph):
         for r in canonical_mapping(deduped_variant).collect()
     }
     assert from_raw == from_dedup and from_raw
+
+
+def _checkpoint_scans(plan) -> list[str]:
+    """The staging checkpoints a logical plan scans, one entry per
+    LogicalRDD leaf: ``terms`` (it has ``synonyms``) or ``hz_valid``."""
+    leaves = plan.collectLeaves()
+    scans = [leaves.apply(i).toString() for i in range(leaves.size())]
+    return [
+        "terms" if "synonyms#" in s else "hz_valid"
+        for s in scans if s.startswith("LogicalRDD")
+    ]
+
+
+def test_one_generator_per_staged_source(graph):
+    """Every edge family of a staged source reads it through one
+    generator: the optimized triples plan scans the checkpoints four
+    times (the terms and hz_valid generators, composed-of's terms side
+    and its hz_valid dimension), and the node plan's stub branch scans
+    each checkpoint once beside the crawled terms and Hanzi rows."""
+    triples = _checkpoint_scans(graph.triples._jdf.queryExecution().optimizedPlan())
+    assert len(triples) <= 4, triples
+    # g.nodes is persisted, so its optimized plan is the cache scan: read
+    # the analyzed plan, which the cache substitution has not replaced
+    nodes = _checkpoint_scans(graph.nodes._jdf.queryExecution().analyzed())
+    assert nodes.count("terms") <= 2 and nodes.count("hz_valid") <= 2, nodes
 
 
 def test_missing_detail_pages_counted(graph, small_corpus):
@@ -249,8 +275,8 @@ def test_composed_of_rejects_unknown_mode(spark):
 
 
 def test_concurrent_first_access_builds_members_once(spark, small_corpus):
-    """Threads racing on the first read of g.nodes and of a family count
-    all succeed and share the one built frame and count."""
+    """Threads racing on the first read of g.nodes and g.errors all
+    succeed and share the one built frame of each."""
     import sys
     import threading
 
@@ -263,7 +289,7 @@ def test_concurrent_first_access_builds_members_once(spark, small_corpus):
     def read():
         start.wait(timeout=60)
         try:
-            results.append((g.nodes, g.family_counts["hanzi_pages"]()))
+            results.append((g.nodes, g.errors))
         except Exception as exc:  # surfaced by the assert below
             errors.append(exc)
 
@@ -280,9 +306,9 @@ def test_concurrent_first_access_builds_members_once(spark, small_corpus):
     assert not any(t.is_alive() for t in threads)
     assert errors == []
     assert len(results) == n
-    nodes, count = results[0]
-    assert count > 0
-    assert all(r[0] is nodes and r[1] == count for r in results)
+    nodes, errors_frame = results[0]
+    assert nodes.first() is not None
+    assert all(r[0] is nodes and r[1] is errors_frame for r in results)
 
 
 def test_failed_plan_construction_leaves_no_barrier_jobs(spark, small_corpus, monkeypatch):
@@ -416,12 +442,12 @@ def test_full_mode_section_pinyin_evidence(spark):
 def test_replay_idempotence(spark, small_corpus, graph):
     """Running the pipeline twice and merging must equal one run
     (INSERT IGNORE / upsert semantics, SURVEY.md T2-T3)."""
-    from kgpipe.triples import dedup_edges
+    from kgpipe.triples import EDGE_KEY, dedup_first
 
     twice = graph.edges.unionByName(graph.edges).withColumn(
         "lineage", F.col("src_name")
     )
-    merged = dedup_edges(twice).drop("lineage")
+    merged = dedup_first(twice, EDGE_KEY, ["lineage"]).drop("lineage")
     assert merged.count() == graph.edges.count()
 
 
