@@ -13,7 +13,8 @@ metrics rows (:342-366) — maps onto:
   * resume           = anti-join of pending units against the
     checkpoints table (status='done') — replaces the CSV watermark;
   * pending.json     = unnecessary: each unit commits nodes/edges/
-    metrics/checkpoint through atomic snapshot commits, and the merge
+    errors (``commit_unit``, shared with the stream), then metrics and
+    checkpoint, through atomic snapshot commits, and the merge
     operations are idempotent, so an interrupted unit simply re-runs
     (T3's replay-idempotence without row-level intent logging);
   * metrics          = one run_metrics row per unit in the reference's
@@ -36,6 +37,7 @@ from pyspark.sql import functions as F
 from kgpipe.link import normalize_title
 from kgpipe.materialize import Warehouse
 from kgpipe.pipeline import (
+    GraphResult,
     Staged,
     canonicalize_edges,
     graph_from_staged,
@@ -134,6 +136,32 @@ def _metrics_row(
     _append_row(wh.run_metrics, spark, row)
 
 
+def commit_unit(wh: Warehouse, g: GraphResult, fail: int) -> tuple[int, int]:
+    """The one idempotent upsert of a unit of work (T3), shared by the
+    runner's buckets and the stream's micro-batches: nodes by
+    order-independent priority (a crawled record beats a stub whichever
+    unit commits first), edges INSERT IGNORE, and — only when the unit
+    has ``fail`` > 0 failed pages — errors INSERT IGNORE on (run_id,
+    key), so a replayed unit records each failed page once.
+
+    Returns (nodes_out, edges_out): the rows handed to the two merges,
+    counted by Observations on the merges' own jobs — no count job.
+    """
+    nodes_obs, edges_obs = Observation(), Observation()
+    wh.nodes.merge_best(
+        g.nodes.observe(nodes_obs, F.count(F.lit(1)).alias("n")),
+        keys=["node_id"],
+        priority=[F.col("crawled").desc(), F.col("url").asc_nulls_last()],
+    )
+    wh.edges.insert_ignore(
+        g.edges.observe(edges_obs, F.count(F.lit(1)).alias("n")),
+        keys=["src_id", "dst_id", "rel_type"], order_by=["src_name"],
+    )
+    if fail > 0:
+        wh.errors.insert_ignore(g.errors, keys=["run_id", "key"], order_by=["error"])
+    return nodes_obs.get["n"], edges_obs.get["n"]
+
+
 def run_incremental(
     spark: SparkSession,
     corpus: DataFrame,
@@ -220,23 +248,9 @@ def run_incremental(
             success = processed - missing
 
             # data first, checkpoint last: a crash between the two only
-            # means the unit re-runs, and every merge below is idempotent
-            # (T3). nodes use order-independent priority (crawled beats
-            # stub no matter which bucket commits first). The output
-            # counts ride on the merges' own jobs: an Observation keeps
-            # the first action's row count over the frame handed in
-            nodes_obs, edges_obs = Observation(), Observation()
-            wh.nodes.merge_best(
-                g.nodes.observe(nodes_obs, F.count(F.lit(1)).alias("n")),
-                keys=["node_id"],
-                priority=[F.col("crawled").desc(), F.col("url").asc_nulls_last()],
-            )
-            wh.edges.insert_ignore(
-                g.edges.observe(edges_obs, F.count(F.lit(1)).alias("n")),
-                keys=["src_id", "dst_id", "rel_type"], order_by=["src_name"],
-            )
-            if fail > 0:
-                wh.errors.append(g.errors)
+            # means the unit re-runs, and commit_unit, the one commit of a
+            # unit, is idempotent (T3)
+            nodes_out, edges_out = commit_unit(wh, g, fail)
 
             elapsed = round(time.time() - t0, 3)
 
@@ -276,8 +290,8 @@ def run_incremental(
                 "partition_key": f"{run_id}-bucket-{bucket}",
                 "status": "done",
                 "rows_in": rows_in,
-                "nodes_out": nodes_obs.get["n"],
-                "edges_out": edges_obs.get["n"],
+                "nodes_out": nodes_out,
+                "edges_out": edges_out,
                 "lineage": json.dumps(
                     {
                         "bucket": bucket,

@@ -47,6 +47,7 @@ from kgpipe.parse.udfs import (
     parse_chengyu_udf,
     parse_ciyu_udf,
 )
+from kgpipe.session import with_callers_properties
 from kgpipe.triples import UNDIRECTED
 
 #: parser-level projection pushdown: the triple-derivation hot path
@@ -451,8 +452,13 @@ def graph_from_staged(
     # hides under the terms barrier. Each join point is a plain memo
     # call; if plan construction raises, the threads are still joined
     # before the error leaves, so no barrier job outlives build_graph.
+    # The barrier jobs run in the caller's job group.
     barriers = [_Memo(terms.count), _Memo(hz_valid.count), mapping] if cache else []
-    threads = [threading.Thread(target=m, name="kg-barrier", daemon=True) for m in barriers]
+    sc = terms.sparkSession.sparkContext
+    threads = [
+        threading.Thread(target=with_callers_properties(sc, m), name="kg-barrier", daemon=True)
+        for m in barriers
+    ]
     for t in threads:
         t.start()
 

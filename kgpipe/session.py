@@ -58,6 +58,23 @@ def free_cached_since(sc, keep_ids: set) -> int:
     return dropped
 
 
+def with_callers_properties(sc, fn):
+    """``fn`` wrapped to run under a copy of the calling thread's Spark
+    local properties (job group, description, scheduler pool), taken
+    now: the target of a thread the caller starts, so the jobs it runs
+    belong to the caller's job group and cancelling the group stops
+    them. ``pyspark.InheritableThread`` does the same from a wrapper
+    frame inside pyspark, which pyspark then records as the call site of
+    every job the thread runs, hiding the kgpipe line that ran it."""
+    props = sc._jsc.sc().getLocalProperties().clone()
+
+    def run():
+        sc._jsc.sc().setLocalProperties(props)
+        return fn()
+
+    return run
+
+
 def local_frame(spark: SparkSession, rows, schema: StructType) -> DataFrame:
     """A small driver-built frame as a ``LocalRelation``.
 

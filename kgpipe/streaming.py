@@ -1,21 +1,26 @@
-"""Structured Streaming ingest: the crawler-as-a-stream restatement.
+"""Structured Streaming: the crawler-as-a-stream restatement.
 
 The reference is a long-running incremental batch job (SURVEY.md §2.9);
 its streaming-ish semantics (fixed-size chunks, resume, replay-safe
-writes) map onto Structured Streaming directly:
+writes) map onto one full-graph stream, ``run_graph_stream``:
 
   * file-source corpus directory  = arriving crawl batches (T1),
   * checkpointLocation            = resume watermark (T2),
-  * dropDuplicates on path        = pending-set / INSERT IGNORE replay
-                                    protection (T3),
-  * foreachBatch merge            = idempotent upsert sink (S9-S11).
+  * dropDuplicates on path        = pending-set replay protection (T3),
+  * foreachBatch commit           = the bucket runner's staging, graph
+                                    step and unit commit
+                                    (``checkpoint.commit_unit``), applied
+                                    to each micro-batch (S9-S11).
 
-The hot path reuses the exact same Arrow-batched parse UDFs and edge
-derivations as the batch pipeline — one code path, two execution modes.
-Stateless transformations only (parse, explode, project) run in the
-stream itself; stateful merge happens in foreachBatch against the
-snapshot tables, which keeps the streaming state store empty and the
-sink idempotent (replayed micro-batches re-merge to the same result).
+Stateless work (parse, explode, project) runs in the micro-batch;
+stateful merge happens in the unit commit against the snapshot tables,
+which keeps the streaming state store empty and the sink idempotent
+(replayed micro-batches re-merge to the same result).
+
+Two stream operators stand beside it: ``streaming_windowed_metrics``
+(event-time windowed counters under a watermark) and
+``streaming_stateful_dedup`` (first occurrence per key across
+micro-batches, held in the state store).
 """
 
 from __future__ import annotations
@@ -26,45 +31,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgpipe import schemas
-from kgpipe import triples as T
+from kgpipe.checkpoint import commit_unit
 from kgpipe.materialize import SnapshotTable, Warehouse
-from kgpipe.pipeline import (
-    graph_from_staged,
-    parse_term_pages,
-    stage_pages,
-    term_frame,
-    term_relations,
-)
+from kgpipe.pipeline import graph_from_staged, stage_pages
 from kgpipe.schemas import CORPUS_SCHEMA
 from kgpipe.session import free_cached_since, persistent_rdd_ids
-
-
-def stream_corpus(spark: SparkSession, source_dir: str) -> DataFrame:
-    """File-source stream over an arriving corpus directory (parquet)."""
-    return (
-        spark.readStream.schema(CORPUS_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(source_dir)
-    )
-
-
-def streaming_mention_edges(corpus_stream: DataFrame) -> DataFrame:
-    """Stateless stream: parse term pages → tagged mention edges.
-
-    Emits canonical undirected (src/dst, rel_type) rows per micro-batch;
-    global dedup happens at the merge sink (idempotent insert_ignore), so
-    no streaming state is held here.
-    """
-    # no seeds here: the page title alone names the term
-    chengyu, cidian = (
-        p.withColumn("name", F.lit(None).cast("string")) for p in parse_term_pages(corpus_stream)
-    )
-    terms = term_frame(chengyu, "Idiom", "chengyu").unionByName(
-        term_frame(cidian, "Word", "word")
-    ).where(F.col("name").isNotNull())
-    return T.to_edges(
-        term_relations(terms).where(F.col("rel_type").isin("synonym", "antonym"))
-    )
 
 
 def streaming_windowed_metrics(
@@ -155,12 +126,13 @@ def run_graph_stream(
     max_files_per_trigger: int = 8,
     full_properties: bool = False,
 ) -> None:
-    """Full-graph streaming ingest: every edge family, not just mentions.
+    """Full-graph streaming ingest: every edge family.
 
     Each micro-batch IS the batch pipeline applied to the arriving pages
-    (build_graph's parse and graph steps) followed by the same idempotent warehouse merges the
-    bucket runner uses — streaming mode and incremental mode are the one
-    code path driven by different arrival orders.
+    (build_graph's parse and graph steps) followed by the bucket runner's
+    unit commit (``checkpoint.commit_unit``) — streaming mode and
+    incremental mode are the one code path driven by different arrival
+    orders. Spark's ``checkpointLocation`` is the stream's resume state.
 
     composed-of semantics match the reference's INSERT-time behavior
     (chengyu_mysql.py:197-221: a term links only characters already in
@@ -213,36 +185,29 @@ def run_graph_stream(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         # per-batch cache hygiene: the staging and the graph step pin
-        # localCheckpoint/persist blocks; release them after the merges or
-        # a long stream grows the block store unboundedly (same fix as
-        # the bucket runner)
+        # localCheckpoint/persist blocks; release them on any exit or a
+        # long stream grows the block store unboundedly (same as the
+        # bucket runner)
         keep_rdds = persistent_rdd_ids(spark.sparkContext)
-        staged = stage_pages(
-            batch_df.dropDuplicates(["path"]), seeds,
-            full_properties=full_properties,
-        )
-        known = hanzi_dim_table.read(spark)
-        batch_chars = staged.characters().distinct()
-        g = graph_from_staged(
-            staged, run_id=f"stream-{batch_id}",
-            hanzi_dim=known.unionByName(batch_chars).distinct(),
-            full_properties=full_properties,
-        )
-        wh.nodes.merge_best(
-            g.nodes,
-            keys=["node_id"],
-            priority=[F.col("crawled").desc(), F.col("url").asc_nulls_last()],
-        )
-        wh.edges.insert_ignore(
-            g.edges, keys=["src_id", "dst_id", "rel_type"], order_by=["src_name"]
-        )
-        if g.errors.count() > 0:
-            wh.errors.append(g.errors)
-        # append only the batch's genuinely-new characters (idempotent on
-        # micro-batch replay) — the dim commit is O(batch), not O(table)
-        new_chars = batch_chars.join(known, "name", "left_anti")
-        hanzi_dim_table.append(new_chars)
-        free_cached_since(spark.sparkContext, keep_rdds)
+        try:
+            staged = stage_pages(
+                batch_df.dropDuplicates(["path"]), seeds,
+                full_properties=full_properties,
+            )
+            known = hanzi_dim_table.read(spark)
+            batch_chars = staged.characters().distinct()
+            g = graph_from_staged(
+                staged, run_id=f"stream-{batch_id}",
+                hanzi_dim=known.unionByName(batch_chars).distinct(),
+                full_properties=full_properties,
+            )
+            commit_unit(wh, g, g.errors.count())
+            # append only the batch's genuinely-new characters (idempotent
+            # on micro-batch replay) — the dim commit is O(batch), not
+            # O(table)
+            hanzi_dim_table.append(batch_chars.join(known, "name", "left_anti"))
+        finally:
+            free_cached_since(spark.sparkContext, keep_rdds)
 
     (
         spark.readStream.schema(CORPUS_SCHEMA)
@@ -255,32 +220,3 @@ def run_graph_stream(
         .awaitTermination()
     )
 
-
-def run_stream_to_warehouse(
-    spark: SparkSession,
-    source_dir: str,
-    warehouse_root: str,
-    checkpoint_dir: str,
-) -> None:
-    """availableNow streaming run: drain the source, merge each micro-batch
-    idempotently into the edges snapshot table, stop."""
-    wh = Warehouse(warehouse_root)
-    edges_stream = streaming_mention_edges(stream_corpus(spark, source_dir))
-
-    def merge_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        deduped = (
-            T.dedup_first(batch_df, T.EDGE_KEY, ["lineage"])
-            .drop("lineage")
-            .withColumn("run_id", F.lit("stream"))
-        )
-        wh.edges.insert_ignore(
-            deduped, keys=["src_id", "dst_id", "rel_type"], order_by=["src_name"]
-        )
-
-    (
-        edges_stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )

@@ -68,6 +68,26 @@ def test_incremental_equals_single_shot_with_malformed_pages(
 
 
 @pytest.mark.slow
+def test_resumed_bucket_records_its_errors_once(spark, frames, tmp_path):
+    """A bucket interrupted after its commit re-runs on resume; its
+    failed page must still have exactly one errors row."""
+    cdf, sdf = frames
+    bad_path = cdf.where(F.col("path").startswith("zidian/")).select("path").first().path
+    corrupt = cdf.withColumn(
+        "content",
+        F.when(F.col("path") == bad_path, F.lit("<div>truncated")).otherwise(
+            F.col("content")
+        ),
+    )
+    root = str(tmp_path / "wh")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_incremental(spark, corrupt, sdf, root, n_buckets=1, fail_buckets={0})
+    wh = run_incremental(spark, corrupt, sdf, root, n_buckets=1)
+    assert pending_units(wh, spark, 1) == []
+    assert wh.errors.read(spark).where(F.col("key") == bad_path).count() == 1
+
+
+@pytest.mark.slow
 def test_crash_resume_converges(spark, frames, tmp_path):
     cdf, sdf = frames
     root = str(tmp_path / "wh_crash")

@@ -331,6 +331,24 @@ def test_failed_plan_construction_leaves_no_barrier_jobs(spark, small_corpus, mo
     assert list(sc.statusTracker().getActiveJobsIds()) == []
 
 
+def test_barrier_jobs_run_in_the_callers_job_group(spark, small_corpus):
+    """The barrier jobs build_graph starts on its threads belong to the
+    caller's job group, so cancelling the group stops them too."""
+    cdf, sdf = corpus_to_dataframes(spark, small_corpus)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("barrier-group", "build_graph under a job group")
+    try:
+        build_graph(spark, cdf, sdf).triples.count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert tracker.getJobIdsForGroup("barrier-group")
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+
+
 @pytest.mark.slow
 def test_full_section_properties_roundtrip(spark, small_corpus, tmp_path):
     """S11 full fidelity: through the incremental runner + warehouse

@@ -2,6 +2,8 @@
 """Physical-plan guarantees (the 100 TB checklist, made executable) and
 the Structured Streaming ingest mode."""
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -316,6 +318,63 @@ def test_streaming_windowed_metrics_match_batch(spark, tmp_path):
     assert streamed == batch and len(streamed) > 0
 
 
+def _content(wh, spark):
+    """Every nodes and edges row on its content columns: all but the
+    writer's run_id and updated_at."""
+    def rows(table):
+        return Counter(table.read(spark).drop("run_id", "updated_at").collect())
+
+    return rows(wh.nodes), rows(wh.edges)
+
+
+@pytest.mark.slow
+def test_stream_commits_what_the_runner_commits(spark, small_corpus, tmp_path):
+    """The stream drained in one trigger and the runner's single bucket
+    stage, build and commit the same corpus through one unit commit:
+    equal nodes and edges on every content column."""
+    from kgpipe.checkpoint import run_incremental
+    from kgpipe.materialize import Warehouse
+    from kgpipe.streaming import run_graph_stream
+
+    cdf, sdf = corpus_to_dataframes(spark, small_corpus)
+    src = str(tmp_path / "src")
+    cdf.coalesce(2).write.parquet(src)
+    streamed = Warehouse(str(tmp_path / "stream_wh"))
+    run_graph_stream(spark, src, sdf, streamed.root, str(tmp_path / "ck"))
+    ran = run_incremental(spark, cdf, sdf, str(tmp_path / "run_wh"), n_buckets=1)
+    nodes, edges = _content(streamed, spark)
+    assert (nodes, edges) == _content(ran, spark)
+    assert nodes and edges
+
+
+@pytest.mark.slow
+def test_graph_stream_releases_its_pins(spark, small_corpus, monkeypatch, tmp_path):
+    """run_graph_stream leaves no cached block behind — neither a
+    micro-batch's staging nor its graph frames — on return and when a
+    commit fails."""
+    from pyspark.errors import StreamingQueryException
+
+    from kgpipe.materialize import SnapshotTable
+    from kgpipe.session import persistent_rdd_ids
+    from kgpipe.streaming import run_graph_stream
+
+    cdf, sdf = corpus_to_dataframes(spark, small_corpus)
+    src = str(tmp_path / "src")
+    cdf.coalesce(2).write.parquet(src)
+    sc = spark.sparkContext
+    entry = persistent_rdd_ids(sc)
+    run_graph_stream(spark, src, sdf, str(tmp_path / "wh"), str(tmp_path / "ck"))
+    assert persistent_rdd_ids(sc) <= entry
+
+    def broken(self, *args, **kwargs):
+        raise RuntimeError("injected commit failure")
+
+    monkeypatch.setattr(SnapshotTable, "insert_ignore", broken)
+    with pytest.raises(StreamingQueryException):
+        run_graph_stream(spark, src, sdf, str(tmp_path / "whf"), str(tmp_path / "ckf"))
+    assert persistent_rdd_ids(sc) <= entry
+
+
 @pytest.mark.slow
 def test_full_graph_stream_matches_batch(spark, small_corpus, tmp_path):
     """run_graph_stream over the corpus arriving as files (zidian first —
@@ -373,6 +432,14 @@ def test_full_graph_stream_matches_batch(spark, small_corpus, tmp_path):
         for r in build_graph(spark, cdf, sdf, cache=False).triples.collect()
     }
     assert streamed == batch
+
+    # replay with a fresh checkpoint: the idempotent unit commit leaves
+    # both tables' content unchanged
+    before = _content(wh, spark)
+    run_graph_stream(
+        spark, src, sdf, wh_root, str(tmp_path / "gckpt_replay"), max_files_per_trigger=1
+    )
+    assert _content(wh, spark) == before
 
     # the per-batch composed-of dimension is the dedicated hanzi_dim
     # table, NOT a rescan of the full nodes table: it holds exactly the
@@ -513,43 +580,6 @@ def test_stateful_streaming_dedup_across_batches(spark, tmp_path):
     # within-batch determinism: both A-rows of batch 1 compete and the
     # min-ord row (2) wins; the batch-2 replay (ord 9) never overrides
     assert by_key[(1, 2, "synonym")][0] == 2
-
-
-@pytest.mark.slow
-def test_streaming_matches_batch(spark, small_corpus, tmp_path):
-    """availableNow stream over the corpus directory must produce exactly
-    the batch pipeline's synonym/antonym edge set, and replaying the
-    stream must be a no-op (idempotent merge sink)."""
-    from kgpipe.materialize import Warehouse
-    from kgpipe.pipeline import build_graph
-    from kgpipe.streaming import run_stream_to_warehouse
-
-    cdf, sdf = corpus_to_dataframes(spark, small_corpus)
-    src = str(tmp_path / "arriving")
-    cdf.repartition(4).write.mode("overwrite").parquet(src)
-
-    wh_root = str(tmp_path / "stream_wh")
-    run_stream_to_warehouse(spark, src, wh_root, str(tmp_path / "ckpt1"))
-    wh = Warehouse(wh_root)
-    streamed = {
-        (r.src_name, r.dst_name, r.rel_type) for r in wh.edges.read(spark).collect()
-    }
-
-    g = build_graph(spark, cdf, sdf, cache=False)
-    batch = {
-        (r.src_name, r.dst_name, r.rel_type)
-        for r in g.edges.where(F.col("rel_type").isin("synonym", "antonym")).collect()
-    }
-    # stream parses every page; batch links through seeds — every batch
-    # edge must be streamed, and extras only from unlinked pages
-    assert batch <= streamed
-
-    # replay with a fresh checkpoint → same table (idempotence)
-    v = wh.edges.current_version()
-    run_stream_to_warehouse(spark, src, wh_root, str(tmp_path / "ckpt2"))
-    assert {
-        (r.src_name, r.dst_name, r.rel_type) for r in wh.edges.read(spark).collect()
-    } == streamed
 
 
 def test_pack_sequences_no_global_sort(spark):
