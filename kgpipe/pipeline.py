@@ -20,7 +20,12 @@ Scale notes:
   * the parse step (``stage_pages``) parses each page exactly once and
     checkpoints it before the fan-out to nodes + several edge families:
     the staging table every consumer reads (the bucket runner slices one
-    per run, the stream stages one per micro-batch);
+    per run, the stream stages one per micro-batch). Building it parses
+    nothing; the parses run in the first jobs over its two checkpoints;
+  * each family's parse runs in as few Python tasks as its input bytes
+    need (``_family``): a Python task's fixed cost outweighs parsing a
+    small partition. ``coalesce`` never adds partitions, so a large
+    corpus keeps its own;
   * the only joins are (a) broadcast seed-linkage, (b) broadcast semi-
     join of composed-of chars against the hanzi dimension, (c) broadcast
     canonical mapping — no large-×-large shuffle joins anywhere;
@@ -162,8 +167,18 @@ def triples_view(edges_canonical: DataFrame) -> DataFrame:
 
 
 def _family(corpus: DataFrame, prefix: str) -> DataFrame:
+    """One family's pages, coalesced to one partition per AQE minimum
+    partition size of their optimized plan's size estimate (reading it
+    runs no job); a size Spark does not know leaves them as they are."""
     # at scale `path` family is the corpus partition column → partition pruning
-    return corpus.where(F.col("path").startswith(prefix + "/"))
+    pages = corpus.where(F.col("path").startswith(prefix + "/"))
+    spark = pages.sparkSession
+    size = pages._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    as_bytes = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes
+    if size >= as_bytes(spark.conf.get("spark.sql.defaultSizeInBytes")):
+        return pages
+    floor = as_bytes(spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize"))
+    return pages.coalesce(max(1, -(-size // floor)))
 
 
 def term_frame(linked: DataFrame, entity_type: str, data_prefix: str) -> DataFrame:
@@ -214,10 +229,11 @@ def parse_term_pages(corpus: DataFrame, full: bool = False):
 
 
 class Staged(NamedTuple):
-    """The parse step's output, a run's staging table. ``terms`` and
-    ``hz_valid`` are the localCheckpoint barriers (with caching on),
-    ``hz`` every parsed zidian row; ``seeds`` and ``missing`` are
-    (name, entity_type) rows."""
+    """The parse step's output, a run's staging table. ``terms`` (the
+    linked term pages) and ``hz`` (every parsed zidian row) are the
+    localCheckpoint barriers (with caching on); ``hz_valid`` is the
+    zidian rows that pass the validity gate, a filter over ``hz``;
+    ``seeds`` and ``missing`` are (name, entity_type) rows."""
 
     terms: DataFrame
     hz: DataFrame
@@ -245,16 +261,14 @@ def stage_pages(
     full_properties: bool = False,
 ) -> Staged:
     """Parse step: parse each page once, link the seeds to the term pages
-    and gate the zidian pages. Runs no job."""
+    and gate the zidian pages. Parses nothing: with ``cache`` on, the
+    only jobs it runs build the shuffle and broadcast stages below its
+    two checkpoints (over a persisted corpus and seeds, the linkage's two
+    seed broadcasts); the parses run in the first jobs that read
+    ``terms`` and ``hz``."""
     hanzi_sections = ALL_HANZI_SECTIONS if full_properties else PIPELINE_HANZI_SECTIONS
     parse_hanzi = parse_hanzi_full_udf if full_properties else parse_hanzi_pruned_udf
     chengyu_parsed, cidian_parsed = parse_term_pages(corpus, full_properties)
-    # zidian parsed once for all sections
-    zidian_parsed = _family(corpus, "zidian").select(
-        "path", parse_hanzi("content", "path").alias("parsed")
-    )
-    if cache:
-        zidian_parsed = zidian_parsed.persist()
 
     # ---- linkage (J2/P13): seed ⋈ page title, by family -------------------
     # null-name seeds dropped (reference ciyu_neo4j.py:37-39)
@@ -270,27 +284,32 @@ def stage_pages(
         linked("Idiom", chengyu_parsed, "parsed.data.chengyu"), "Idiom", "chengyu"
     ).unionByName(term_frame(linked("Word", cidian_parsed, "parsed.data.word"), "Word", "word"))
 
+    # zidian parsed once for all sections
+    hz = _family(corpus, "zidian").select(
+        "path", parse_hanzi("content", "path").alias("parsed")
+    ).select("path", "parsed.*")
+    if cache:
+        # localCheckpoint barriers: seven edge families, the node stubs,
+        # the errors and the composed-of dimension fan out from `terms`
+        # and `hz`; a cold cache would let concurrent branches recompute
+        # the parse+linkage lineage, and the un-truncated lineage (deep
+        # nested parse structs) makes every downstream plan compilation
+        # pay the full analysis cost on the driver. The checkpoint call
+        # truncates the plan to a LogicalRDD at once. eager=False defers
+        # the parse to the first job over it, but building the checkpoint
+        # still runs one job per shuffle or broadcast stage of its input
+        # (AQE materializes those stages to plan the rest).
+        terms = terms.localCheckpoint(eager=False)
+        hz = hz.localCheckpoint(eager=False)
+
     # ---- hanzi validity (hanyuguoxue.py:1155-1157) -------------------------
-    hz = zidian_parsed.select("path", "parsed.*")
     hz_valid = hz.where(
         F.col("error").isNull() & F.col("basic_info.data.character").isNotNull()
     ).select(
-        # prune to the consumed sections BEFORE the cache barrier — the
-        # checkpoint then serializes only what downstream reads (all 7
-        # in full-fidelity mode, basic+fanyi on the hot path)
+        # the consumed sections: all 7 in full-fidelity mode, basic+fanyi
+        # on the hot path
         "path", "unicode_decimal", *hanzi_sections
     )
-    if cache:
-        # localCheckpoint barriers: seven edge families fan out from
-        # `terms` and `hz_valid`; a cold cache would let concurrent
-        # branches recompute the parse+linkage lineage, and the
-        # un-truncated lineage (deep nested parse structs) makes every
-        # downstream plan compilation pay the full analysis cost on the
-        # driver. The checkpoint call itself truncates the plan to a
-        # LogicalRDD immediately (eager=False defers only the DATA
-        # materialization, which the first job over it performs).
-        terms = terms.localCheckpoint(eager=False)
-        hz_valid = hz_valid.localCheckpoint(eager=False)
 
     # seeds no page linked to (the missing_detail_pages population), read
     # off the terms barrier: an anti-join against the parsed pages would
@@ -419,7 +438,7 @@ def graph_from_staged(
 ) -> GraphResult:
     """Graph step: edge families, canonical mapping, triples and the lazy
     members from staged (or sliced staged) frames. With ``cache`` on,
-    the terms/hz_valid barriers and the mapping job run on threads
+    the terms/hz barriers and the mapping job run on threads
     during plan construction and have finished when this returns."""
     terms, hz_valid = staged.terms, staged.hz_valid
 
@@ -453,7 +472,7 @@ def graph_from_staged(
     # call; if plan construction raises, the threads are still joined
     # before the error leaves, so no barrier job outlives build_graph.
     # The barrier jobs run in the caller's job group.
-    barriers = [_Memo(terms.count), _Memo(hz_valid.count), mapping] if cache else []
+    barriers = [_Memo(terms.count), _Memo(staged.hz.count), mapping] if cache else []
     sc = terms.sparkSession.sparkContext
     threads = [
         threading.Thread(target=with_callers_properties(sc, m), name="kg-barrier", daemon=True)

@@ -94,11 +94,11 @@ def test_mapping_from_variant_family_equals_from_dedup(graph):
 
 def _checkpoint_scans(plan) -> list[str]:
     """The staging checkpoints a logical plan scans, one entry per
-    LogicalRDD leaf: ``terms`` (it has ``synonyms``) or ``hz_valid``."""
+    LogicalRDD leaf: ``terms`` (it has ``synonyms``) or ``hz``."""
     leaves = plan.collectLeaves()
     scans = [leaves.apply(i).toString() for i in range(leaves.size())]
     return [
-        "terms" if "synonyms#" in s else "hz_valid"
+        "terms" if "synonyms#" in s else "hz"
         for s in scans if s.startswith("LogicalRDD")
     ]
 
@@ -114,7 +114,7 @@ def test_one_generator_per_staged_source(graph):
     # g.nodes is persisted, so its optimized plan is the cache scan: read
     # the analyzed plan, which the cache substitution has not replaced
     nodes = _checkpoint_scans(graph.nodes._jdf.queryExecution().analyzed())
-    assert nodes.count("terms") <= 2 and nodes.count("hz_valid") <= 2, nodes
+    assert nodes.count("terms") <= 2 and nodes.count("hz") <= 2, nodes
 
 
 def test_missing_detail_pages_counted(graph, small_corpus):
@@ -526,3 +526,104 @@ def test_chromed_corpus_pipeline_invariant(spark, small_corpus):
     assert t_chromed == t_plain
     p, r = precision_recall(t_chromed, golden_triples(chromed))
     assert (p, r) == (1.0, 1.0)
+
+
+def _known_size(spark, frame, path, partitions=None):
+    """``frame`` loaded the way the benchmark loads its inputs: written
+    as parquet, read back, spread over ``partitions`` and persisted, so
+    that Spark knows its size."""
+    frame.write.parquet(str(path))
+    known = spark.read.parquet(str(path))
+    known = (known.repartition(partitions) if partitions else known).persist()
+    known.count()
+    return known
+
+
+@pytest.fixture()
+def known_frames(spark, small_corpus, tmp_path):
+    """(corpus, seeds) of unknown size, then the same two of known size
+    with the corpus in 8 partitions."""
+    cdf, sdf = corpus_to_dataframes(spark, small_corpus)
+    known = _known_size(spark, cdf, tmp_path / "corpus", 8)
+    known_seeds = _known_size(spark, sdf, tmp_path / "seeds")
+    yield cdf, sdf, known, known_seeds
+    known.unpersist()
+    known_seeds.unpersist()
+
+
+def test_staging_parses_nothing(spark, known_frames, parse_log):
+    """stage_pages builds the staging without parsing a page: the parses
+    run in the first jobs over its checkpoints. The only jobs it runs
+    are the linkage's two seed broadcasts."""
+    from kgpipe.pipeline import stage_pages
+
+    *_, known, known_seeds = known_frames
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("staging-group", "stage_pages")
+    try:
+        stage_pages(known, known_seeds)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert parse_log() == {}
+    assert len(tracker.getJobIdsForGroup("staging-group")) <= 2
+
+
+def test_parse_partitions_follow_bytes(spark, known_frames, parse_log):
+    """Each family's parse input is coalesced to the partitions its bytes
+    need (under the 1 MB AQE floor: one per family), a corpus whose size
+    Spark does not know keeps its partitions, and the graph is the same
+    row for row either way, each page parsed once per build."""
+    from kgpipe.pipeline import stage_pages
+
+    cdf, sdf, known, known_seeds = known_frames
+    staged = stage_pages(known, known_seeds)
+    assert staged.terms.rdd.getNumPartitions() == 2  # chengyu ∪ cidian
+    assert staged.hz.rdd.getNumPartitions() == 1
+    unknown = stage_pages(cdf, sdf)
+    assert unknown.hz.rdd.getNumPartitions() == cdf.rdd.getNumPartitions() > 1
+
+    def rows(g):
+        nodes = g.nodes.drop("updated_at")
+        return [
+            sorted(tuple(r) for r in frame.collect())
+            for frame in (nodes, g.edges, g.edges_canonical, g.triples, g.errors)
+        ]
+
+    pages = [r.path for r in cdf.select("path").collect()]
+    before = parse_log()
+    from_known = rows(build_graph(spark, known, known_seeds))
+    assert parse_log() - before == {p: 1 for p in pages}
+    before = parse_log()
+    assert rows(build_graph(spark, cdf, sdf)) == from_known
+    assert parse_log() - before == {p: 1 for p in pages}
+
+
+def test_known_size_corpora_without_pages_build(spark, small_corpus, tmp_path):
+    """A known-size corpus with no page at all (size estimate 0) and one
+    with no zidian page stage and build: the parse partitions are
+    clamped to at least one."""
+    from kgpipe.pipeline import stage_pages
+
+    cdf, sdf = corpus_to_dataframes(spark, small_corpus)
+    empty = _known_size(spark, cdf.limit(0), tmp_path / "empty", 8)
+    no_zidian = _known_size(
+        spark, cdf.where(~F.col("path").startswith("zidian/")), tmp_path / "terms", 8
+    )
+    try:
+        assert empty._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() == 0
+        staged = stage_pages(empty, sdf)
+        assert staged.hz.rdd.getNumPartitions() == 1
+        g = build_graph(spark, empty, sdf)
+        assert g.triples.count() == 0
+        assert g.nodes.count() == 0
+        assert g.missing.count() == staged.seeds.count() > 0
+
+        g = build_graph(spark, no_zidian, sdf)
+        assert g.triples.count() > 0
+        assert g.errors.count() == 0
+        assert g.nodes.where(F.col("entity_type") == "Hanzi").where("crawled").count() == 0
+    finally:
+        empty.unpersist()
+        no_zidian.unpersist()
