@@ -13,10 +13,12 @@ metrics rows (:342-366) — maps onto:
   * resume           = anti-join of pending units against the
     checkpoints table (status='done') — replaces the CSV watermark;
   * pending.json     = unnecessary: each unit commits nodes/edges/
-    errors (``commit_unit``, shared with the stream), then metrics and
-    checkpoint, through atomic snapshot commits, and the merge
-    operations are idempotent, so an interrupted unit simply re-runs
-    (T3's replay-idempotence without row-level intent logging);
+    errors (``commit_unit``, shared with the stream; the three are
+    independent snapshot tables, so they commit concurrently and all
+    finish before it returns), then metrics and checkpoint, through
+    atomic snapshot commits, and the merge operations are idempotent,
+    so an interrupted unit simply re-runs (T3's replay-idempotence
+    without row-level intent logging);
   * metrics          = one run_metrics row per unit in the reference's
     exact column vocabulary incl. termination_reason values
     (README.md:50-56). The input counts of every unit come from one
@@ -28,6 +30,7 @@ from __future__ import annotations
 
 import json
 import time
+from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timezone
 from functools import reduce
 
@@ -44,7 +47,12 @@ from kgpipe.pipeline import (
     stage_pages,
     triples_view,
 )
-from kgpipe.session import free_cached_since, local_frame, persistent_rdd_ids
+from kgpipe.session import (
+    free_cached_since,
+    local_frame,
+    persistent_rdd_ids,
+    with_callers_properties,
+)
 
 
 def bucket_of(col, n_buckets: int):
@@ -144,21 +152,41 @@ def commit_unit(wh: Warehouse, g: GraphResult, fail: int) -> tuple[int, int]:
     has ``fail`` > 0 failed pages — errors INSERT IGNORE on (run_id,
     key), so a replayed unit records each failed page once.
 
+    The table commits run concurrently, one thread each, under the
+    caller's Spark local properties (their jobs carry the caller's job
+    group). That is safe because each commit reads only the unit's
+    graph and writes only its own snapshot table, and no commit's
+    outcome depends on another's. Every thread is joined before this
+    returns or raises, so no commit job outlives it; a failed commit
+    raises here after the others have finished (committed or failed),
+    and since the caller writes its checkpoint only after this returns,
+    the unit re-runs and the idempotent commits converge.
+
     Returns (nodes_out, edges_out): the rows handed to the two merges,
     counted by Observations on the merges' own jobs — no count job.
     """
     nodes_obs, edges_obs = Observation(), Observation()
-    wh.nodes.merge_best(
-        g.nodes.observe(nodes_obs, F.count(F.lit(1)).alias("n")),
-        keys=["node_id"],
-        priority=[F.col("crawled").desc(), F.col("url").asc_nulls_last()],
-    )
-    wh.edges.insert_ignore(
-        g.edges.observe(edges_obs, F.count(F.lit(1)).alias("n")),
-        keys=["src_id", "dst_id", "rel_type"], order_by=["src_name"],
-    )
+    commits = [
+        lambda: wh.nodes.merge_best(
+            g.nodes.observe(nodes_obs, F.count(F.lit(1)).alias("n")),
+            keys=["node_id"],
+            priority=[F.col("crawled").desc(), F.col("url").asc_nulls_last()],
+        ),
+        lambda: wh.edges.insert_ignore(
+            g.edges.observe(edges_obs, F.count(F.lit(1)).alias("n")),
+            keys=["src_id", "dst_id", "rel_type"], order_by=["src_name"],
+        ),
+    ]
     if fail > 0:
-        wh.errors.insert_ignore(g.errors, keys=["run_id", "key"], order_by=["error"])
+        commits.append(
+            lambda: wh.errors.insert_ignore(g.errors, keys=["run_id", "key"], order_by=["error"])
+        )
+    sc = g.triples.sparkSession.sparkContext
+    with ThreadPoolExecutor(len(commits), thread_name_prefix="kg-commit") as pool:
+        futures = [pool.submit(with_callers_properties(sc, c)) for c in commits]
+    # leaving the block joined every thread: raise the first commit's error
+    for f in futures:
+        f.result()
     return nodes_obs.get["n"], edges_obs.get["n"]
 
 
@@ -239,8 +267,9 @@ def run_incremental(
                     *(f.where(in_page) for f in staged[:3]),  # terms, hz, hz_valid
                     *(f.where(in_seed) for f in staged[3:]),  # seeds, missing
                 ),
-                run_id=run_id, hanzi_dim=hanzi_dim, composed_mode=composed_mode,
-                full_properties=full_properties,
+                # the tally materialized both checkpoints: no barrier
+                run_id=run_id, cache=False, hanzi_dim=hanzi_dim,
+                composed_mode=composed_mode, full_properties=full_properties,
             )
             rows_in, processed, missing, fail = (
                 counts.get((bucket, kind), 0) for kind in ("rows_in", "processed", "missing", "fail")

@@ -33,7 +33,11 @@ Layout: a hash-bucketed table's write is clustered by its table bucket
 mode — so one commit adds at most one data file per bucket (AQE may
 still split a skewed bucket). Against an empty table the merges skip
 their merge work: no bucket-membership collect, no current-key scan,
-no anti-join.
+no anti-join. When no current file collides (an empty table, or no
+colliding bucket), ``merge_best``/``merge_upsert`` elect over the
+incoming rows alone, with no union against an empty scan: the election
+(``triples.dedup_first``, as in ``insert_ignore``) keeps the incoming
+frame's key partitioning and adds no exchange.
 
 On a real deployment every call here maps 1:1 onto an Iceberg operation:
 ``merge_best/merge_upsert`` → ``MERGE INTO`` (with the same
@@ -57,9 +61,9 @@ import os
 import re
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import BooleanType, NumericType, StructType
 
 from kgpipe.triples import dedup_first
 
@@ -106,9 +110,9 @@ def _order_sql(terms: list[tuple[str, str, str]]) -> str:
 def _beats_pred(terms: list[tuple[str, str, str]]) -> str:
     """Lexicographic 'incoming sorts strictly before current' predicate
     over the priority terms, with null-safe equality (<=>) on the prefix
-    — the MERGE-side form of the row_number() winner election. Each term
-    is null-aware so the predicate elects the same winner as the local
-    window election when a priority value is NULL: under NULLS LAST a
+    — the MERGE-side form of the winner election. Each term is
+    null-aware so the predicate elects the same winner as the local
+    election when a priority value is NULL: under NULLS LAST a
     non-null incoming value beats a NULL current one (the
     crawled-beats-stub url tiebreak), under NULLS FIRST the mirror."""
     clauses = []
@@ -123,6 +127,30 @@ def _beats_pred(terms: list[tuple[str, str, str]]) -> str:
             " AND ".join(eq_prefix + [f"({null_beats} OR s.{col} {op} t.{col})"])
         )
     return " OR ".join(f"({c})" for c in clauses)
+
+
+def _ascending(df: DataFrame, terms: list[tuple[str, str, str]]) -> list[Column]:
+    """The ordering ``terms`` over ``df`` as keys whose ascending NULLS
+    LAST order is the same, the order ``dedup_first`` elects by. A DESC
+    term becomes its negation (``NOT c`` on a boolean column, ``-c`` on
+    a numeric one); a NULLS FIRST term is led by ``c IS NOT NULL``."""
+    keys = []
+    for c, direction, nulls in terms:
+        key = F.col(c)
+        if nulls == "FIRST":
+            keys.append(key.isNotNull())
+        if direction == "DESC":
+            kind = df.schema[c].dataType
+            if isinstance(kind, BooleanType):
+                key = ~key
+            elif isinstance(kind, NumericType):
+                key = -key
+            else:
+                raise ValueError(
+                    f"DESC order needs a boolean or numeric column; {c} is {kind.simpleString()}"
+                )
+        keys.append(key)
+    return keys
 
 
 def _dedup_source_sql(keys: list[str], terms: list[tuple[str, str]]) -> str:
@@ -322,22 +350,24 @@ class SnapshotTable:
         return self._commit(touched + untouched + self._write_data(delta))
 
     def _merge_rewrite(
-        self, df: DataFrame, keys: list[str], order: list
+        self, df: DataFrame, keys: list[str], terms: list[tuple[str, str, str]]
     ) -> int:
         """Shared partitioned-rewrite merge: union incoming with the rows
-        of colliding buckets only, elect one winner per key by ``order``,
-        rewrite those buckets; untouched buckets carry over by reference."""
-        spark = df.sparkSession
+        of colliding buckets only, elect one winner per key by ``terms``
+        (``_gen`` is 0 on a current row, 1 on an incoming one) through
+        ``dedup_first``, rewrite those buckets; untouched buckets carry
+        over by reference. When no current file collides, the election
+        runs over the incoming rows alone, so an incoming frame already
+        partitioned by ``keys`` is elected without another exchange."""
         touched, untouched = self._affected(df)
-        current = self._read_files(spark, touched).withColumn("_gen", F.lit(0))
-        incoming = df.withColumn("_gen", F.lit(1))
-        w = Window.partitionBy(*keys).orderBy(*order)
-        merged = (
-            current.unionByName(incoming)
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn", "_gen")
-        )
+        rows = df.withColumn("_gen", F.lit(1))
+        if touched:
+            current = self._read_files(df.sparkSession, touched).withColumn("_gen", F.lit(0))
+            rows = current.unionByName(rows)
+        order = _ascending(rows, terms)
+        names = [f"_o{i}" for i in range(len(order))]
+        ranked = rows.select("*", *[o.alias(n) for o, n in zip(order, names)])
+        merged = dedup_first(ranked, keys, names).drop("_gen", *names)
         return self._commit(untouched + self._write_data(merged))
 
     def merge_best(self, df: DataFrame, keys: list[str], priority: list) -> int:
@@ -354,10 +384,7 @@ class SnapshotTable:
             f"ON {on} WHEN MATCHED AND ({_beats_pred(terms)}) THEN UPDATE SET * "
             f"WHEN NOT MATCHED THEN INSERT *"
         )
-        order = [
-            F.col(c).asc_nulls_last() if isinstance(c, str) else c for c in priority
-        ]
-        return self._merge_rewrite(df, keys, order)
+        return self._merge_rewrite(df, keys, terms)
 
     def merge_upsert(self, df: DataFrame, keys: list[str], order_by: list) -> int:
         """MERGE INTO: new rows win over existing rows on key collision,
@@ -370,8 +397,7 @@ class SnapshotTable:
             f"ON {on} WHEN MATCHED THEN UPDATE SET * "
             f"WHEN NOT MATCHED THEN INSERT *"
         )
-        order = [F.col("_gen").desc()] + [F.col(c).asc_nulls_last() for c in order_by]
-        return self._merge_rewrite(df, keys, order)
+        return self._merge_rewrite(df, keys, [("_gen", "DESC", "LAST")] + terms)
 
     def overwrite(self, df: DataFrame) -> int:
         self.sql_log.append(

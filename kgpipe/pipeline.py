@@ -105,8 +105,11 @@ class GraphResult:
     are memos built on first read (round 8: plan construction is serial
     py4j driver work — ~2.5k round-trips per build_graph, ~1.7s measured
     — and the flagship triples path never reads nodes/edges/
-    edges_canonical/missing/errors). Assigning a member (e.g. re-pointing
-    ``nodes`` at a checkpointed frame) replaces its memo."""
+    edges_canonical/missing/errors). Each member is a plan over the
+    staging's checkpoints, not a cache: every action over it recomputes
+    it, so a caller that re-reads one pins it (``localCheckpoint``).
+    Assigning a member (e.g. re-pointing ``nodes`` at a checkpointed
+    frame) replaces its memo."""
 
     def __init__(self, *, nodes, edges, edges_canonical, triples, missing,
                  errors):
@@ -439,7 +442,10 @@ def graph_from_staged(
     """Graph step: edge families, canonical mapping, triples and the lazy
     members from staged (or sliced staged) frames. With ``cache`` on,
     the terms/hz barriers and the mapping job run on threads
-    during plan construction and have finished when this returns."""
+    during plan construction and have finished when this returns. A
+    caller whose staging an earlier job already materialized (the
+    bucket runner, after its tally) passes ``cache=False``: a barrier
+    would only re-count the checkpoints' blocks."""
     terms, hz_valid = staged.terms, staged.hz_valid
 
     # one generator per staged source: the edge families, the node stubs
@@ -569,8 +575,10 @@ def graph_from_staged(
         # upsert semantics: a crawled row replaces a mention-minted stub
         # (INSERT IGNORE + ON DUP KEY UPDATE — chengyu_mysql.py:162-221);
         # deterministic winner: crawled first (NOT crawled ascending),
-        # then lexicographic url
-        nodes = (
+        # then lexicographic url. A plan, not a cache (see GraphResult):
+        # the warehouse merge reads it once, or twice against a non-empty
+        # table, where the first read is the small bucket collect
+        return (
             T.dedup_first(
                 all_nodes.withColumn("_stub", ~F.col("crawled")), ["node_id"], ["_stub", "url"]
             )
@@ -578,28 +586,21 @@ def graph_from_staged(
             .withColumn("run_id", F.lit(run_id))
             .withColumn("updated_at", F.current_timestamp())
         )
-        if cache:
-            # lazy persist (NOT an eager barrier): nodes only compute
-            # when a caller reads them (warehouse merge, inspection)
-            nodes = nodes.persist()
-        return nodes
 
     def _make_edges() -> DataFrame:
-        # LAZY (round 6 made the persist lazy; round 8 defers the PLAN
-        # construction too): the deduped edge table materializes only
-        # when a consumer reads g.edges — the flagship triples path no
-        # longer touches it. The former eager barrier shuffled and wrote
-        # the full deduped payload (~10M rows with properties+lineage at
-        # bench scale 9600) before triples could start: 51s of the 133s
-        # local[16] profile.
-        edges = (
+        # LAZY plan construction (round 8): the deduped edge table is
+        # computed only when a consumer reads g.edges — the flagship
+        # triples path never does. The former eager barrier shuffled and
+        # wrote the full deduped payload (~10M rows with properties+
+        # lineage at bench scale 9600) before triples could start: 51s of
+        # the 133s local[16] profile. A plan, not a cache, as for nodes:
+        # a cache that its one consumer reads once costs a job over
+        # uncoalesced shuffle partitions.
+        return (
             T.dedup_first(raw_edges, T.EDGE_KEY, ["lineage"])
             .withColumn("run_id", F.lit(run_id))
             .drop("lineage")
         )
-        if cache:
-            edges = edges.persist()
-        return edges
 
     edges = _Memo(_make_edges)
     edges_canonical = (

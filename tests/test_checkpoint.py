@@ -107,6 +107,46 @@ def test_crash_resume_converges(spark, frames, tmp_path):
 
 
 @pytest.mark.slow
+def test_failed_concurrent_commit_orphans_nothing(spark, frames, monkeypatch, tmp_path):
+    """When one of a unit's concurrent table commits fails, the run
+    raises that error only after the other commits finished: no job of
+    the caller's group is still running, no checkpoint row is written,
+    and a re-run converges to an uninterrupted run's nodes and edges."""
+    cdf, sdf = frames
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def broken(self, *args, **kwargs):
+        raise RuntimeError("injected commit failure")
+
+    root = str(tmp_path / "wh")
+    with monkeypatch.context() as patch:
+        patch.setattr(SnapshotTable, "insert_ignore", broken)
+        sc.setJobGroup("commit-group", "a failing commit")
+        try:
+            with pytest.raises(RuntimeError, match="injected commit failure"):
+                run_incremental(spark, cdf, sdf, root, n_buckets=1)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            assert tracker.getJobIdsForGroup("commit-group")
+            running = set(tracker.getActiveJobsIds())
+            assert running & set(tracker.getJobIdsForGroup("commit-group")) == set()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    wh = Warehouse(root)
+    assert wh.checkpoints.current_version() is None
+    assert wh.nodes.current_version() == 1  # the nodes merge did commit
+
+    wh = run_incremental(spark, cdf, sdf, root, n_buckets=1)
+    clean = run_incremental(spark, cdf, sdf, str(tmp_path / "clean"), n_buckets=1)
+    for table in ("nodes", "edges"):
+        rows = [
+            sorted(tuple(r) for r in getattr(w, table).read(spark).drop("updated_at").collect())
+            for w in (wh, clean)
+        ]
+        assert rows[0] == rows[1], table
+
+
+@pytest.mark.slow
 def test_rerun_is_noop(spark, frames, tmp_path):
     cdf, sdf = frames
     root = str(tmp_path / "wh2")
@@ -418,6 +458,50 @@ def test_merge_best_order_independent(spark, tmp_path):
     t2.merge_best(crawled, ["node_id"], prio)
     r1, r2 = t1.read(spark).first(), t2.read(spark).first()
     assert r1.crawled and r2.crawled and r1.url == r2.url == "chengyu/a"
+
+
+def test_merge_elections_match_the_window(spark, tmp_path):
+    """merge_best and merge_upsert elect through dedup_first on ascending
+    derived keys; over a current table and an incoming batch they keep
+    the row a row_number() window over the same order ranks first, for
+    every direction and NULLS placement, on boolean and integer terms.
+    A DESC term on a column that has no negation is refused."""
+    schema = "k int, b boolean, v int, tag string"
+    table_schema = spark.createDataFrame([], schema).schema
+    current = [(k, b, v, "cur") for k, (b, v) in enumerate([(True, 1), (None, 0), (False, None)])]
+    incoming = [
+        (k, b, v, "new")
+        for k, (b, v) in enumerate([(False, 2), (True, None), (None, 1), (True, 3)])
+    ] + [(3, False, 0, "new2")]
+
+    def keep(order_sql, rows):
+        spark.createDataFrame(rows, schema).createOrReplaceTempView("both")
+        return sorted(tuple(r)[:4] for r in spark.sql(
+            f"SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY k ORDER BY {order_sql}) "
+            "AS _rn FROM both) WHERE _rn = 1"
+        ).collect())
+
+    cases = [
+        (F.col(c).desc_nulls_first() if d == "DESC" and n == "FIRST" else
+         F.col(c).desc_nulls_last() if d == "DESC" else
+         F.col(c).asc_nulls_first() if n == "FIRST" else F.col(c).asc_nulls_last(),
+         f"{c} {d} NULLS {n}")
+        for c in ("b", "v") for d in ("ASC", "DESC") for n in ("FIRST", "LAST")
+    ]
+    for i, (prio, order_sql) in enumerate(cases):
+        t = SnapshotTable(str(tmp_path / f"best{i}"), table_schema, ["k"], 4)
+        t.merge_best(spark.createDataFrame(current, schema), ["k"], [prio, "tag"])
+        t.merge_best(spark.createDataFrame(incoming, schema), ["k"], [prio, "tag"])
+        got = sorted(tuple(r) for r in t.read(spark).collect())
+        assert got == keep(f"{order_sql}, tag", current + incoming), order_sql
+
+    t = SnapshotTable(str(tmp_path / "upsert"), table_schema, ["k"], 4)
+    t.merge_upsert(spark.createDataFrame(current, schema), ["k"], ["tag"])
+    t.merge_upsert(spark.createDataFrame(incoming, schema), ["k"], ["tag"])
+    got = sorted(tuple(r) for r in t.read(spark).collect())
+    assert got == keep("tag", incoming)  # every current key is replaced
+    with pytest.raises(ValueError, match="DESC order needs a boolean or numeric column"):
+        t.merge_best(spark.createDataFrame(incoming, schema), ["k"], [F.col("tag").desc()])
 
 
 def test_iceberg_sql_migration_contract(spark, tmp_path):

@@ -111,8 +111,7 @@ def test_one_generator_per_staged_source(graph):
     each checkpoint once beside the crawled terms and Hanzi rows."""
     triples = _checkpoint_scans(graph.triples._jdf.queryExecution().optimizedPlan())
     assert len(triples) <= 4, triples
-    # g.nodes is persisted, so its optimized plan is the cache scan: read
-    # the analyzed plan, which the cache substitution has not replaced
+    # the analyzed plan: the node plan as built, before the optimizer
     nodes = _checkpoint_scans(graph.nodes._jdf.queryExecution().analyzed())
     assert nodes.count("terms") <= 2 and nodes.count("hz") <= 2, nodes
 
@@ -568,6 +567,51 @@ def test_staging_parses_nothing(spark, known_frames, parse_log):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert parse_log() == {}
     assert len(tracker.getJobIdsForGroup("staging-group")) <= 2
+
+
+def test_commit_is_sized_to_its_input(spark, known_frames, monkeypatch, tmp_path):
+    """A single-bucket incremental round builds no cache for the graph it
+    commits and runs its commit in stages sized to the staged frames,
+    not to the shuffle partitions: at most 17 jobs in all, and no commit
+    stage runs more tasks than the staging's two checkpoints, each read
+    at most twice per table (its rows and its relations), have
+    partitions."""
+    from kgpipe import checkpoint
+    from kgpipe.pipeline import stage_pages
+
+    *_, known, known_seeds = known_frames
+    staged = stage_pages(known, known_seeds)
+    scanned = 2 * (staged.terms.rdd.getNumPartitions() + staged.hz.rdd.getNumPartitions())
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    graphs = []
+    commit_unit = checkpoint.commit_unit
+
+    def in_commit_group(wh, g, fail):
+        graphs.append(g)
+        sc.setJobGroup("commit-group", "commit_unit")
+        try:
+            return commit_unit(wh, g, fail)
+        finally:
+            sc.setJobGroup("round-group", "run_incremental")
+
+    monkeypatch.setattr(checkpoint, "commit_unit", in_commit_group)
+    sc.setJobGroup("round-group", "run_incremental")
+    try:
+        checkpoint.run_incremental(spark, known, known_seeds, str(tmp_path / "wh"), n_buckets=1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    commit_jobs = tracker.getJobIdsForGroup("commit-group")
+    assert commit_jobs
+    assert len(tracker.getJobIdsForGroup("round-group")) + len(commit_jobs) <= 17
+    # a stage a job skipped ran no task; the status store may already
+    # have evicted it (it evicts stages that never completed first)
+    stages = [tracker.getStageInfo(s) for j in commit_jobs for s in tracker.getJobInfo(j).stageIds]
+    tasks = {s.stageId: s.numCompletedTasks for s in stages if s is not None}
+    assert max(tasks.values()) <= scanned, tasks
+    (g,) = graphs
+    assert not g.nodes.is_cached and not g.edges.is_cached
 
 
 def test_parse_partitions_follow_bytes(spark, known_frames, parse_log):
