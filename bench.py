@@ -225,9 +225,44 @@ def main() -> None:
         "kg_phase_split": kg_phases,
         "raw_timings": raw_timings,
         "term_slice_chromed": _bench_term_parse_chromed(),
+        "zidian_parse": _bench_zidian_parse(),
     }
     spark.stop()
     print(json.dumps(result))
+
+
+def _bench_zidian_parse() -> dict:
+    """Driver-side (no Spark) cost of the pipeline's pruned zidian parse
+    (``PIPELINE_HANZI_SECTIONS``) on the bench corpus's zidian pages,
+    bare and in the chrome=True mode: µs per page, best of 3, and the
+    share of pages that take the card cut (``cut_taken``; the others
+    build the DOM over the full page). Zidian pages do not grow with
+    ``scale``, so this is the same page set at every scale."""
+    from kgpipe.corpus import generate_corpus
+    from kgpipe.parse.hanzi import _cut_cards, parse_hanzi_html
+    from kgpipe.pipeline import PIPELINE_HANZI_SECTIONS as sections
+
+    out = {}
+    for shape, chrome in (("bare", False), ("chromed", True)):
+        corpus = generate_corpus(
+            n_hanzi=BENCH_CORPUS["n_hanzi"], n_words=0, n_idioms=0,
+            seed=BENCH_CORPUS["seed"], chrome=chrome,
+        )
+        pages = [(r["path"], r["content"]) for r in corpus.rows if r["path"].startswith("zidian/")]
+        best = None
+        for _ in range(3):
+            t0 = time.perf_counter()
+            for p, html in pages:
+                parse_hanzi_html(html, p, sections=sections)
+            dt = time.perf_counter() - t0
+            best = dt if best is None or dt < best else best
+        out[shape] = {
+            "us_per_page": round(best / len(pages) * 1e6, 1),
+            "cut_taken": round(sum(_cut_cards(h, sections) is not None for _, h in pages) / len(pages), 3),
+            "pages": len(pages),
+            "avg_page_bytes": sum(len(h) for _, h in pages) // len(pages),
+        }
+    return out
 
 
 def _bench_term_parse_chromed() -> dict:

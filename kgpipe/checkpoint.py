@@ -154,10 +154,11 @@ def commit_unit(wh: Warehouse, g: GraphResult, fail: int) -> tuple[int, int]:
 
     The table commits run concurrently, one thread each, under the
     caller's Spark local properties (their jobs carry the caller's job
-    group). That is safe because each commit reads only the unit's
-    graph and writes only its own snapshot table, and no commit's
-    outcome depends on another's. Every thread is joined before this
-    returns or raises, so no commit job outlives it; a failed commit
+    group) and a job description naming the table (``kgpipe commit
+    nodes``, ``edges`` or ``errors``). That is safe because each commit
+    reads only the unit's graph and writes only its own snapshot table,
+    and no commit's outcome depends on another's. Every thread is joined
+    before this returns or raises, so no commit job outlives it; a failed commit
     raises here after the others have finished (committed or failed),
     and since the caller writes its checkpoint only after this returns,
     the unit re-runs and the idempotent commits converge.
@@ -166,24 +167,32 @@ def commit_unit(wh: Warehouse, g: GraphResult, fail: int) -> tuple[int, int]:
     counted by Observations on the merges' own jobs — no count job.
     """
     nodes_obs, edges_obs = Observation(), Observation()
-    commits = [
-        lambda: wh.nodes.merge_best(
+    commits = {
+        "nodes": lambda: wh.nodes.merge_best(
             g.nodes.observe(nodes_obs, F.count(F.lit(1)).alias("n")),
             keys=["node_id"],
             priority=[F.col("crawled").desc(), F.col("url").asc_nulls_last()],
         ),
-        lambda: wh.edges.insert_ignore(
+        "edges": lambda: wh.edges.insert_ignore(
             g.edges.observe(edges_obs, F.count(F.lit(1)).alias("n")),
             keys=["src_id", "dst_id", "rel_type"], order_by=["src_name"],
         ),
-    ]
+    }
     if fail > 0:
-        commits.append(
-            lambda: wh.errors.insert_ignore(g.errors, keys=["run_id", "key"], order_by=["error"])
+        commits["errors"] = lambda: wh.errors.insert_ignore(
+            g.errors, keys=["run_id", "key"], order_by=["error"]
         )
     sc = g.triples.sparkSession.sparkContext
+
+    def described(table, commit):
+        def run():
+            sc.setLocalProperty("spark.job.description", f"kgpipe commit {table}")
+            return commit()
+
+        return with_callers_properties(sc, run)
+
     with ThreadPoolExecutor(len(commits), thread_name_prefix="kg-commit") as pool:
-        futures = [pool.submit(with_callers_properties(sc, c)) for c in commits]
+        futures = [pool.submit(described(t, c)) for t, c in commits.items()]
     # leaving the block joined every thread: raise the first commit's error
     for f in futures:
         f.result()

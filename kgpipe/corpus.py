@@ -424,8 +424,8 @@ def render_hanzi_page(h: HanziSpec) -> str:
 # realistic page chrome (round 7): the reference crawls a LIVE site whose
 # pages carry head/nav/breadcrumb/ad chrome before the content blocks and
 # a footer after them — the shape the term flat scan (parse/fastterm.py)
-# and the zidian card slicer (parse/hanzi.py:_slice_cards) must read
-# without a change of output. chrome=True wraps every page in
+# and the zidian card cut (parse/hanzi.py:_cut_cards) must read without
+# a change of output. chrome=True wraps every page in
 # deterministic chrome (seeded per path) WITHOUT touching the content
 # blocks, so every golden/oracle gate must stay green with it on.
 # ---------------------------------------------------------------------------
@@ -452,7 +452,7 @@ def _chromify(path: str, page: str) -> str:
     """Wrap a bare '<html><body>…</body></html>' page in realistic site
     chrome: head (title/meta/style/two scripts — one holding
     markup-lookalike strings and a bare '<', the raw-text shapes the
-    term flat scan and the card slicer's prefix gate must read), a
+    term flat scan and the card cut's prefix proof must read), a
     two-tier dropdown nav, a breadcrumb with character references, ad
     and sidebar blocks before the content; a multi-column footer after.
     On real dictionary sites this template weighs 3-10x the content

@@ -33,14 +33,13 @@ def normalize_title(col: Column | str) -> Column:
     return F.regexp_replace(c, " ", "")
 
 
-def link_seeds_to_pages(
-    seeds: DataFrame, parsed: DataFrame, name_col: str
-) -> tuple[DataFrame, DataFrame]:
+def link_seeds_to_pages(seeds: DataFrame, parsed: DataFrame, name_col: str) -> DataFrame:
     """J2: seed names ⋈ parsed page titles on the normalized form.
 
-    Returns (linked, missing): ``linked`` carries every seed column plus
-    the page's parse struct; ``missing`` is the seeds that found no valid
-    detail page (the reference's missing_detail_pages path).
+    Returns the linked frame: every seed column plus the page's parse
+    struct. The seeds that found no valid detail page (the reference's
+    missing_detail_pages path) are read off the staged terms instead
+    (``pipeline.stage_pages``).
 
     Join strategy is left to Catalyst + AQE deliberately: when the seed
     universe is small it broadcasts (runtime-converted by AQE from actual
@@ -52,9 +51,7 @@ def link_seeds_to_pages(
     """
     s = seeds.withColumn("_k", normalize_title("name"))
     p = parsed.withColumn("_k", normalize_title(F.col(name_col)))
-    linked = s.join(p, "_k", "inner").drop("_k")
-    missing = s.join(p.select("_k"), "_k", "left_anti").drop("_k")
-    return linked, missing
+    return s.join(p, "_k", "inner").drop("_k")
 
 
 def salted_join(

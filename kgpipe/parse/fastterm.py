@@ -6,7 +6,9 @@ objects + find-indexes for every node although the KG hot path reads
 five chengyu / four ciyu fields. This module extracts exactly those
 fields from one C-speed regex token scan over the page — **declining to
 the DOM path on any input it cannot prove simple**, the contract the
-fast scanner (htmldom) and the zidian card slicer also follow:
+fast scanner (htmldom) and the zidian card cut (parse/hanzi.py) also
+follow; the card cut proves its regions against the same strict markup
+defined here:
 
   * a strict precondition on every ``<``: it opens a lowercase tag with
     double-quoted (or valueless) attributes, a strict lowercase close
@@ -47,21 +49,28 @@ from typing import Optional
 
 from kgpipe.htmldom import _COMMENT_CLOSE, _ENDTAGFIND, _RAW_END, VOID_ELEMENTS
 
-#: one match per '<', spanning exactly what htmldom._fast_parse consumes
-#: for the construct. Groups: 1=close-tag name; 2=open-tag name, 3=attrs
-#: blob, 4=self-close slash (always participates in an open tag, so
-#: lastindex==4 marks one); 5=comment opener (span finished with
-#: _COMMENT_CLOSE); 6=declaration (not a marked section '<!['). The empty
+#: Strict markup, each construct written once as the pattern that
+#: follows its '<', spanning exactly what htmldom._fast_parse consumes
+#: for it. The term flat scan (``_TOKEN_RE``) and the zidian card cut
+#: (``hanzi._STRICT_TOKEN``) are both built from these.
+#:   * a lowercase close tag; group: name;
+#:   * a lowercase open tag whose attribute values are double-quoted and
+#:     hold no '<' or '>'; groups: name, attribute blob, self-close
+#:     slash (always participates, even when empty);
+#:   * a comment opener, whose span ends at html.parser's commentclose;
+#:   * a ``<!…>`` declaration: neither a comment nor a marked section.
+STRICT_CLOSE = r"/([a-z][a-z0-9]*+)\s*+>"
+STRICT_ATTRS = r"(?:\s++[a-z][a-z0-9-]*+(?:=\"[^\"<>]*+\")?+)*+"
+STRICT_OPEN = r"([a-z][a-z0-9]*+)(%s)\s*+(/?)>" % STRICT_ATTRS
+STRICT_COMMENT = r"!--"
+STRICT_DECL = r"!(?!\[|--)[^>]*+>"
+
+#: one match per '<'. Groups: 1=close-tag name; 2=open-tag name, 3=attrs
+#: blob, 4=self-close slash (lastindex==4 marks an open tag); 5=comment
+#: opener (span finished with _COMMENT_CLOSE); 6=declaration. The empty
 #: last alternative takes any other '<' with lastindex None: a decline.
 _TOKEN_RE = re.compile(
-    r"<(?:"
-    r"/([a-z][a-z0-9]*)\s*>"
-    r"|([a-z][a-z0-9]*)"
-    r"((?:\s+[a-z][a-z0-9-]*(?:=\"[^\"<>]*\")?)*)"
-    r"\s*(/?)>"
-    r"|(!--)"
-    r"|(!(?!\[)[^>]*>)"
-    r"|)"
+    "<(?:%s|%s|(%s)|(%s)|)" % (STRICT_CLOSE, STRICT_OPEN, STRICT_COMMENT, STRICT_DECL)
 )
 _ATTR_RE = re.compile(r"([a-z][a-z0-9-]*)(?:=\"([^\"]*)\")?")
 

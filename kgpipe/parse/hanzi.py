@@ -20,6 +20,13 @@ Section semantics reproduced:
   * 字源字形  — pure-regex, tolerant of unquoted attributes
                (/root/reference/hanzi/hanyuguoxue.py:180-251)
 
+Callers that read only the flat 基本信息 / 翻译 cards (the KG pipeline)
+get the DOM built over just those cards: ``_cut_cards`` splits the page
+at its card markers and proves the cut with one strict-markup regex
+match per region (the definitions shared with parse/fastterm.py) plus a
+tag-stack check over each kept card; anything it cannot prove is parsed
+as the full page.
+
 The ``quotes``/``examples``/``english`` fields are initialized as lists
 but overwritten with the extra's text when present — a reference quirk
 (extract_yisi.py:206-210) we normalize to always-string ('' when absent)
@@ -31,8 +38,14 @@ from __future__ import annotations
 import re
 from typing import Optional
 
-from kgpipe.htmldom import Element, parse_html
-from kgpipe.parse.slicing import block_self_contained, raw_prefix_terminated
+from kgpipe.htmldom import _COMMENT_CLOSE, _RAW_END, VOID_ELEMENTS, Element, parse_html
+from kgpipe.parse.fastterm import (
+    STRICT_ATTRS,
+    STRICT_CLOSE,
+    STRICT_COMMENT,
+    STRICT_DECL,
+    STRICT_OPEN,
+)
 
 CODEPOINT_RE = re.compile(r"zi-(\d+)")
 
@@ -572,65 +585,110 @@ _SECTION_CARD_ID = {
     "liangan_info": "两岸词典",
 }
 
-#: the hot-path pruned section sets eligible for card slicing: flat
-#: cards whose subtrees provably contain no nested data-id markers (the
-#: 意思-family cards can nest sub-blocks, so they always take the full
-#: parse).
-_SLICE_SAFE = {"basic_info", "fanyi_info", "evolution_data"}
+#: the hot-path section sets eligible for the card cut: flat cards whose
+#: subtrees hold no nested data-id markers (the 意思-family cards can
+#: nest sub-blocks, so they always take the full parse).
+_CUT_SAFE = {"basic_info", "fanyi_info", "evolution_data"}
 
-_CARD_MARK = re.compile(r'(?=<div\b[^>]*?\bdata-id=")')
-_CARD_ID = re.compile(r'<div\b[^>]*?\bdata-id="([^"]+)"')
+#: a card marker: a div start tag carrying a data-id attribute (group 1)
+_CARD_MARK = re.compile(r'<div\b(?=[^>]*?\sdata-id="([^"]*)")')
+
+#: one strict-markup construct (fastterm's definitions, groups 1=close
+#: name, 2=open name, 4=self-close slash) or a whole script/style
+#: element: its raw text runs to the first htmldom._RAW_END match, which
+#: must be the strict close
+_STRICT_TOKEN = "<(?>%s)" % "|".join(
+    [
+        STRICT_CLOSE,
+        "(?!(?:script|style)[\\s/>])" + STRICT_OPEN,
+        "%s(?s:.*?)(?:%s)" % (STRICT_COMMENT, _COMMENT_CLOSE.pattern),
+        STRICT_DECL,
+    ]
+    + [
+        "%s%s\\s*+>(?:[^<]++|(?!(?i:%s))<)*+</%s\\s*+>"
+        % (t, STRICT_ATTRS, _RAW_END[t].pattern, t)
+        for t in ("script", "style")
+    ]
+)
+_STRICT_TOKEN_RE = re.compile(_STRICT_TOKEN)
+#: a region of strict markup; its groups are made non-capturing, since
+#: re raises SystemError on a capturing group that a possessive repeat
+#: sets in one pass and not in the next (CPython 3.11, on '<p><!>')
+_STRICT_REGION = re.compile("(?>[^<]++|%s)*+" % re.sub(r"\((?!\?)", "(?:", _STRICT_TOKEN))
 
 
-def _slice_cards(html: str, sections: tuple) -> Optional[str]:
-    """DOM-input pruning for the pipeline hot path: cut the page down to
-    just the wanted sections' card blocks BEFORE DOM construction — the
-    full-page DOM parse is ~85% of the pruned parse cost (BENCH.md
-    round-5 profile: the zidian pandas-UDF stage is the pipeline's
-    second-biggest cost center), and the hot path reads 2 of 7 cards.
+def _drains(card: str) -> bool:
+    """Tag-stack check over a kept card's own tokens: its open elements
+    all close by its end, and no close reaches past them while one is
+    open (in the full page such a close may bind to an element of the
+    prefix or of a dropped card and close the kept ones with it). A
+    close on an empty stack is allowed: it can only pop elements outside
+    the kept cards."""
+    stack: list = []
+    for m in _STRICT_TOKEN_RE.finditer(card):
+        close, tag, slash = m.group(1, 2, 4)
+        if tag is not None:
+            if not slash and tag not in VOID_ELEMENTS:
+                stack.append(tag)
+        elif close is not None and stack:
+            if close not in stack:
+                return False
+            del stack[len(stack) - 1 - stack[::-1].index(close) :]
+    return not stack
 
-    Returns None (→ caller falls back to the full parse, output
-    unchanged) unless the page is positively sliceable: every wanted
-    section is slice-safe, every wanted card's marker is found, the
-    page prefix before the first marker ends in data mode (no
-    unterminated script/style/comment the marker could sit inside), AND
-    every marker block is a detachable forest under the tree builders'
-    actual close semantics (``block_self_contained``: every construct
-    span terminates inside the block, every close binds inside it or to
-    the always-dropped prefix, open elements drain by block end). A
-    card block runs to the next data-id marker, so slicing assumes
-    sibling-card layout; the per-block simulation is what proves it per
-    page — a card nesting another card, a div scope crossing a marker
-    boundary, or a non-div close reaching across blocks (the '<p>'
-    dropped / '</p>' kept divergence hypothesis found on the term
-    slicer) all fail it. Guarded end-to-end by
-    test_pruned_slice_equals_full_parse and the never-diverges fuzz."""
-    if not set(sections) <= _SLICE_SAFE:
+
+def _cut_cards(html: str, sections: tuple) -> Optional[str]:
+    """The page cut down to the wanted sections' cards, for the DOM to
+    be built over them alone; None (the caller parses the full page,
+    output unchanged) unless the cut provably reads the same cards.
+
+    The page splits at its card markers into a prefix and cards, each
+    card running to the next marker. Each wanted section reads the
+    first card with its id in document order, so only the regions up to
+    and including the last of those first cards are proven:
+      * each fullmatches ``_STRICT_REGION``: every construct ends inside
+        its own region, so each marker is real markup and the regions
+        tokenize alike in the page and in the cut;
+      * the prefix holds no ``data-id`` and each card exactly one, its
+        own marker, whose id holds no ``&`` (a character reference or
+        a repeated attribute would give the DOM another id);
+      * each kept card passes ``_drains``, so its subtree is the same in
+        both parses.
+    The regions after it get no proof: they follow every kept card,
+    which is closed by then, so they cannot change what the extractors
+    read (and the real pages' 字源字形 tail uses unquoted attributes)."""
+    if not set(sections) <= _CUT_SAFE:
         return None
     wanted = {_SECTION_CARD_ID[s] for s in sections if s in _SECTION_CARD_ID}
     if not wanted:
         return None
-    parts = _CARD_MARK.split(html)
-    if len(parts) <= 1:
+    marks = list(_CARD_MARK.finditer(html))
+    first: dict = {}
+    for last, m in enumerate(marks):
+        if m.group(1) in wanted:
+            first.setdefault(m.group(1), last)
+            if len(first) == len(wanted):
+                break
+    else:
+        return None  # a wanted card is missing: the DOM decides
+    starts = [m.start() for m in marks[: last + 2]] + [len(html)]
+    prefix = html[: starts[0]]
+    if "data-id" in prefix or _STRICT_REGION.fullmatch(prefix) is None:
         return None
-    if not raw_prefix_terminated(parts[0]):
-        return None  # first marker may sit inside raw text / a comment
-    kept, found = [], set()
-    for part in parts[1:]:
-        m = _CARD_ID.match(part)
-        keep = m is not None and m.group(1) in wanted
-        # kept blocks must also drain their element stack (a kept
-        # residue's subtree would differ between the two parses);
-        # dropped blocks may leave residues — see slicing._scan_region
-        if not block_self_contained(part, require_drain=keep):
-            return None  # scope crosses a marker boundary → full parse
-        if m is None:
-            continue
-        found.add(m.group(1))
-        if keep:
-            kept.append(part)
-    if not wanted <= found:
-        return None  # a wanted card is missing → conservative full parse
+    kept_at = set(first.values())
+    kept = []
+    for i in range(last + 1):
+        card = html[starts[i] : starts[i + 1]]
+        if (
+            "&" in marks[i].group(1)
+            or card.count("data-id") != 1
+            or _STRICT_REGION.fullmatch(card) is None
+        ):
+            return None
+        if i in kept_at:
+            if not _drains(card):
+                return None
+            kept.append(card)
     return "".join(kept)
 
 
@@ -640,13 +698,14 @@ def parse_hanzi_html(
     """Parse a zidian page; ``sections`` is the parser-level projection
     pushdown — callers that consume only a subset of the 7 sections (the
     KG pipeline needs basic_info + fanyi_info) skip the extraction AND
-    the serialization of the rest, and (for slice-safe subsets) the DOM
-    parse itself runs over only the wanted cards (``_slice_cards``).
-    Skipped sections are absent from the result dict (the UDF adapter
-    emits them as NULL structs)."""
+    the serialization of the rest. For a cut-safe subset the DOM is
+    built over only the wanted cards when ``_cut_cards`` proves that
+    reads the same cards, else over the full page. Skipped sections are
+    absent from the result dict (the UDF adapter emits them as NULL
+    structs)."""
     try:
-        sliced = _slice_cards(html, sections)
-        doc = parse_html(html if sliced is None else sliced)
+        cut = _cut_cards(html, sections)
+        doc = parse_html(html if cut is None else cut)
         out = {"url": url, "unicode_decimal": codepoint_from_path(url or "")}
         for name in sections:
             out[name] = _SECTION_FNS[name](doc, html)

@@ -281,7 +281,7 @@ def stage_pages(
 
     def linked(entity_type: str, parsed: DataFrame, title: str) -> DataFrame:
         type_seeds = seeds.where(F.col("entity_type") == entity_type).select("name")
-        return L.link_seeds_to_pages(type_seeds, parsed, title)[0]
+        return L.link_seeds_to_pages(type_seeds, parsed, title)
 
     terms = term_frame(
         linked("Idiom", chengyu_parsed, "parsed.data.chengyu"), "Idiom", "chengyu"

@@ -147,6 +147,47 @@ def test_failed_concurrent_commit_orphans_nothing(spark, frames, monkeypatch, tm
 
 
 @pytest.mark.slow
+def test_commit_jobs_are_described(spark, frames, monkeypatch, tmp_path):
+    """Each table commit of a unit runs under its own job description,
+    on top of the caller's properties, so an event log tells the nodes
+    merge's jobs from the edges and errors inserts'."""
+    cdf, sdf = frames
+    bad_path = cdf.where(F.col("path").startswith("zidian/")).select("path").first().path
+    corrupt = cdf.withColumn(
+        "content",
+        F.when(F.col("path") == bad_path, F.lit("<div>truncated")).otherwise(
+            F.col("content")
+        ),
+    )
+    sc = spark.sparkContext
+    seen = []
+
+    def recording(method):
+        def run(self, *args, **kwargs):
+            seen.append(
+                (self.name, sc.getLocalProperty("spark.job.description"),
+                 sc.getLocalProperty("spark.jobGroup.id"))
+            )
+            return method(self, *args, **kwargs)
+
+        return run
+
+    for name in ("merge_best", "insert_ignore"):
+        monkeypatch.setattr(SnapshotTable, name, recording(getattr(SnapshotTable, name)))
+    sc.setJobGroup("described-group", "a described run")
+    try:
+        run_incremental(spark, corrupt, sdf, str(tmp_path / "wh"), n_buckets=1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sorted(seen) == [
+        ("edges", "kgpipe commit edges", "described-group"),
+        ("errors", "kgpipe commit errors", "described-group"),
+        ("nodes", "kgpipe commit nodes", "described-group"),
+    ]
+
+
+@pytest.mark.slow
 def test_rerun_is_noop(spark, frames, tmp_path):
     cdf, sdf = frames
     root = str(tmp_path / "wh2")

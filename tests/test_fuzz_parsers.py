@@ -105,8 +105,8 @@ def test_find_all_consistent_with_find(html, tag):
 
 
 # card-soup generator: random card blocks (wanted and unwanted ids, some
-# nested/truncated markup) — the slicer must either slice with IDENTICAL
-# pruned output or fall back to the full parse, never diverge
+# nested/truncated markup) — the pruned parse must equal the full-page
+# DOM whether or not the card cut is taken
 _CARD_BITS = st.sampled_from(
     [
         '<div class="card" data-id="基本信息"><div class="zi-title"><h2>王</h2></div></div>',
@@ -119,48 +119,56 @@ _CARD_BITS = st.sampled_from(
         "</div>",
         '<div data-id="翻译">alt-form</div>',
         # non-div scopes that can cross block boundaries — the close-
-        # binding divergence channel the round-6 gate simulation guards
+        # binding divergence channel the kept-card stack check guards
         "<p>",
         "</p>",
         '<span class="x">',
         "</span>",
         '<div class="card" data-id="基本信息"><h2></p>王</div>',
+        # ids the DOM reads differently from the marker's raw text: a
+        # character reference, and a repeated attribute (last one wins)
+        '<div class="card" data-id="&#22522;&#26412;&#20449;&#24687;">'
+        '<div class="zi-title"><h2>甲</h2></div></div>',
+        '<div class="card" data-id="概述" data-id="基本信息">'
+        '<div class="zi-title"><h2>甲</h2></div></div>',
     ]
 )
 _CARD_SOUP = st.lists(_CARD_BITS, max_size=12).map("".join)
+_HOT_SECTIONS = ("basic_info", "fanyi_info")
+
+
+def _cut_equals_full(html):
+    """Assert the pruned parse equals the pruned parse forced onto the
+    full-page DOM; return whether the card cut was taken."""
+    import kgpipe.parse.hanzi as H
+
+    taken = H._cut_cards(html, _HOT_SECTIONS) is not None
+    pruned = parse_hanzi_html(html, "p", sections=_HOT_SECTIONS)
+    orig = H._cut_cards
+    H._cut_cards = lambda *a, **k: None  # force the full-page DOM
+    try:
+        full = parse_hanzi_html(html, "p", sections=_HOT_SECTIONS)
+    finally:
+        H._cut_cards = orig
+    assert pruned == full
+    return taken
 
 
 @settings(max_examples=200, deadline=None)
 @given(_CARD_SOUP)
 def test_slice_cards_never_diverges(html):
-    """_slice_cards is an OPTIMIZATION: whenever it slices (non-None),
-    the pruned parse over the slice must equal the pruned parse over the
-    full page — for arbitrary card soups including truncated/nested
-    markup."""
-    from kgpipe.parse.hanzi import _slice_cards
-
-    sections = ("basic_info", "fanyi_info")
-    sliced = _slice_cards(html, sections)
-    via_operator = parse_hanzi_html(html, "p", sections=sections)
-    if sliced is None:
-        return  # fell back — trivially identical
-    import kgpipe.parse.hanzi as H
-
-    orig = H._slice_cards
-    H._slice_cards = lambda *a, **k: None  # force the full-parse path
-    try:
-        full = parse_hanzi_html(html, "p", sections=sections)
-    finally:
-        H._slice_cards = orig
-    assert via_operator == full
+    """The card cut is an optimization: for arbitrary card soups,
+    including truncated and nested markup, the pruned parse equals the
+    full-page DOM's."""
+    _cut_equals_full(html)
 
 
 def test_slice_cards_nested_card_regression():
     """Hypothesis counterexample, pinned: a 基本信息 card NESTING another
     card used to lose its close tags when the nested block was dropped,
-    re-rooting a later card inside it. The div-balance gate must refuse
-    to slice this page."""
-    from kgpipe.parse.hanzi import _slice_cards, parse_hanzi_html
+    re-rooting a later card inside it. The cut must decline this page:
+    the kept card does not drain before the next marker."""
+    from kgpipe.parse.hanzi import _cut_cards, parse_hanzi_html
 
     html = (
         '<div class="card pb-3" data-id="翻译"><ol class="zi-fanyi">'
@@ -170,19 +178,18 @@ def test_slice_cards_nested_card_regression():
         '<div class="card" data-id="基本信息"><div class="zi-title">'
         "<h2>王</h2></div></div>"
     )
-    assert _slice_cards(html, ("basic_info", "fanyi_info")) is None
-    out = parse_hanzi_html(html, "p", sections=("basic_info", "fanyi_info"))
+    assert _cut_cards(html, _HOT_SECTIONS) is None
+    out = parse_hanzi_html(html, "p", sections=_HOT_SECTIONS)
     # full-parse semantics: the FIRST 基本信息 card wins and has no title
     assert out["basic_info"] == {"error": "zi-title not found"}
 
 
 def test_slice_cards_cross_block_close_regression():
-    """Same channel on the card slicer (round 6): the dropped page
-    prefix leaves '<p>' open and the KEPT 基本信息 card carries the
-    stray '</p>' — div counts balance, so the old div-only gate sliced
-    and the h2 text diverged ('' full vs '王' sliced). The per-block
-    simulation must decline."""
-    from kgpipe.parse.hanzi import _slice_cards
+    """The dropped page prefix leaves '<p>' open and the KEPT 基本信息
+    card carries the stray '</p>' while its own elements are open: in
+    the full page that close pops the h2 before 王 arrives ('' full vs
+    '王' cut). The kept-card stack check must decline."""
+    from kgpipe.parse.hanzi import _cut_cards
 
     html = (
         "<p>chrome"
@@ -191,19 +198,18 @@ def test_slice_cards_cross_block_close_regression():
         '<div class="card pb-3" data-id="翻译"><ol class="zi-fanyi">'
         "<li>英语: king</li></ol></div>"
     )
-    sections = ("basic_info", "fanyi_info")
-    assert _slice_cards(html, sections) is None
-    out = parse_hanzi_html(html, "p", sections=sections)
+    assert _cut_cards(html, _HOT_SECTIONS) is None
+    out = parse_hanzi_html(html, "p", sections=_HOT_SECTIONS)
     # full-parse semantics: '</p>' pops the h2 before 王 arrives
     assert out["basic_info"].get("data", {}).get("character") != "王"
 
 
 def test_slice_cards_dropped_residue_still_slices():
-    """The drain requirement applies to KEPT blocks only: a DROPPED
-    card leaving an element open (residue) merely deepens where later
-    blocks attach — invisible to kept-node containment — so the page
-    must still slice, and the sliced parse must equal the full parse."""
-    from kgpipe.parse.hanzi import _slice_cards
+    """The drain requirement applies to KEPT cards only: a DROPPED card
+    leaving an element open (residue) merely deepens where later cards
+    attach — invisible to the kept subtrees — so the page must still be
+    cut, and the cut parse must equal the full parse."""
+    from kgpipe.parse.hanzi import _cut_cards
 
     html = (
         '<div class="card" data-id="概述"><p>summary</div>'  # p residue, dropped
@@ -212,19 +218,86 @@ def test_slice_cards_dropped_residue_still_slices():
         '<div class="card pb-3" data-id="翻译"><ol class="zi-fanyi">'
         "<li>英语: king</li></ol></div>"
     )
-    sections = ("basic_info", "fanyi_info")
-    assert _slice_cards(html, sections) is not None
-    import kgpipe.parse.hanzi as H
+    assert _cut_cards(html, _HOT_SECTIONS) is not None
+    assert _cut_equals_full(html)
+    out = parse_hanzi_html(html, "p", sections=_HOT_SECTIONS)
+    assert out["basic_info"]["data"]["character"] == "王"
 
-    via_operator = parse_hanzi_html(html, "p", sections=sections)
-    orig = H._slice_cards
-    H._slice_cards = lambda *a, **k: None
-    try:
-        full = parse_hanzi_html(html, "p", sections=sections)
-    finally:
-        H._slice_cards = orig
-    assert via_operator == full
-    assert via_operator["basic_info"]["data"]["character"] == "王"
+
+def test_card_cut_mutation_fuzz_never_diverges():
+    """Random edits of real-shaped zidian pages, bare and chromed: the
+    pruned parse equals the full-page DOM's, and the edits that keep
+    the page strict still take the cut."""
+    import random
+
+    from kgpipe.corpus import generate_corpus
+
+    pages = [
+        r["content"]
+        for chrome in (False, True)
+        for r in generate_corpus(n_hanzi=8, n_words=0, n_idioms=0, seed=42, chrome=chrome).rows
+        if r["path"].startswith("zidian/")
+    ]
+    muts = [
+        "<p>", "</p>", "<div>", "</div>", "<span>", "</span>", "</br>", "<br>",
+        "<DIV>", "<a href='x'>", "< 3", "&amp;", "<!-- c -->", "<!--", "-->",
+        "<!x>", "<![CDATA[x]]>", "<?pi?>", "<script>", "</script>",
+        "<script>a<b</script>", "<script>x</scriptx>", "<style>", '"', "=",
+        'data-id', ' data-id="基本信息"', '<div class="card" data-id="基本信息">',
+        '<div data-id="翻译">', '<div data-id="&#32763;&#35793;">',
+        '<div foo-data-id="基本信息">', '<DIV data-id="基本信息">',
+        '<div class="zi-title"><h2>甲</h2></div>', "<h2>", "</h2>",
+        '<ol class="zi-fanyi"><li>英语: x</li></ol>', "<li>", "</li>",
+        '<label class="badge">法语</label>',
+    ]
+    rng = random.Random(5)
+    taken = 0
+    for _ in range(600):
+        html = rng.choice(pages)
+        for _k in range(rng.randint(1, 3)):
+            i = rng.randrange(len(html) + 1)
+            html = html[:i] + rng.choice(muts) + html[i:]
+        taken += _cut_equals_full(html)
+    assert taken > 0
+
+
+_FANYI_CARD = (
+    '<div class="card pb-3" data-id="翻译"><ol class="zi-fanyi">'
+    "<li>英语: king</li></ol></div>"
+)
+
+
+def _assert_pruned_reads_full_dom(html):
+    # the unpruned parse never cuts (its sections are not all cut-safe)
+    pruned = parse_hanzi_html(html, "zidian/zi-1", sections=_HOT_SECTIONS)
+    full = parse_hanzi_html(html, "zidian/zi-1")
+    assert full["basic_info"]["data"]["character"] == "甲"
+    for k in ("url", "unicode_decimal", "basic_info", "fanyi_info"):
+        assert pruned[k] == full[k], k
+
+
+def test_cut_cards_encoded_card_id_regression():
+    """The DOM resolves character references in attribute values, so a
+    first card whose data-id is '基本信息' spelled as references IS the
+    基本信息 card; the cut must not skip it for the later literal one."""
+    _assert_pruned_reads_full_dom(
+        '<div class="card" data-id="&#22522;&#26412;&#20449;&#24687;">'
+        '<div class="zi-title"><h2>甲</h2></div></div>'
+        '<div class="card" data-id="基本信息"><div class="zi-title"><h2>乙</h2></div></div>'
+        + _FANYI_CARD
+    )
+
+
+def test_cut_cards_repeated_card_id_regression():
+    """A repeated attribute's last value wins in the DOM, so a first card
+    marked data-id="概述" data-id="基本信息" IS the 基本信息 card; the cut
+    must not read it as 概述 and skip it for the later one."""
+    _assert_pruned_reads_full_dom(
+        '<div class="card" data-id="概述" data-id="基本信息">'
+        '<div class="zi-title"><h2>甲</h2></div></div>'
+        '<div class="card" data-id="基本信息"><div class="zi-title"><h2>乙</h2></div></div>'
+        + _FANYI_CARD
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -416,57 +489,9 @@ def test_term_interior_slice_never_diverges_garbage(text):
     _fast_equals_dom(text)
 
 
-_SCAN_BITS = st.sampled_from(
-    [
-        "<div>", "</div>", "<script>", "</script>", "</scriptX>", "text",
-        "<", "<!--", "-->", "<!-- c -->", "<!doctype html>", "<?php x ?>",
-        "<![CDATA[x]]>", '<a href="x>y">', "<b c='>'>", "<img/>",
-        "<script src=foo/>", "a<b", "</>", "</ p>", "</p junk>",
-        "<style>.x{}</style>", '<script>var a="</scriptX>";</script>',
-        "<p class=x>", "<-- weird", "<!>", "<!-x>", "-- >", "<span>",
-        "</span>", "</b>", "<br>", "<script/>", "2<3", "</STYLE>",
-        "<STYLE>", "&amp;", "<ul><li>a</li>", "</ul>",
-        "<SCRIPT>x</script>", "<script>y</SCRIPT>",
-    ]
-)
-_SCAN_SOUP = st.lists(_SCAN_BITS, max_size=12).map("".join)
-
-
 @settings(max_examples=300, deadline=None)
-@given(
-    _SCAN_SOUP,
-    st.sampled_from([{}, {"prefix": True}]),
-)
-def test_scan_region_fast_agrees_with_exact(soup, mode):
-    """Round-7 gate-economics fast path: whenever the one-C-match-per-
-    construct scanner decides a region (returns non-None), its
-    RegionScan must be BIT-IDENTICAL to the exact simulation's in both
-    modes (interior block, dropped prefix) — the dispatch may only
-    change speed, never a verdict."""
-    from kgpipe.parse.slicing import _scan_region, _scan_region_fast
-
-    fast = _scan_region_fast(soup, **mode)
-    if fast is not None:
-        assert fast == _scan_region(soup, **mode)
-
-
-def test_scan_region_fast_decides_the_chrome_shape():
-    """The fast path must actually cover the realistic chrome the
-    corpus's chrome=True mode emits (prefix AND interior regions) —
-    otherwise the gate economics silently regress to the exact scan."""
-    from kgpipe.corpus import generate_corpus
-    from kgpipe.parse.slicing import _scan_region, _scan_region_fast
-
-    corpus = generate_corpus(n_hanzi=4, n_words=8, n_idioms=6, seed=42, chrome=True)
-    undecided = 0
-    for row in corpus.rows:
-        html = row["content"]
-        i = html.find("ci-title")
-        if i < 0:
-            continue
-        prefix = html[: html.rfind("<", 0, i)]
-        fast = _scan_region_fast(prefix, prefix=True)
-        assert fast is None or fast == _scan_region(prefix, prefix=True)
-        if fast is None:
-            undecided += 1
-    assert undecided == 0
+@given(_CHROME, _CARD_SOUP)
+def test_card_cut_never_diverges_under_chrome(chrome, soup):
+    """Any chrome + card soup: the pruned parse equals the full-page
+    DOM's, cut or not."""
+    _cut_equals_full(chrome + soup)

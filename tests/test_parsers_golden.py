@@ -253,30 +253,35 @@ def test_codepoint_from_path():
 
 
 def test_pruned_slice_equals_full_parse(small_corpus):
-    """Round-5 hot-path optimization guard: the card-slicing DOM-input
-    pruning (_slice_cards) must be output-invariant — the pruned parse
-    over the sliced page equals the full parse restricted to the pruned
-    sections, for every synthetic zidian page."""
-    pages = [
-        (r["path"], r["content"])
-        for r in small_corpus.rows
-        if r["path"].startswith("zidian/")
-    ]
-    assert pages
-    for p, html in pages:
-        assert H._slice_cards(html, ("basic_info", "fanyi_info")) is not None
-        pruned = H.parse_hanzi_html(html, p, sections=("basic_info", "fanyi_info"))
-        full = H.parse_hanzi_html(html, p)
-        for k in ("url", "unicode_decimal", "basic_info", "fanyi_info"):
-            assert pruned.get(k) == full.get(k), (p, k)
+    """The card cut (_cut_cards) must be output-invariant — the pruned
+    parse over the cut page equals the full parse restricted to the
+    pruned sections — and taken on every synthetic zidian page, bare and
+    chromed: a silent decline only slows the parse, which no equality
+    check would show."""
+    from kgpipe.corpus import generate_corpus
+
+    chromed = generate_corpus(n_hanzi=20, n_words=0, n_idioms=0, seed=42, chrome=True)
+    for corpus in (small_corpus, chromed):
+        pages = [
+            (r["path"], r["content"])
+            for r in corpus.rows
+            if r["path"].startswith("zidian/")
+        ]
+        assert pages
+        for p, html in pages:
+            assert H._cut_cards(html, ("basic_info", "fanyi_info")) is not None, p
+            pruned = H.parse_hanzi_html(html, p, sections=("basic_info", "fanyi_info"))
+            full = H.parse_hanzi_html(html, p)
+            for k in ("url", "unicode_decimal", "basic_info", "fanyi_info"):
+                assert pruned.get(k) == full.get(k), (p, k)
 
 
 @needs_reference
 def test_pruned_slice_on_reference_card_markup():
-    """The slicer must handle REAL hanyuguoxue card markup (class lists
-    with extra tokens: <div class="card pb-3" data-id=...>): wrap the
-    reference's embedded 王 basic_info card into a multi-card page and
-    check the sliced pruned parse equals the full parse."""
+    """The card cut must handle REAL hanyuguoxue card markup (class
+    lists with extra tokens: <div class="card pb-3" data-id=...>): wrap
+    the reference's embedded 王 basic_info card into a multi-card page
+    and check the cut pruned parse equals the full parse."""
     card = _ref_fixture("hanzi/extract_basic_info.py")
     page = (
         '<html><body><div class="page-head">chrome</div>'
@@ -286,12 +291,12 @@ def test_pruned_slice_on_reference_card_markup():
         + '<ol class="zi-fanyi"><li>英语: king</li></ol></div></div>'
         + "</body></html>"
     )
-    sliced = H._slice_cards(page, ("basic_info", "fanyi_info"))
-    assert sliced is not None and "意思" not in sliced.split('data-id="')[0]
+    cut = H._cut_cards(page, ("basic_info", "fanyi_info"))
+    assert cut is not None and 'data-id="意思"' not in cut
     pruned = H.parse_hanzi_html(page, "zidian/zi-29579", sections=("basic_info", "fanyi_info"))
     full = H.parse_hanzi_html(page, "zidian/zi-29579")
     assert pruned["basic_info"] == full["basic_info"]
     assert pruned["fanyi_info"] == full["fanyi_info"]
     assert pruned["basic_info"]["data"]["character"] == "王"
-    # a page missing a wanted card falls back (None) — never mis-slices
-    assert H._slice_cards("<html><p>no cards</p></html>", ("basic_info",)) is None
+    # a page missing a wanted card falls back (None) — never mis-cuts
+    assert H._cut_cards("<html><p>no cards</p></html>", ("basic_info",)) is None

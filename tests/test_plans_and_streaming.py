@@ -48,7 +48,7 @@ def test_linkage_join_is_broadcast(spark, small_corpus):
     parsed = cdf.where(F.col("path").startswith("chengyu/")).withColumn(
         "parsed", parse_chengyu_udf("content", "path")
     )
-    linked, _ = link_seeds_to_pages(
+    linked = link_seeds_to_pages(
         sdf.where(F.col("entity_type") == "Idiom").select("name"),
         parsed,
         "parsed.data.chengyu",

@@ -6,7 +6,8 @@ The directory is the one a traced perfbench run writes
 (``perfbench/_work/eventlog/<workload>``); the spans it writes next to
 it (``<dir>.spans.jsonl``) are read when present. For every job the map
 prints its start offset from the first span or job, its wall time, job
-group and call site, and under it each stage the job ran: task count,
+group and call site (and its job description, when one is set, in
+brackets), and under it each stage the job ran: task count,
 summed task run time and how many of its tasks run Python (a UDF or an
 Arrow/pandas evaluation that the stage computes rather than reads from
 a cache). Stages a job skipped (their output was already there) are not
@@ -56,7 +57,10 @@ class StageLog(EventLog):
     def _fold(self, ev: dict) -> None:
         super()._fold(ev)
         kind = ev["Event"]
-        if kind == "SparkListenerStageSubmitted":
+        if kind == "SparkListenerJobStart":
+            props = ev.get("Properties") or {}
+            self.jobs[ev["Job ID"]]["description"] = props.get("spark.job.description")
+        elif kind == "SparkListenerStageSubmitted":
             info = ev["Stage Info"]
             for r in info.get("RDD Info", []):
                 scope = json.loads(r["Scope"]) if r.get("Scope") else {"id": None, "name": r.get("Name", "")}
@@ -123,13 +127,14 @@ def main(log_dir: str) -> None:
         sys.exit(f"no jobs in the event log under {log_dir}")
     t0 = min([j["start"] for j in jobs] + [s["start"] for s in spans])
 
-    print(f"{'job':>5} {'start_s':>8} {'wall_s':>7}  group / call site")
+    print(f"{'job':>5} {'start_s':>8} {'wall_s':>7}  group / call site [description]")
     for j in jobs:
         wall = j["end"] - j["start"] if j["end"] is not None else float("nan")
         ran = _ran(ev, j)
         # pyspark sets no call site on some jobs; the last stage's name is Spark's own
         site = j["call_site"] or (ev.stages[ran[-1]]["name"] if ran else "")
-        print(f"{j['id']:>5} {j['start'] - t0:>8.2f} {wall:>7.2f}  {j['group'] or '-'} / {site}")
+        desc = f" [{j['description']}]" if j["description"] else ""
+        print(f"{j['id']:>5} {j['start'] - t0:>8.2f} {wall:>7.2f}  {j['group'] or '-'} / {site}{desc}")
         for sid in ran:
             st = ev.stages[sid]
             py = f"  python tasks {st['python_tasks']}" if st["python_tasks"] else ""
